@@ -199,21 +199,25 @@ def partial_cols(aggs: list[Agg]) -> list[str]:
     ]
 
 
-def merge_exprs(aggs: list[Agg]) -> list[Column]:
+def merge_exprs(aggs: list[Agg], where: Column | None = None) -> list[Column]:
     """Re-merge partial rows for the same (key, bucket) — partials are
-    associative, so appended generations combine by re-aggregation."""
+    associative, so appended generations combine by re-aggregation.
+    With ``where``, only rows where it holds are merged."""
+    def c(name: str) -> Column:
+        return F.col(name) if where is None else F.when(where, F.col(name))
+
     out = []
     for i, a in enumerate(aggs):
         b = _base(a)
         if b in ("sum", "avg"):
-            out.append(F.sum(f"__s{i}__").alias(f"__s{i}__"))
-            out.append(F.sum(f"__c{i}__").alias(f"__c{i}__"))
+            out.append(F.sum(c(f"__s{i}__")).alias(f"__s{i}__"))
+            out.append(F.sum(c(f"__c{i}__")).alias(f"__c{i}__"))
         elif b == "count":
-            out.append(F.sum(f"__c{i}__").alias(f"__c{i}__"))
+            out.append(F.sum(c(f"__c{i}__")).alias(f"__c{i}__"))
         elif b == "min":
-            out.append(F.min(f"__m{i}__").alias(f"__m{i}__"))
+            out.append(F.min(c(f"__m{i}__")).alias(f"__m{i}__"))
         else:
-            out.append(F.max(f"__m{i}__").alias(f"__m{i}__"))
+            out.append(F.max(c(f"__m{i}__")).alias(f"__m{i}__"))
     return out
 
 

@@ -14,6 +14,12 @@ appending *generations*:
 
 - ``create(...)`` writes the state manifest (spec, aggregates,
   bucket size) under ``state_dir``.
+- ``ingest(df_new)`` writes the partials of ``df_new``'s rows as one
+  generation and nothing else — no ordering check and no read of the
+  stored state, because bucket partials merge by commutative
+  re-aggregation: a row may land in any bucket, old or new, at any
+  timestamp. This is the write path of the long-window DEPLOY, which
+  hands it each INSERT's rows.
 - ``append(df_new)`` computes partials of the appended rows ONLY
   (O(new) work), writes them as ``gen=N`` parquet, and returns the
   long-window feature rows for the appended data — carry state comes
@@ -24,7 +30,11 @@ appending *generations*:
   contract is ordered appends, enforced loudly).
 - generations merge by re-aggregation at read time (partials are
   associative: sum-of-sums, min-of-mins…); ``compact()`` folds all
-  generations into one for bounded metadata.
+  generations into one for bounded metadata. Each (key, bucket) row
+  also keeps ``__pa_max_ord__``, the newest order ms it holds.
+- state is read with the schema recorded at the first write, so a read
+  starts no schema-inference job; write statistics (pairs, watermark,
+  row count) are observed on the write itself, so no read-back job.
 
 Scale shape: an append over D new rows touches O(D) raw data + the
 partials table (keys × buckets rows — KBs per TB of raw history). The
@@ -36,12 +46,17 @@ practice.
 from __future__ import annotations
 
 import json
+import logging
 import os
+import shutil
 import time
 from dataclasses import asdict
+from functools import reduce
+from operator import and_
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from openmldb_spark.operators.long_window import (
     _B,
@@ -54,12 +69,13 @@ from openmldb_spark.operators.long_window import (
     partial_exprs,
     running_cols,
 )
-from openmldb_spark.operators.window import Agg, WindowSpec
+from openmldb_spark.operators.window import Agg, WindowSpec, _result_type
 
 __all__ = ["PreAggTable", "serve_long_window", "long_window_serveable"]
 
 _META = "_preagg_meta.json"
 _WM = "__pa_max_ord__"
+_log = logging.getLogger("openmldb_spark")
 
 
 def _check_spec(spec: WindowSpec, aggs: list[Agg]) -> None:
@@ -96,6 +112,8 @@ class PreAggTable:
                             "cond_pair": tuple(a["cond_pair"]) if a["cond_pair"] else None})
                      for a in self.meta["aggs"]]
         self.bucket_ms = int(self.meta["bucket_ms"])
+        sch = self.meta.get("schema")
+        self._schema = T.StructType.fromJson(sch) if sch else None
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -139,11 +157,17 @@ class PreAggTable:
         if not dirs:
             return None
         keys = list(self.spec.partition_by)
-        raw = self.spark.read.parquet(*dirs)
+        raw = self._read(dirs)
         if len(dirs) == 1:
             return raw
         return raw.groupBy(*keys, _B).agg(*merge_exprs(self.aggs),
                                           F.max(_WM).alias(_WM))
+
+    def _read(self, dirs: list[str]) -> DataFrame:
+        reader = self.spark.read
+        if self._schema is not None:
+            reader = reader.schema(self._schema)
+        return reader.parquet(*dirs)
 
     def key_watermarks(self) -> DataFrame | None:
         """Per-key high-watermark (max ingested order ms) — derived
@@ -160,7 +184,11 @@ class PreAggTable:
         newer than their key's watermark (new keys ingest whole).
         ``df`` may be the full current table — already-ingested history
         is filtered by the per-key watermark join, so re-running after
-        new data lands appends only the new buckets."""
+        new data lands appends only the new buckets. This is the
+        late-data rule of the streaming sink (``preagg_sink``): a row
+        at or below its key's watermark — a same-timestamp or
+        out-of-order row — is dropped. Callers that know which rows
+        are new use ``ingest`` instead, which keeps them all."""
         wmk = self.key_watermarks()
         if wmk is None:
             new = df
@@ -188,11 +216,7 @@ class PreAggTable:
         Rows with NULL order keys are skipped (reference buffer rule).
         """
         spec, aggs, keys = self.spec, self.aggs, list(self.spec.partition_by)
-        work = df.filter(F.col(spec.order_by).isNotNull())
-        ord_ms = _order_ms(work, spec.order_by)
-        work = work.withColumn(_B, (ord_ms / F.lit(self.bucket_ms)).cast("long"))
-
-        wm = self.meta["watermark_ms"]
+        work, ord_ms = self._bucketed(df)
         wmk = self.key_watermarks()
         if wmk is not None:
             # PER-KEY ordered-append validation (the reference's
@@ -211,8 +235,7 @@ class PreAggTable:
                     f"(rebuild or compact from raw history for corrections)")
 
         hist = self.partials()
-        own = work.groupBy(*keys, _B).agg(
-            *partial_exprs(aggs), F.max(ord_ms).alias(_WM))
+        own = self._own_partials(work, ord_ms)
 
         # ---- features for the appended rows (before merging them in) ----
         # carry for a row in bucket b = HISTORY partials over buckets
@@ -250,24 +273,59 @@ class PreAggTable:
         feats = feats.select(*df.columns, *[a.name for a in aggs])
 
         # ---- write this generation's partials (new rows only) ----
-        gen = len(self.meta["generations"])
-        gen_dir = f"gen={gen}"
-        path = os.path.join(self.dir, gen_dir)
-        t0 = time.time()
-        own.write.mode("errorifexists").parquet(path)
-        written = self.spark.read.parquet(path)
-        stats = written.select(
-            F.count(F.lit(1)).alias("pairs"), F.max(_WM).alias("wm")).collect()[0]
-        self.meta["generations"].append({
-            "dir": gen_dir,
-            "pairs": stats["pairs"],
-            "wall_sec": round(time.time() - t0, 3),
-        })
-        if stats["wm"] is not None:
-            new_wm = int(stats["wm"])
-            self.meta["watermark_ms"] = new_wm if wm is None else max(wm, new_wm)
-        self._save_meta()
+        self._write_generation(own)
         return feats
+
+    def ingest(self, df: DataFrame) -> int:
+        """Fold the rows of ``df`` into the state as one generation and
+        return how many rows that was (rows with a NULL order key are
+        skipped, the reference buffer rule). O(rows of ``df``) work:
+        the stored state is neither read nor checked, because bucket
+        partials merge commutatively — late, same-timestamp and
+        out-of-order rows are all exact."""
+        work, ord_ms = self._bucketed(df)
+        rows = Observation()
+        work = work.observe(rows, F.count(F.lit(1)).alias("n"))
+        self._write_generation(self._own_partials(work, ord_ms))
+        return int(rows.get["n"])
+
+    def _bucketed(self, df: DataFrame):
+        """``df`` without NULL order keys, with its bucket column, and
+        the order-ms expression over it."""
+        work = df.filter(F.col(self.spec.order_by).isNotNull())
+        ord_ms = _order_ms(work, self.spec.order_by)
+        return (work.withColumn(_B, (ord_ms / F.lit(self.bucket_ms)).cast("long")),
+                ord_ms)
+
+    def _own_partials(self, work: DataFrame, ord_ms) -> DataFrame:
+        return work.groupBy(*self.spec.partition_by, _B).agg(
+            *partial_exprs(self.aggs), F.max(ord_ms).alias(_WM))
+
+    def _write(self, own: DataFrame, gen_dir: str) -> tuple[dict, int | None]:
+        """Write partials ``own`` under ``gen_dir``; return its manifest
+        entry and its max order ms, both observed during the write. The
+        first write records the state schema."""
+        stats = Observation()
+        own = own.observe(stats, F.count(F.lit(1)).alias("pairs"),
+                          F.max(_WM).alias("wm"))
+        t0 = time.time()
+        own.write.mode("errorifexists").parquet(os.path.join(self.dir, gen_dir))
+        st = stats.get
+        if self._schema is None:
+            self._schema = T.StructType(
+                [T.StructField(f.name, f.dataType, True) for f in own.schema])
+            self.meta["schema"] = self._schema.jsonValue()
+        entry = {"dir": gen_dir, "pairs": int(st["pairs"]),
+                 "wall_sec": round(time.time() - t0, 3)}
+        return entry, None if st["wm"] is None else int(st["wm"])
+
+    def _write_generation(self, own: DataFrame) -> None:
+        entry, wm = self._write(own, f"gen={len(self.meta['generations'])}")
+        self.meta["generations"].append(entry)
+        old = self.meta["watermark_ms"]
+        if wm is not None:
+            self.meta["watermark_ms"] = wm if old is None else max(old, wm)
+        self._save_meta()
 
     def _carry_small(self) -> bool:
         # partials are keys × buckets — metadata-sized vs raw history;
@@ -284,17 +342,14 @@ class PreAggTable:
         if merged is None or len(self.meta["generations"]) <= 1:
             return 0 if merged is None else self.meta["generations"][0]["pairs"]
         tmp = os.path.join(self.dir, "_compact_tmp")
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil
-
+        shutil.rmtree(tmp, ignore_errors=True)
+        entry, _ = self._write(merged, "_compact_tmp")
         for g in self._gen_dirs():
             shutil.rmtree(g)
-        final = os.path.join(self.dir, "gen=0")
-        os.rename(tmp, final)
-        n = self.spark.read.parquet(final).count()
-        self.meta["generations"] = [{"dir": "gen=0", "pairs": n, "wall_sec": 0.0}]
+        os.rename(tmp, os.path.join(self.dir, "gen=0"))
+        self.meta["generations"] = [{**entry, "dir": "gen=0"}]
         self._save_meta()
-        return n
+        return entry["pairs"]
 
 
 # ---------------------------------------------------------------------------
@@ -329,8 +384,6 @@ def long_window_serveable(spec: WindowSpec, aggs: list, history) -> bool:
             return False
         base = a.func[:-6] if a.func.endswith("_where") else a.func
         if base in ("sum", "avg"):
-            from pyspark.sql import types as T
-
             if a.col is None or a.col not in hist_cols \
                     or not isinstance(history.schema[a.col].dataType,
                                       (T.ByteType, T.ShortType, T.IntegerType,
@@ -345,29 +398,35 @@ def long_window_serveable(spec: WindowSpec, aggs: list, history) -> bool:
 def serve_long_window(requests, history, state: PreAggTable,
                       spec: WindowSpec, aggs: list,
                       req_id: str = "__req_id__"):
-    """Point-in-time long-window features for ``requests`` using the
-    materialized bucket partials in ``state`` — FULL buckets inside the
-    frame come from the (metadata-sized, broadcast) pre-agg table;
-    only the EDGE buckets are read from raw history, with a pushable
-    global time bound so a 10^12-turn table scans O(requests ×
-    bucket_width) rows instead of full history. Each request sees
-    stored rows + itself, never sibling requests (per-request
-    isolation by construction — the reference's serving contract).
+    """Point-in-time long-window features for ``requests`` from the
+    materialized bucket partials in ``state``, which must hold exactly
+    the rows of ``history``. Each request sees stored rows + itself,
+    never sibling requests (per-request isolation by construction — the
+    reference's serving contract).
+
+    Read rules, for a request at order ms ``a`` in bucket ``b``:
+
+    - every full bucket inside the frame comes from the partials;
+    - bucket ``b`` itself comes from the partials too when its stored
+      ``__pa_max_ord__`` ≤ ``a`` (every stored row of it is in frame) —
+      the usual case for a request about "now";
+    - raw ``history`` is read only for a bucket ``b`` that holds a
+      stored row newer than ``a``, and for a bounded frame's lower edge
+      bucket, under a pushable global time bound;
+    - when no request needs raw rows, the history join is not planned.
+
+    One small collected job over (requests ⋈ partials) counts the requests
+    that need raw rows; the plan then joins the partials once per
+    request for both the carry and the raw-edge flag. The decision is
+    logged on the ``openmldb_spark`` logger as ``raw edge: k of n
+    requests``.
 
     Frames: UNBOUNDED..CURRENT ROW, or bounded ROWS_RANGE [t-Δ, t].
     Returns ``requests`` with one column per aggregate appended."""
-    from functools import reduce
-    from operator import and_
-
-    from pyspark.sql import types as T
-
-    from openmldb_spark.operators.long_window import (
-        merge_exprs as _merge, partial_cols as _pcols, partial_exprs as _pexprs)
-    from openmldb_spark.operators.window import _result_type
-
     W = state.bucket_ms
     keys = list(spec.partition_by)
     bounded = spec.preceding is not None
+    edge_cols = ["__lo__", "__b0__"] if bounded else []
 
     a_ms = _order_ms(requests, spec.order_by)
     r = (requests
@@ -376,63 +435,86 @@ def serve_long_window(requests, history, state: PreAggTable,
     if bounded:
         r = r.withColumn("__lo__", F.col("__a__") - F.lit(int(spec.preceding)))
         r = r.withColumn("__b0__", (F.col("__lo__") / F.lit(W)).cast("long"))
-    r = r.select(req_id, *keys, "__a__", "__b__",
-                 *(["__lo__", "__b0__"] if bounded else []))
+    r_cols = [req_id, *keys, "__a__", "__b__", *edge_cols]
+    pcols = partial_cols(aggs)
 
-    pcols = _pcols(aggs)
+    def on_keys(x: str, y: str):
+        return reduce(and_, [F.col(f"{x}.{k}").eqNullSafe(F.col(f"{y}.{k}"))
+                         for k in keys])
 
-    # ---- carry: full buckets strictly inside the frame, from partials
     P = state.partials()
-    if P is not None:
-        cond = reduce(and_, [F.col(f"r.{k}").eqNullSafe(F.col(f"p.{k}"))
-                             for k in keys])
-        cond = cond & (F.col(f"p.{_B}") < F.col("r.__b__"))
-        if bounded:
-            cond = cond & (F.col(f"p.{_B}") > F.col("r.__b0__"))
+    out, n_raw = requests, 0
+    if P is None:  # nothing stored: the request row alone
+        _log.info("raw edge: 0 requests (no stored rows)")
+    else:
         # partials are metadata-sized relative to history, but at
         # 10^12-turn scale keys × buckets can still exceed broadcast
         # limits — broadcast only under the recorded pair count
-        Pside = F.broadcast(P.alias("p")) if state._carry_small() \
-            else P.alias("p")
-        carry = (r.alias("r")
-                 .join(Pside, cond, "left")
-                 .groupBy(f"r.{req_id}")
-                 .agg(*_merge(aggs)))
-        carry = carry.select(F.col(f"r.{req_id}").alias(req_id),
-                             *[F.col(c).alias(f"__car_{c}") for c in pcols])
-    else:
-        carry = None
+        Pside = F.broadcast(P.alias("p")) if state._carry_small() else P.alias("p")
+        pb, rb = F.col(f"p.{_B}"), F.col("r.__b__")
 
-    # ---- edge buckets from raw history, globally time-pruned
-    # (driver-side min over the SERVING batch — metadata-sized)
-    lo_col = "__b0__" if bounded else "__b__"
-    gmin = r.agg(F.min(F.col(lo_col) * F.lit(W)).alias("g")).collect()[0]["g"]
-    h_ms = _order_ms(history, spec.order_by)
-    H = history.withColumn("__hms__", h_ms) \
-               .withColumn("__hb__", (h_ms / F.lit(W)).cast("long"))
-    if gmin is not None:
-        H = H.filter(F.col("__hms__") >= gmin)
-    econd = reduce(and_, [F.col(f"r.{k}").eqNullSafe(F.col(f"h.{k}"))
-                          for k in keys])
-    in_edge = F.col(f"h.__hb__") == F.col("r.__b__")
-    if bounded:
-        in_edge = in_edge | (F.col(f"h.__hb__") == F.col("r.__b0__"))
-    econd = econd & in_edge & (F.col("h.__hms__") <= F.col("r.__a__"))
-    if bounded:
-        econd = econd & (F.col("h.__hms__") >= F.col("r.__lo__"))
-    edge = (r.alias("r").join(H.alias("h"), econd, "inner")
-            .groupBy(f"r.{req_id}")
-            .agg(*[e for e in _pexprs(aggs)]))
-    edge = edge.select(F.col(f"r.{req_id}").alias(req_id),
-                       *[F.col(c).alias(f"__edg_{c}") for c in pcols])
+        # ---- which requests need raw rows (one small collected job)
+        if bounded:  # the lower edge bucket is always read raw
+            st = r.agg(F.count(F.lit(1)).alias("n"),
+                       F.min(F.col("__b0__") * F.lit(W)).alias("g")).collect()[0]
+            n_raw = st["n"]
+        else:
+            newer = F.col(f"p.{_WM}") > F.col("r.__a__")
+            st = (r.alias("r").join(Pside, on_keys("r", "p") & (pb == rb), "left")
+                  .agg(F.count(F.lit(1)).alias("n"),
+                       F.count(F.when(newer, 1)).alias("k"),
+                       F.min(F.when(newer, rb * F.lit(W))).alias("g"))
+                  .collect()[0])
+            n_raw = st["k"]
+        gmin = st["g"]
+        _log.info("raw edge: %d of %d requests", n_raw, st["n"])
+
+        # ---- carry: partials of every bucket in frame that is read
+        # whole, and the flag of an own bucket that is read raw. The
+        # request rows ride through the aggregation (first() of one
+        # request's identical copies), so nothing joins back.
+        cond = on_keys("r", "p") & (pb <= rb)
+        whole = (pb < rb) | (F.col(f"p.{_WM}") <= F.col("r.__a__"))
+        if bounded:
+            cond = cond & (pb >= F.col("r.__b0__"))
+            whole = whole & (pb > F.col("r.__b0__"))
+        out = (r.alias("r").join(Pside, cond, "left")
+               .groupBy(F.col(f"r.{req_id}"))
+               .agg(*[F.first(f"r.{c}").alias(c) for c in r.columns if c != req_id],
+                    *[m.alias(f"__car_{c}")
+                      for m, c in zip(merge_exprs(aggs, where=whole), pcols)],
+                    F.max(F.coalesce((pb == rb) & ~whole, F.lit(False)))
+                    .alias("__raw_b__")))
+
+    # ---- raw rows of the edge buckets, globally time-pruned
+    edge = None
+    if n_raw:
+        need = out if bounded else out.filter(F.col("__raw_b__"))
+        need = need.select(*r_cols, "__raw_b__")
+        h_ms = _order_ms(history, spec.order_by)
+        H = (history.withColumn("__hms__", h_ms)
+             .withColumn("__hb__", (h_ms / F.lit(W)).cast("long"))
+             .filter(F.col("__hms__") >= gmin))
+        in_edge = (F.col("h.__hb__") == F.col("r.__b__")) & F.col("r.__raw_b__")
+        if bounded:
+            in_edge = in_edge | (F.col("h.__hb__") == F.col("r.__b0__"))
+        econd = on_keys("r", "h") & in_edge \
+            & (F.col("h.__hms__") <= F.col("r.__a__"))
+        if bounded:
+            econd = econd & (F.col("h.__hms__") >= F.col("r.__lo__"))
+        edge = (need.alias("r").join(H.alias("h"), econd, "inner")
+                .groupBy(F.col(f"r.{req_id}"))
+                .agg(*partial_exprs(aggs)))
+        edge = edge.select(F.col(req_id),
+                           *[F.col(c).alias(f"__edg_{c}") for c in pcols])
 
     # ---- fold: carry ⊕ edge ⊕ the request row itself (current row)
-    out = requests.join(edge, on=req_id, how="left")
-    if carry is not None:
-        out = out.join(carry, on=req_id, how="left")
-    else:
+    if edge is not None:
+        out = out.join(edge, on=req_id, how="left")
+    for pre in ("__car_", "__edg_"):
         for c in pcols:
-            out = out.withColumn(f"__car_{c}", F.lit(None))
+            if f"{pre}{c}" not in out.columns:
+                out = out.withColumn(f"{pre}{c}", F.lit(None))
 
     int_wrap = (T.ByteType, T.ShortType, T.IntegerType)
     for i, a in enumerate(aggs):

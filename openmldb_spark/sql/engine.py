@@ -1443,6 +1443,7 @@ class SqlEngine:
         self.tables[name.lower()] = df
         if index_ts:
             self.index_ts[name.lower()] = index_ts
+        self._lw_note_write(name.lower(), df, "register")
 
     def register_py_udf(self, name: str, fn) -> None:
         """Pre-bind a Python callable that a later SQL
@@ -1649,21 +1650,20 @@ class SqlEngine:
     # SELECT_INTO_STATEMENT.md; offline parquet/csv semantics from
     # LoadDataPlan.scala / SelectIntoPlan.scala)
 
-    def _update_table(self, name: str, df: DataFrame) -> None:
+    def _update_table(self, name: str, df: DataFrame, why: str,
+                      delta: DataFrame | None = None) -> None:
         """Replace a registered table in whichever namespace holds it
         (plain registry, flattened ``db.tbl`` token, or current db).
         Under ``execute_mode=offline`` the write targets the table's
-        offline store, leaving online data untouched."""
+        offline store, leaving online data untouched. ``why`` names the
+        write and ``delta`` holds the rows an INSERT appended, for the
+        long-window states over the table (``_lw_note_write``)."""
         n = name.lower()
-        # version counter: long-window pre-agg serving states catch up
-        # (append rows past their watermark) only when this moves
-        if not hasattr(self, "_table_versions"):
-            self._table_versions = {}
-        self._table_versions[n] = self._table_versions.get(n, 0) + 1
         if self._exec_mode() == "offline":
             self._table(n)  # validate the definition exists
             self.offline_tables[n] = df
             return
+        self._lw_note_write(n, df, why, delta)
         if n in self.tables:
             self.tables[n] = df
             return
@@ -1694,7 +1694,7 @@ class SqlEngine:
         c = re.sub(r"(\w+)\s*(=|!=|<>|>=|<=|>|<)\s*(\d{10,})\b", ts_cmp, c)
         c = self._finalize_expr(c, df)
         kept = df.filter(~F.coalesce(F.expr(c).cast("boolean"), F.lit(False)))
-        self._update_table(tbl, kept)
+        self._update_table(tbl, kept, "delete")
         return self.spark.range(0)
 
     _OUT_DEFAULTS = {"format": "csv", "delimiter": ",", "header": "true",
@@ -1840,7 +1840,7 @@ class SqlEngine:
             out = new
         else:
             raise ValueError(f"unsupported LOAD DATA mode {mode!r}")
-        self._update_table(tbl, out)
+        self._update_table(tbl, out, f"load data ({mode})")
         return self.spark.range(0)
 
     def _show_deployments(self, name: str | None) -> DataFrame:
@@ -1889,14 +1889,17 @@ class SqlEngine:
         # by the full tuple, so hash-distributed) only separates exact
         # duplicate request rows, each of which must still match ITS OWN
         # pipeline outputs 1:1 in subquery join-backs.
+        # Spark's hashes skip NULL inputs, so (NULL,'a') and ('a',NULL)
+        # would hash alike: per-column NULL flags make NULLs positional
         _cols = [F.col(c) for c in history.columns]
+        _hashed = _cols + [c.isNull() for c in _cols]
         _dup_rn = F.row_number().over(_W.partitionBy(*_cols).orderBy(F.lit(1)))
         reqs = requests.select(*history.columns).withColumn(
             "__req_id__",
             F.concat_ws(
                 "#",
-                F.xxhash64(*_cols).cast("string"),
-                F.xxhash64(*(_cols + [F.lit(1)])).cast("string"),
+                F.xxhash64(*_hashed).cast("string"),
+                F.xxhash64(*(_hashed + [F.lit(1)])).cast("string"),
                 _dup_rn.cast("string")))
         # EVERY scan of the main table anchors at the request rows —
         # real FZ deployments read the main table in several subqueries
@@ -2015,41 +2018,99 @@ class SqlEngine:
         return self.spark.createDataFrame(
             [tuple(j[c] for c in cols) for j in sel], self._JOB_SCHEMA)
 
+    # INSERTs a long-window state queues between two requests; one more
+    # rebuilds the state instead, so pending deltas stay bounded
+    _LW_MAX_PENDING = 64
+    # generations a long-window state keeps before it compacts them —
+    # below Spark's 32-path threshold for a parallel listing job
+    _LW_MAX_GENERATIONS = 16
+
+    def _lw_note_write(self, n: str, df: DataFrame, why: str,
+                       delta: DataFrame | None = None) -> None:
+        """Tell the long-window states over online table ``n`` that it
+        becomes ``df``. An INSERT (``delta``, its coerced rows) into
+        the exact table a state was built from queues the rows for
+        that state's next request; any other write marks the state for
+        a rebuild, logged with ``why``."""
+        ents = [e for e in getattr(self, "_lw_states", {}).values()
+                if e["main"] == n and not e["stale"]]
+        if not ents:
+            return
+        before = self._table(n) if delta is not None else None
+        for ent in ents:
+            if delta is None:
+                ent["stale"] = why
+            elif ent["seen"] is before:
+                if len(ent["pending"]) < self._LW_MAX_PENDING:
+                    ent["pending"].append(delta)
+                    ent["seen"] = df
+                    continue
+                ent["stale"] = f"over {self._LW_MAX_PENDING} inserts between requests"
+            # a state out of step with the table is caught at its next
+            # request (the table it saw is no longer the stored one)
+            ent["pending"] = []
+
     def _lw_state(self, ctx: dict, wname: str, spec: WindowSpec,
-                  aggs: list[Agg], hist: DataFrame, bucket_ms: int):
+                  aggs: list[Agg], hist: DataFrame, bucket_ms: int, shape):
         """Materialized pre-agg state for one long-window deployment
-        window — built once from stored history, then caught up
-        incrementally: when the main table's version moves, only rows
-        past the state's watermark are appended (the reference loads
-        long-window data in increasing ts order; same contract here,
-        DEPLOY_STATEMENT.md 'loaded in the increasing order of the
-        timestamp column')."""
+        window, brought up to date with ``hist`` (the window's history:
+        the main table plus its temp columns). Built at the first
+        request; after that an INSERT costs O(inserted rows): its rows
+        were queued by ``_lw_note_write`` and are written here as one
+        partials generation (``PreAggTable.ingest``). ``shape`` maps
+        main-table rows to history rows; it is None when the history
+        joins other tables, and then queued rows rebuild the state.
+        Every other change rebuilds it from ``hist``: DELETE, LOAD,
+        ``register``, a TTL'd table, a re-DEPLOY, a table replaced
+        outside the engine. Each choice is logged on the
+        ``openmldb_spark`` logger."""
+        import logging
+        import shutil
         import tempfile
+        from functools import reduce
 
         from openmldb_spark.operators.preagg import PreAggTable
 
         key = (ctx["name"], wname.lower())
-        states = getattr(self, "_lw_states", None)
-        if states is None:
-            states = self._lw_states = {}
-        ver = getattr(self, "_table_versions", {}).get(ctx["main"], 0)
+        states = self.__dict__.setdefault("_lw_states", {})
+        sig = (ctx["main"], spec, tuple(aggs), bucket_ms)
         ent = states.get(key)
         if ent is None:
-            d = tempfile.mkdtemp(prefix="omldb_lw_") + "/state"
+            why = "no state yet"
+        elif ent["sig"] != sig:
+            why = "deployment changed"
+        elif ent["stale"]:
+            why = ent["stale"]
+        elif shape is None and (ent["pending"] or not hist.sameSemantics(ent["hist"])):
+            why = "joined history changed"
+        elif ent["seen"] is not ctx["history"] and not hist.sameSemantics(ent["hist"]):
+            why = "ttl table" if ctx["main"] in getattr(self, "table_ttls", {}) \
+                else "table replaced"
+        else:
+            why = None
+        log = logging.getLogger("openmldb_spark")
+        label = f"long_windows {key[0]}/{key[1]}"
+        if why is not None:
+            if ent is not None:
+                shutil.rmtree(ent["dir"], ignore_errors=True)
+            d = tempfile.mkdtemp(prefix="omldb_lw_")
             plain = WindowSpec(spec.partition_by, spec.order_by, "rows",
                                None, tiebreak=spec.tiebreak)
-            t = PreAggTable.create(self.spark, d, plain, list(aggs),
+            t = PreAggTable.create(self.spark, d + "/state", plain, list(aggs),
                                    bucket_ms=bucket_ms)
-            t.append(hist)
-            states[key] = {"t": t, "ver": ver}
-            return t
-        t = ent["t"]
-        if ent["ver"] != ver:
-            # idempotent per-key catch-up: only rows past each key's
-            # watermark are ingested from the current table
-            t.append_tail(hist)
-            ent["ver"] = ver
-        return t
+            n = t.ingest(hist)
+            ent = states[key] = {"t": t, "dir": d, "sig": sig, "main": ctx["main"],
+                                 "pending": [], "stale": None}
+            log.info("%s: rebuild: %s (%d rows)", label, why, n)
+        elif ent["pending"]:
+            delta = reduce(DataFrame.unionByName, ent["pending"])
+            ent["pending"] = []
+            n = ent["t"].ingest(shape(delta))
+            log.info("%s: ingest delta (%d rows)", label, n)
+            if len(ent["t"].meta["generations"]) > self._LW_MAX_GENERATIONS:
+                ent["t"].compact()
+        ent.update(seen=ctx["history"], hist=hist)
+        return ent["t"]
 
     def _request_needs_inw(self, ctx: dict, spec: WindowSpec,
                            df: DataFrame) -> bool:
@@ -2260,8 +2321,9 @@ class SqlEngine:
             if f.name not in names:
                 incoming = incoming.withColumn(
                     f.name, F.lit(None).cast(f.dataType))
-        updated = target.unionByName(incoming.select(*target.columns))
-        self._update_table(name, updated)
+        incoming = incoming.select(*target.columns)
+        updated = target.unionByName(incoming)
+        self._update_table(name, updated, "insert", delta=incoming)
         return updated
 
     _KEYWORDS = {"on", "order", "last", "where", "group", "window", "limit",
@@ -3120,16 +3182,23 @@ class SqlEngine:
                     from openmldb_spark.operators.preagg import (
                         long_window_serveable, serve_long_window)
 
-                    hist_lw = hist_df
-                    for tname, texpr in all_tmps:
-                        try:
-                            hist_lw = hist_lw.withColumn(tname, F.expr(texpr))
-                        except Exception:  # noqa: BLE001 — missing cols
-                            pass
+                    def _shape(h):
+                        for tname, texpr in all_tmps:
+                            try:
+                                h = h.withColumn(tname, F.expr(texpr))
+                            except Exception:  # noqa: BLE001 — missing cols
+                                pass
+                        return h
+
+                    hist_lw = _shape(hist_df)
                     if long_window_serveable(spec, aggs, hist_lw):
+                        # INSERTed rows extend the history directly only
+                        # when it is the main table itself (no joins)
+                        plain = hist_df is req_ctx["history"]
                         state = self._lw_state(
                             req_ctx, wname, spec, aggs, hist_lw,
-                            req_ctx["lw"][wname.lower()])
+                            req_ctx["lw"][wname.lower()],
+                            _shape if plain else None)
                         df = serve_long_window(df, hist_lw, state, spec, aggs)
                         continue
                 if req_active:
