@@ -3,7 +3,7 @@
 A brand-new engine with the query/data-processing capabilities of the
 OpenMLDB offline feature platform (reference survey in SURVEY.md),
 re-expressed Spark-first: DataFrame/SQL plans that Catalyst optimizes,
-with Arrow-vectorized ``applyInPandas`` kernels only where Spark's
+with an Arrow-vectorized ``mapInArrow`` kernel only where Spark's
 built-in window frames cannot express the semantics (MAXSIZE, OPEN
 bounds, EXCLUDE CURRENT_TIME/ROW, WINDOW UNION, LAST JOIN).
 

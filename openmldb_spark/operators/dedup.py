@@ -341,9 +341,11 @@ def simhash_dedup(
     # would otherwise each walk the token array per row (17 s → <2 s
     # over the sf1.0 documents). explode_outer keeps zero-token docs:
     # their count is 0, every majority is false, simhash = 0 — exactly
-    # the fold semantics.
+    # the fold semantics. A NULL document has no fingerprint at all and
+    # is dropped first, so it pairs with nothing.
     npart = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ex = (df.select(F.col(id_col).alias("__id__"), F.col(text_col).alias("__tx__"))
+            .filter(F.col("__tx__").isNotNull())
             .repartition(npart, "__id__")  # don't pin tokenize+hash to the scan's 1-2 splits
             .select("__id__", F.explode_outer(
                 _token_hashes(F.col("__tx__"), seed, hash_fn)).alias("__x__")))

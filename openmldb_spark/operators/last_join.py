@@ -192,7 +192,8 @@ def _check_collisions(left, right2, key_cols, rts_out):
         )
 
 
-def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix):
+def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix,
+                     exchange: tuple[int, list[str]] | None = None):
     """Fully native as-of join: union both sides into one per-key
     timeline, sort, and carry the newest right row forward with
     ``last(struct(right_cols), ignorenulls=True)`` over an unbounded
@@ -205,6 +206,12 @@ def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix):
     Ties among right rows at one ts resolve to the max tiebreak (the
     struct comparison is positional over right columns) — matching the
     row_number and merge_asof strategies.
+
+    ``exchange=(n, cols)`` hash-partitions the unioned timeline with an
+    explicit ``repartition(n, *cols)`` (``cols`` a subset of the join
+    keys) instead of the planner's exchange, so passes over the output
+    that partition by a superset of ``cols`` need no exchange of their
+    own and AQE cannot coalesce the partition count (backfill_features).
     """
     if any(lk != rk for lk, rk in keys):
         right = right.select(*[
@@ -236,6 +243,8 @@ def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix):
         F.struct(*[F.col(c) for c in right_val_cols]).alias("__rv__"),
     )
     unioned = lhs.unionByName(rhs)
+    if exchange is not None:
+        unioned = unioned.repartition(exchange[0], *exchange[1])
     order = [F.col("__ts__").asc_nulls_last(), F.col("__side__"), F.col("__rv__")]
     w = (
         Window.partitionBy(*key_cols)

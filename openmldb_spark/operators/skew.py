@@ -98,10 +98,9 @@ def window_agg_skewed(
     the expansion is needed for the non-decomposable aggregates
     regardless, so a split would only add an extra full pass.
 
-    ``row_key`` (unique row identity): payload columns the window never
-    reads stay OUT of the Arrow↔Python pipe — the salted kernel runs on
-    a projected frame and features join back on the key (see
-    window_agg).
+    ``row_key`` (unique row identity) reaches only the cold native
+    route, where window_agg uses it for the distinct_count event plan;
+    the salted kernel passes payload columns through its Arrow boundary.
 
     ``key_stats``: precomputed per-key counts (``key_counts``) shared
     across calls — replaces this call's own statistics scans, so a
@@ -163,31 +162,6 @@ def window_agg_skewed(
                      .limit(1).count())
             if n_hot == 0:
                 return window_agg(df, spec, aggs, impl="native", row_key=row_key)
-
-    if row_key:
-        # salted-kernel path: payload columns bypass the Arrow↔Python
-        # pipe (see window_agg)
-        from openmldb_spark.operators.window import kernel_columns
-
-        need = kernel_columns(spec, aggs) | set(row_key)
-        payload = [c for c in df.columns if c not in need]
-        if payload and not any(a.name in df.columns for a in aggs):
-            slim = df.select(*[c for c in df.columns if c in need])
-            feats = window_agg_skewed(slim, spec, aggs, quantiles,
-                                      hot_threshold, union,
-                                      native_when_cold=False,
-                                      key_stats=counts)
-            feats = feats.select(*row_key, *[a.name for a in aggs])
-            # null-safe join-back: NULL key components must not drop
-            # rows (see window._slim_join_back)
-            for k in row_key:
-                feats = feats.withColumnRenamed(k, f"__rk_{k}__")
-            cond = None
-            for k in row_key:
-                c = df[k].eqNullSafe(F.col(f"__rk_{k}__"))
-                cond = c if cond is None else (cond & c)
-            out = df.join(feats, on=cond, how="inner")
-            return out.select(*df.columns, *[a.name for a in aggs])
 
     work = with_flags(df, union).withColumn("__oms__", _order_ms_expr(df, spec.order_by))
 
@@ -352,12 +326,12 @@ def window_agg_skewed(
         return out.select(*df.columns, *[a.name for a in aggs])
 
     # 4b. per-(key, bucket) kernel — identical kernel, finer grouping
-    from openmldb_spark.operators.window import run_kernel_partitioned
+    from openmldb_spark.operators.window import (
+        _session_tz, buffer_order, run_kernel_partitioned)
 
-    out_cols = list(df.columns)
     result_fields, out_schema = result_schema(df, aggs)
-    from openmldb_spark.operators.window import _session_tz
-
-    kernel = make_kernel(spec, aggs, out_cols, result_fields, format_int_cols(df, aggs),
-                         keys=keys + [_BUCKET], tz=_session_tz(df))
-    return run_kernel_partitioned(expanded, keys + [_BUCKET], kernel, out_schema)
+    kernel = make_kernel(spec, aggs, list(df.columns), result_fields,
+                         format_int_cols(df, aggs), keys=keys + [_BUCKET],
+                         tz=_session_tz(df))
+    return run_kernel_partitioned(expanded, keys + [_BUCKET], buffer_order(spec, bool(union)),
+                                  kernel, out_schema)

@@ -12,13 +12,15 @@ mem_catalog.h:234-430``) with two physical strategies:
    ``OPEN`` bounds, ``EXCLUDE CURRENT_TIME/ROW``, ``WINDOW UNION``,
    ``INSTANCE_NOT_IN_WINDOW``, duplicate-timestamp buffer-order
    semantics, categorical/top-n/entropy aggregates) runs as ONE
-   Arrow-vectorized ``applyInPandas`` pass per key group that emits all
-   requested features at once — the idiomatic replacement for the
+   ``mapInArrow`` pass that emits all requested features at once — the
    reference's ``repartition + sortWithinPartitions + WindowComputer``
-   recipe (``java/openmldb-batch/.../nodes/WindowAggPlan.scala:52-189``)
-   with no per-row Python: frame bounds come from vectorized
-   ``searchsorted``, basic aggregates from pandas' C rolling engine
-   with a variable-bounds indexer, distinct counts from an amortized
+   recipe (``java/openmldb-batch/.../nodes/WindowAggPlan.scala:52-189``):
+   the JVM hash-partitions on the key and sorts each partition into
+   buffer order, and the kernel converts only the columns it reads to
+   pandas (every other column passes through as Arrow arrays). No
+   per-row Python: frame bounds come from vectorized ``searchsorted``,
+   basic aggregates from pandas' C rolling engine with a
+   variable-bounds indexer, distinct counts from an amortized
    two-pointer sweep.
 
 Frame semantics reproduced bit-for-bit (survey §2.2):
@@ -28,8 +30,9 @@ Frame semantics reproduced bit-for-bit (survey §2.2):
 - ``ROWS_RANGE``: frame = buffered rows with order key in
   ``[cur - preceding, cur]`` (closed; ``OPEN`` makes the lower bound
   exclusive). Buffered = sorted before the current row under the
-  stable order ``(order_key, union_flag, *tiebreak)`` — unlike ANSI
-  RANGE, later same-timestamp rows are NOT peers of the current row.
+  order ``(order_key, union_flag, *tiebreak)``, ascending with NULLs
+  first on every route — unlike ANSI RANGE, later same-timestamp rows
+  are NOT peers of the current row.
 - ``MAXSIZE n``: keep only the n newest frame rows (ROWS_RANGE only).
 - ``EXCLUDE CURRENT_TIME``: rows with the current row's exact order key
   (other than the current row itself) leave the frame.
@@ -211,9 +214,8 @@ def _result_type(agg: Agg, in_type: T.DataType) -> T.DataType:
 # ---------------------------------------------------------------------------
 
 
-def kernel_columns(spec: WindowSpec, aggs: list[Agg]) -> set[str]:
-    """Every input column the window evaluation actually reads."""
-    need = set(spec.partition_by) | {spec.order_by} | set(spec.tiebreak)
+def _agg_columns(aggs: list[Agg]) -> set[str]:
+    need = set()
     for a in aggs:
         for c in (a.col, a.cond, a.cate):
             if c:
@@ -222,6 +224,12 @@ def kernel_columns(spec: WindowSpec, aggs: list[Agg]) -> set[str]:
             if p:
                 need.update(x for x in (p[0], p[2]) if x)
     return need
+
+
+def kernel_columns(spec: WindowSpec, aggs: list[Agg]) -> set[str]:
+    """Every input column the window evaluation actually reads."""
+    return (set(spec.partition_by) | {spec.order_by} | set(spec.tiebreak)
+            | _agg_columns(aggs))
 
 
 def canonicalize_spec(spec: WindowSpec) -> WindowSpec:
@@ -255,6 +263,43 @@ def canonicalize_spec(spec: WindowSpec) -> WindowSpec:
     return spec
 
 
+def window_route(df: DataFrame, spec: WindowSpec, aggs: list[Agg],
+                 union: list[DataFrame] | None = None, impl: str = "auto") -> str:
+    """The physical route ``window_agg`` takes: ``'long_window'``,
+    ``'native_union'``, ``'native'`` or ``'kernel'``.
+
+    - UNBOUNDED frames whose aggregates are ALL decomposable route to
+      the long-window pre-agg plan: O(rows) carry-in, no per-key
+      single-task window (VERDICT r2 #5). distinct_count first
+      rewrites to a sum over a first-occurrence indicator — also
+      decomposable — so dc-bearing unbounded windows take the same
+      skew-free plan (VERDICT r3 #3). Mixed lists stay on the kernel —
+      it must buffer the full history for the non-decomposable
+      aggregates anyway, while a split would add an entire extra
+      2-shuffle pass.
+    - WINDOW UNION natively: union rows only FEED frames, so the
+      flag-tagged union evaluates on the same native plans with
+      (-union) in the tie order and primary rows filtered at the end.
+    - Otherwise native when Catalyst frames express the shape, else
+      the Arrow kernel.
+    """
+    if impl != "auto":
+        return impl
+    spec = canonicalize_spec(spec)
+    if spec.preceding is None and not union:
+        from openmldb_spark.operators.long_window import (
+            long_window_eligible, rewrite_unbounded_distinct_count)
+
+        df2, aggs2 = rewrite_unbounded_distinct_count(df, spec, aggs)
+        if long_window_eligible(spec, aggs2, union, df2):
+            return "long_window"
+    if union:
+        spec2 = replace(spec, tiebreak=("__negu__",) + tuple(spec.tiebreak))
+        if _native_expressible(spec2, aggs, None, with_flags(df, union)):
+            return "native_union"
+    return "native" if _native_expressible(spec, aggs, union, df) else "kernel"
+
+
 def window_agg(
     df: DataFrame,
     spec: WindowSpec,
@@ -266,56 +311,39 @@ def window_agg(
     """Append one column per ``Agg`` to ``df``, computed over ``spec``.
 
     Only primary (``df``) rows are returned; ``union`` tables feed
-    frames only (WINDOW UNION semantics).
+    frames only (WINDOW UNION semantics). ``window_route`` names the
+    physical plan.
 
     ``row_key``: columns that uniquely identify ``df`` rows (e.g.
-    ``(conv_id, turn_idx)``). When given, payload columns the window
-    never reads (text blobs, embeddings …) are NOT carried through the
-    evaluation: the pass runs on a projected frame and the features
-    join back on the key — at scale this keeps wide payloads out of
-    the Arrow↔Python pipe entirely (one extra JVM shuffle instead).
+    ``(conv_id, turn_idx)``). Only the native distinct_count EVENT plan
+    (large or unbounded frames) uses it: that plan shuffles several
+    times, so it runs on a projection without the payload columns it
+    never reads (text blobs, embeddings …) and the features join back
+    on the key. The kernel route needs no join-back — payload columns
+    pass through its Arrow boundary without becoming pandas.
     """
     spec = canonicalize_spec(spec)
-    if impl == "auto":
-        # UNBOUNDED frames whose aggregates are ALL decomposable route
-        # to the long-window pre-agg plan: O(rows) carry-in, no per-key
-        # single-task window (VERDICT r2 #5). distinct_count first
-        # rewrites to a sum over a first-occurrence indicator — also
-        # decomposable — so dc-bearing unbounded windows take the same
-        # skew-free plan (VERDICT r3 #3). Mixed lists stay on the
-        # kernel — it must buffer the full history for the
-        # non-decomposable aggregates anyway, so evaluating the
-        # decomposable ones alongside is marginal, while a split would
-        # add an entire extra 2-shuffle pass.
+    route = window_route(df, spec, aggs, union, impl)
+    if route == "long_window":
         from openmldb_spark.operators.long_window import (
-            long_window_agg, long_window_eligible, rewrite_unbounded_distinct_count)
+            long_window_agg, rewrite_unbounded_distinct_count)
 
-        if spec.preceding is None and not union:
-            df2, aggs2 = rewrite_unbounded_distinct_count(df, spec, aggs)
-            if long_window_eligible(spec, aggs2, union, df2):
-                out = long_window_agg(df2, spec, aggs2)
-                return out.select(*df.columns, *[a.name for a in aggs])
-        if union:
-            # WINDOW UNION natively: union rows only FEED frames, so
-            # the flag-tagged union evaluates on the same native plans
-            # with (-union) in the tie order (later-listed tables sort
-            # first at equal keys — with_flags contract) and primary
-            # rows filtered at the end. Zero Python when expressible.
-            combined = with_flags(df, union)
-            spec2 = replace(spec, tiebreak=("__negu__",) + tuple(spec.tiebreak))
-            if _native_expressible(spec2, aggs, None, combined):
-                combined = combined.withColumn("__negu__", -F.col(_UNION))
-                out = _native_window_agg(combined, spec2, aggs)
-                out = out.filter(F.col(_EMIT) == 1)
-                return out.select(*df.columns, *[a.name for a in aggs])
-        impl = "native" if _native_expressible(spec, aggs, union, df) else "kernel"
-    if impl == "native":
+        df2, aggs2 = rewrite_unbounded_distinct_count(df, spec, aggs)
+        out = long_window_agg(df2, spec, aggs2)
+        return out.select(*df.columns, *[a.name for a in aggs])
+    if route == "native_union":
+        # later-listed tables sort first at equal keys (with_flags
+        # contract). Zero Python.
+        spec2 = replace(spec, tiebreak=("__negu__",) + tuple(spec.tiebreak))
+        combined = with_flags(df, union).withColumn("__negu__", -F.col(_UNION))
+        out = _native_window_agg(combined, spec2, aggs)
+        out = out.filter(F.col(_EMIT) == 1)
+        return out.select(*df.columns, *[a.name for a in aggs])
+    if route == "native":
         if union:
             raise ValueError("native path cannot express WINDOW UNION")
-        # multi-shuffle native plans (the distinct_count EVENT plan —
-        # large/unbounded frames) also benefit from keeping payloads
-        # out of the shuffles; small-frame dc shares the single sort,
-        # so slimming would only add a join
+        # small-frame dc shares the single sort, so slimming would
+        # only add a join
         if row_key and any(a.func == "distinct_count" for a in aggs) \
                 and (spec.preceding is None or int(spec.preceding) > 256):
             slimmed = _slim_join_back(df, spec, aggs, row_key,
@@ -323,23 +351,15 @@ def window_agg(
             if slimmed is not None:
                 return slimmed
         return _native_window_agg(df, spec, aggs)
-    # kernel path: payload columns the kernel never reads bypass the
-    # Arrow↔Python pipe when the caller declares a unique row key
-    if row_key:
-        slimmed = _slim_join_back(
-            df, spec, aggs, row_key,
-            lambda s: window_agg(s, spec, aggs, union=union, impl="kernel"))
-        if slimmed is not None:
-            return slimmed
     return _kernel_window_agg(df, spec, aggs, union)
 
 
 def _slim_join_back(df: DataFrame, spec: WindowSpec, aggs: list[Agg],
                     row_key: list[str], run) -> DataFrame | None:
-    """Run the window pass on a projection without payload columns and
-    join the features back on the unique ``row_key``. None when there
-    is no payload to strip (or an agg name collides with an input
-    column — the caller's non-slim path then owns the semantics).
+    """Run a multi-shuffle native pass on a projection without payload
+    columns and join the features back on the unique ``row_key``. None
+    when there is no payload to strip (or an agg name collides with an
+    input column — the caller's non-slim path then owns the semantics).
 
     The join-back is null-safe (``<=>``): a NULL in a row_key column
     still matches its own feature row instead of silently dropping the
@@ -820,7 +840,7 @@ def _native_window_agg(df: DataFrame, spec: WindowSpec, aggs: list[Agg]) -> Data
 
 
 # ---------------------------------------------------------------------------
-# kernel (applyInPandas) path
+# kernel (mapInArrow) path
 # ---------------------------------------------------------------------------
 
 
@@ -2285,22 +2305,34 @@ def _group_index(pdf: pd.DataFrame, keys: list[str]):
 def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_fields: list,
                 int_cols: frozenset = frozenset(), keys: list[str] | None = None,
                 tz: str | None = None):
-    """Build the per-group pandas kernel (shared by window_agg and the
+    """Build the Arrow window kernel (shared by window_agg and the
     skew-salted variant in skew.py).
 
-    Input groups must carry two int flag columns: ``__emit__`` (1 → row
+    ``kernel(tbl)`` takes a ``pyarrow.Table`` of whole key groups
+    already in buffer order — ``buffer_order``, sorted by the JVM in
+    ``run_kernel_partitioned`` — and yields the emitted rows as record
+    batches of ``out_cols`` + ``result_fields``. Only the key, order,
+    flag and aggregate columns become pandas, converted exactly as
+    ``mapInPandas`` converts them; ``out_cols`` pass through as the
+    input's Arrow arrays, filtered by the emit mask.
+
+    Input rows must carry two int flag columns: ``__emit__`` (1 → row
     is emitted with features) and ``__union__`` (1 → row originates
     from a WINDOW UNION secondary table). They differ under skew
     expansion, where context copies of primary rows have emit=0 but
     union=0.
 
-    ``tz``: the Spark session time zone. Arrow hands the kernel WALL
-    clocks in that zone; ms-epoch aggregation (the dialect sums
+    ``tz``: the Spark session time zone. Timestamp columns reach pandas
+    as WALL clocks in that zone; ms-epoch aggregation (the dialect sums
     timestamps as epoch ms) must localize through it — wall-based sums
-    would drift by (n-1)×offset under any non-UTC session.
+    would drift by (n-1)×offset under any non-UTC session. Order keys
+    are read as epoch ms straight from Arrow, like the native route's
+    ``unix_micros``, so frames never depend on the zone.
     """
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
+
     order_col = spec.order_by
-    tiebreak = list(spec.tiebreak)
     spec_b = spec  # captured by closure (plain dataclass, picklable)
     aggs_b = list(aggs)
     int_fields = []
@@ -2311,6 +2343,7 @@ def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_f
             int_fields.append((f.name, 32))
         elif isinstance(f.dataType, T.ShortType):
             int_fields.append((f.name, 16))
+    result_types = [(f.name, to_arrow_type(f.dataType), f.dataType) for f in result_fields]
 
     def _to_int(out: pd.DataFrame) -> pd.DataFrame:
         for name, bits in int_fields:
@@ -2329,31 +2362,53 @@ def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_f
         return out
 
     key_list = list(keys) if keys else []
+    read_cols = list(dict.fromkeys(
+        key_list + [order_col] + sorted(_agg_columns(aggs_b)) + [_EMIT, _UNION]))
+    # mapInPandas' own Arrow↔pandas conversion (session zone, no
+    # overflow check, no int→decimal coercion: Spark's defaults)
+    ser = ArrowStreamPandasSerializer(tz, False, False)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Evaluate a batch that may hold MANY key groups in one pandas
-        pass: frame bounds come from group-offset searchsorted, so no
-        per-group Python loop runs for the vectorized aggregates (the
-        multi-group upgrade that removes per-conversation overhead)."""
+    def kernel(tbl):
+        import pyarrow as pa
+
+        pdf = pd.DataFrame({c: ser.arrow_to_pandas(tbl.column(c), i)
+                            for i, c in enumerate(read_cols)})
         # drop NULL-order-key rows entirely (WindowAggPlan.scala:788-795)
-        pdf = pdf[pdf[order_col].notna()]
+        valid = pdf[order_col].notna().to_numpy()
+        if not valid.all():
+            pdf = pdf[valid].reset_index(drop=True)
+        ok = _arrow_order_ms(tbl.column(order_col))
+        ok = _to_order_int64(pdf[order_col]) if ok is None else ok[valid]
+        res = _evaluate(pdf, ok)
+        keep = np.zeros(tbl.num_rows, dtype=bool)
+        keep[np.flatnonzero(valid)[pdf[_EMIT].to_numpy() == 1]] = True
+        if not keep.any():
+            return
+        kept = tbl.select(out_cols)
+        if not keep.all():
+            kept = kept.filter(pa.array(keep))
+        arrays = list(kept.columns) + [
+            pa.chunked_array([ser._create_array(res[name], at, spark_type=dt, arrow_cast=True)])
+            for name, at, dt in result_types]
+        names = list(out_cols) + [name for name, _, _ in result_types]
+        yield from pa.Table.from_arrays(arrays, names=names).to_batches()
+
+    def _evaluate(pdf: pd.DataFrame, ok: np.ndarray) -> pd.DataFrame:
+        """Features of the emitted rows of a buffer-ordered batch that
+        may hold MANY key groups, in one pandas pass: frame bounds come
+        from group-offset searchsorted, so no per-group Python loop runs
+        for the vectorized aggregates."""
         for c in int_cols:
             if c in pdf.columns and pd.api.types.is_float_dtype(pdf[c].dtype):
                 pdf = pdf.assign(**{c: pdf[c].astype("Int64")})
         if not len(pdf):
-            out = pdf[out_cols].copy()
+            out = pd.DataFrame(index=pdf.index)
             for a in aggs_b:
                 out[a.name] = pd.Series(dtype=object)
             return out
-        # union rows buffer BEFORE primary rows at equal order keys
-        # (WindowAggPlan.scala:78-84): sort by (order, 1-union, tiebreak)
-        pdf = pdf.assign(__prim__=-pdf[_UNION].to_numpy())
-        sort_keys = key_list + [order_col, "__prim__"] + tiebreak
-        pdf = pdf.sort_values(sort_keys, kind="mergesort").reset_index(drop=True)
         gid = gs = None
         if key_list:
             gid, gs = _group_index(pdf, key_list)
-        ok = _to_order_int64(pdf[order_col])
         emit = pdf[_EMIT].to_numpy() == 1
 
         if spec_b.instance_not_in_window:
@@ -2361,7 +2416,7 @@ def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_f
             # (union rows) subsequence, not the raw buffer — per group
             if gs is None:
                 res = _eval_inw_all(spec_b, aggs_b, pdf, ok, emit)
-                out = pdf[out_cols].copy()
+                out = pd.DataFrame(index=pdf.index)
                 for k, v in res.items():
                     out[k] = v
                 return _to_int(out[emit].copy())
@@ -2371,13 +2426,13 @@ def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_f
             for a0, b0 in zip(bounds[:-1], bounds[1:]):
                 g = pdf.iloc[a0:b0].reset_index(drop=True)
                 res = _eval_inw_all(spec_b, aggs_b, g, ok[a0:b0], emit[a0:b0])
-                out = g[out_cols].copy()
+                out = pd.DataFrame(index=g.index)
                 for k, v in res.items():
                     out[k] = v
                 outs.append(_to_int(out[emit[a0:b0]].copy()))
             if outs:
                 return pd.concat(outs, ignore_index=True)
-            out = pdf[out_cols].iloc[:0].copy()
+            out = pd.DataFrame()
             for a in aggs_b:
                 out[a.name] = pd.Series(dtype=object)
             return out
@@ -2498,7 +2553,7 @@ def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_f
                 emit_pos = np.flatnonzero(emit)
                 res[a.name] = _eval_generic(a, pdf, lo, seg_hi, inc_cur, emit_pos, seg_mask, where_mask)
 
-        out = pdf[out_cols].copy()
+        out = pd.DataFrame(index=pdf.index)
         for k, v in res.items():
             out[k] = v
         # nullable IntN so NULL aggregates survive Arrow conversion
@@ -2513,7 +2568,7 @@ def with_flags(df: DataFrame, union: list[DataFrame] | None, template: DataFrame
     (reference: WindowAggPlanUtil.scala:50-117). At equal order keys the
     buffer order is later-listed-table rows first, then earlier tables,
     then primary (cases/function/window/test_window_union.yaml 19-1/2),
-    which the kernel realizes by sorting on -union."""
+    which ``buffer_order`` realizes by sorting the flag descending."""
     template = template or df
     out_cols = list(template.columns)
     in_schema = template.schema
@@ -2529,65 +2584,89 @@ def with_flags(df: DataFrame, union: list[DataFrame] | None, template: DataFrame
     return work
 
 
-def run_kernel_partitioned(work: DataFrame, keys: list[str], kernel, out_schema) -> DataFrame:
-    """repartition(keys) → sortWithinPartitions(keys) → mapInPandas,
-    streaming Arrow batches with carry-over of the key group that spans
-    a batch boundary — the reference's physical recipe (repartition +
+def buffer_order(spec: WindowSpec, union: bool) -> list[Column]:
+    """The kernel's buffer order after the partition keys: order key,
+    union flag descending (later-listed union tables first, then earlier
+    ones, then primary at equal order keys — WindowAggPlan.scala:78-84)
+    only when there is a union, then the tiebreak; ascending with NULLs
+    first, exactly the order the native windows and sessionize sort by,
+    so a kernel after them in one stage needs no sort of its own."""
+    return ([F.col(spec.order_by)] + ([F.col(_UNION).desc()] if union else [])
+            + [F.col(c) for c in spec.tiebreak])
+
+
+def _arrow_order_ms(col) -> np.ndarray | None:
+    """Order key as int64 straight from Arrow: epoch ms for timestamps
+    (NULLs read 0), None for types only the pandas path can read."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = col.type
+    if pa.types.is_timestamp(t):
+        us = col.cast(pa.timestamp("us", tz=t.tz)).cast(pa.int64())
+        return pc.fill_null(us, 0).to_numpy() // 1000
+    if pa.types.is_integer(t):
+        return pc.fill_null(col.cast(pa.int64()), 0).to_numpy()
+    return None
+
+
+def _trailing_group_start(tbl, keys: list[str]) -> int:
+    """Row index where the last row's key group starts in a key-sorted
+    table — that group may continue in the next Arrow batch."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    same = None
+    for k in keys:
+        col = tbl.column(k)
+        last = col[n - 1]
+        if not last.is_valid:
+            eq = col.is_null()
+        elif pa.types.is_floating(col.type) and last.as_py() != last.as_py():
+            eq = pc.fill_null(pc.is_nan(col), False)
+        else:
+            eq = pc.fill_null(pc.equal(col, last), False)
+        same = eq if same is None else pc.and_(same, eq)
+    return n - pc.sum(same.cast(pa.int64())).as_py()
+
+
+def run_kernel_partitioned(work: DataFrame, keys: list[str], order: list[Column],
+                           kernel, out_schema) -> DataFrame:
+    """repartition(n, keys) → sortWithinPartitions(keys, *order) →
+    mapInArrow — the reference's physical recipe (repartition +
     sortWithinPartitions + per-partition computer, WindowAggPlan.scala
-    §2.3), ~6-10× cheaper than groupBy().applyInPandas's per-group
-    Arrow flush for many small groups, and with Python memory bounded
-    by (arrow batch + largest single key group), NOT the partition
-    (survey §7.4; VERDICT r1 'what's wrong' #3). The partition-level
-    sort runs in the JVM where it can spill."""
+    §2.3). The JVM sort is the only buffer order (it can spill); the
+    kernel streams the partition's Arrow batches, carrying the key group
+    that spans a batch boundary into the next call, so Python memory is
+    bounded by (Arrow batch + largest single key group), NOT the
+    partition (survey §7.4).
 
-    def _trailing_group_cut(pdf: pd.DataFrame) -> int:
-        """Rows are key-sorted; the trailing block equal to the last
-        row's key may continue in the next Arrow batch."""
-        mask = np.ones(len(pdf), dtype=bool)
-        for k in keys:
-            col = pdf[k]
-            last = col.iloc[-1]
-            if pd.isna(last):
-                mask &= col.isna().to_numpy()
-            else:
-                mask &= (col == last).to_numpy(dtype=bool, na_value=False)
-        return len(pdf) - int(mask.sum())
-
-    import os as _os
-
-    streaming = _os.environ.get("OMLDB_KERNEL_STREAMING", "1") != "0"
+    ``n`` is ``spark.sql.shuffle.partitions``. When ``work`` is already
+    hash-partitioned on ``keys`` into ``n`` partitions the planner drops
+    this repartition, and when it is already sorted by ``(keys,
+    *order)`` — a native window or sessionize pass over the same key and
+    order — it drops the sort too."""
+    import pyarrow as pa
 
     def run_partition(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
+        carry = None  # the trailing, possibly unfinished key group
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            cut = _trailing_group_cut(pdf)
-            head, carry = pdf.iloc[:cut], pdf.iloc[cut:]
-            if len(head):
-                yield kernel(head)
-        if carry is not None and len(carry):
-            yield kernel(carry)
-
-    def run_partition_concat(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        if not len(pdf):
-            return
-        yield kernel(pdf)
+            tbl = pa.Table.from_batches([rb])
+            if carry is not None:
+                tbl = pa.concat_tables([carry, tbl])  # zero-copy
+            cut = _trailing_group_start(tbl, keys)
+            if cut:
+                yield from kernel(tbl.slice(0, cut))
+            carry = tbl.slice(cut)
+        if carry is not None:
+            yield from kernel(carry)
 
     n = int(work.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if streaming:
-        parted = work.repartition(n, *keys).sortWithinPartitions(*keys)
-        return parted.mapInPandas(run_partition, schema=out_schema)
-    # OMLDB_KERNEL_STREAMING=0: whole-partition concat (no JVM sort; Python
-    # memory bounded by partition, not group)
-    return work.repartition(n, *keys).mapInPandas(run_partition_concat, schema=out_schema)
+    parted = work.repartition(n, *keys).sortWithinPartitions(*keys, *order)
+    return parted.mapInArrow(run_partition, schema=out_schema)
 
 
 def _py_agg(agg: Agg, pdf: pd.DataFrame, idxs: list[int]):
@@ -2782,12 +2861,12 @@ def _kernel_window_agg(
     aggs: list[Agg],
     union: list[DataFrame] | None,
 ) -> DataFrame:
-    out_cols = list(df.columns)
+    keys = list(spec.partition_by)
     result_fields, out_schema = result_schema(df, aggs)
-    work = with_flags(df, union)
-    kernel = make_kernel(spec, aggs, out_cols, result_fields, format_int_cols(df, aggs),
-                         keys=list(spec.partition_by), tz=_session_tz(df))
-    return run_kernel_partitioned(work, list(spec.partition_by), kernel, out_schema)
+    kernel = make_kernel(spec, aggs, list(df.columns), result_fields,
+                         format_int_cols(df, aggs), keys=keys, tz=_session_tz(df))
+    return run_kernel_partitioned(with_flags(df, union), keys,
+                                  buffer_order(spec, bool(union)), kernel, out_schema)
 
 
 def _session_tz(df: DataFrame) -> str:

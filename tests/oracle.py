@@ -133,7 +133,9 @@ def run_oracle(pdf: pd.DataFrame, spec, aggs, order_col: str, emit_col: str | No
         g = g[g[order_col].notna()]
         emit_series = g[emit_col] if emit_col else pd.Series(1, index=g.index)
         g = g.assign(_ok=[to_ms(v) for v in g[order_col]], _emit=emit_series.to_numpy() == 1)
-        g = g.sort_values(["_ok", "_emit"] + tiebreak, kind="mergesort").reset_index(drop=True)
+        # buffer order: NULL tiebreaks first, as the engine's JVM sorts
+        g = g.sort_values(["_ok", "_emit"] + tiebreak, kind="mergesort",
+                          na_position="first").reset_index(drop=True)
         rows = g.to_dict("records")
         for i, r in enumerate(rows):
             if not r["_emit"]:

@@ -86,6 +86,20 @@ def test_simhash_dedup(spark, documents):
     assert (pairs.hamming <= 3).all()
 
 
+def test_simhash_null_text_pairs_nothing(spark):
+    """A NULL document has no fingerprint, so it pairs with nothing;
+    documents with zero tokens keep fingerprint 0 and pair together."""
+    from openmldb_spark.operators.dedup import simhash_dedup
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, " ... "),
+         (5, "the quick brown fox jumps"), (6, "the quick brown fox jumps")],
+        "doc_id long, text string")
+    pairs = {(r.id_a, r.id_b) for r in simhash_dedup(docs, max_hamming=3).collect()}
+    assert not {p for p in pairs if {1, 2} & set(p)}, pairs
+    assert (3, 4) in pairs and (5, 6) in pairs
+
+
 def test_cosine_topk_matches_numpy(spark, embeddings):
     from openmldb_spark.operators.similarity import cosine_topk
 

@@ -89,7 +89,7 @@ def test_request_isolated_anchor_native(eng, spark):
     assert got == {"c1": (3, 119.0, 10.0), "c2": (3, 270.0, 40.0)}
     # isolated anchors keep the zero-Python native window-union plan
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan
+    assert "InArrow" not in plan
 
 
 def test_request_id_no_global_sort(eng, spark):

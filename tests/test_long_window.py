@@ -83,7 +83,7 @@ def test_auto_routes_unbounded_decomposable_to_preagg(spark):
     for out in (window_agg(df, spec, sub, impl="auto"),
                 window_agg_skewed(df, spec, sub, quantiles=3, hot_threshold=10)):
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "InPandas" not in plan and "Python" not in plan
+        assert "InArrow" not in plan and "Python" not in plan
         got = out.orderBy("id").toPandas()
         for col in ("s", "a", "c"):
             for i in range(len(exact)):
@@ -104,11 +104,11 @@ def test_auto_keeps_kernel_for_mixed_aggs(spark):
     out = window_agg(df, spec, [Agg("sum", "v", "s"),
                                 Agg("entropy", "v", "e")], impl="auto")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" in plan
+    assert "MapInArrow" in plan
     out2 = window_agg(df, spec, [Agg("sum", "v", "s"),
                                  Agg("distinct_count", "v", "d")], impl="auto")
     plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan2
+    assert "InArrow" not in plan2
 
 
 def test_long_window_plan_is_native(spark):
@@ -118,7 +118,7 @@ def test_long_window_plan_is_native(spark):
     spec = WindowSpec(["k"], "ts", "rows", None, tiebreak=["id"])
     out = long_window_agg(df, spec, [Agg("sum", "v", "s")])
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "MapInPandas" not in plan
+    assert "Python" not in plan and "MapInArrow" not in plan
 
 
 BOUNDED_AGGS = [
@@ -190,7 +190,7 @@ def test_bounded_range_plan_native_and_routed(spark):
                             quantiles=4, hot_threshold=10,  # every key "hot"
                             native_when_cold=False, bounded_impl="subtract")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan
+    assert "InArrow" not in plan
     exact = window_agg(df, spec, [Agg("sum", "v", "s"), Agg("count", None, "c")],
                        impl="kernel").orderBy("id").toPandas()
     _assert_frame_equal(exact, out.orderBy("id").toPandas(), ("s", "c"))

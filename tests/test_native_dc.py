@@ -1,5 +1,5 @@
 """Native (pure-JVM) exact distinct_count for ROWS frames — the
-event-difference plan — against the kernel, plus the row_key payload
+event-difference plan — against the kernel, plus its row_key payload
 bypass and the cold-path native routing in window_agg_skewed."""
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ def test_native_dc_matches_kernel(spark, prec):
         equal_nan=True)
     plan = window_agg(df, spec, AGGS, impl="auto")._jdf \
         .queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan  # auto picks the zero-Python plan
+    assert "InArrow" not in plan  # auto picks the zero-Python plan
 
 
 def test_skewed_cold_path_goes_native(spark):
@@ -61,9 +61,9 @@ def test_skewed_cold_path_goes_native(spark):
     spec = WindowSpec(["k"], "ts", "rows", 5, tiebreak=["id"])
     aggs = [Agg("distinct_count", "v", "dv"), Agg("count", None, "c")]
     cold = window_agg_skewed(df, spec, aggs, quantiles=3, hot_threshold=10_000)
-    assert "InPandas" not in cold._jdf.queryExecution().executedPlan().toString()
+    assert "InArrow" not in cold._jdf.queryExecution().executedPlan().toString()
     hot = window_agg_skewed(df, spec, aggs, quantiles=3, hot_threshold=10)
-    assert "InPandas" not in hot._jdf.queryExecution().executedPlan().toString()
+    assert "InArrow" not in hot._jdf.queryExecution().executedPlan().toString()
     a = cold.orderBy("id").toPandas()
     b = hot.orderBy("id").toPandas()
     for c in ("dv", "c"):
@@ -71,13 +71,19 @@ def test_skewed_cold_path_goes_native(spark):
 
 
 def test_row_key_payload_bypass_identical(spark):
-    """row_key: the kernel runs on a projected frame (no text) and the
-    features join back — output identical to the full-frame kernel."""
+    """row_key: the native distinct_count event plan (unbounded or
+    >256-row frames) runs on a projection without the text payload and
+    joins its features back — output identical to the full-frame plan.
+    The kernel route accepts row_key but needs no join-back."""
     df = _df(spark, n=300)
-    spec = WindowSpec(["k"], "ts", "rows", 4, tiebreak=["id"])
-    aggs = [Agg("entropy", "tool", "e"), Agg("sum", "v", "s")]
-    a = window_agg(df, spec, aggs, impl="kernel").orderBy("id").toPandas()
-    b = window_agg(df, spec, aggs, impl="kernel", row_key=["id"]) \
-        .orderBy("id").toPandas()
+    spec = WindowSpec(["k"], "ts", "rows", None, tiebreak=["id"])
+    aggs = [Agg("distinct_count", "tool", "d"), Agg("sum", "v", "s")]
+    a = window_agg(df, spec, aggs, impl="native").orderBy("id").toPandas()
+    slim = window_agg(df, spec, aggs, impl="native", row_key=["id"])
+    assert "Join" in slim._jdf.queryExecution().optimizedPlan().toString()
+    b = slim.orderBy("id").toPandas()
     assert list(a.columns) == list(b.columns)
     pd.testing.assert_frame_equal(a, b)
+    spec4 = WindowSpec(["k"], "ts", "rows", 4, tiebreak=["id"])
+    ker = window_agg(df, spec4, [Agg("entropy", "tool", "e")], impl="kernel", row_key=["id"])
+    assert "Join" not in ker._jdf.queryExecution().optimizedPlan().toString()

@@ -1,6 +1,6 @@
 """Native-route coverage of the §2.2 frame-attribute matrix (round 4):
 every ROWS shape and every ROWS_RANGE end-bound shape evaluates
-natively (no InPandas nodes) and matches the Arrow kernel row-for-row
+natively (no MapInArrow nodes) and matches the Arrow kernel row-for-row
 on tie-heavy data with NULL values and NULL order keys.
 
 Modes (window._native_frame_info): 'exact' (plain ANSI offsets),
@@ -93,7 +93,7 @@ def test_native_matches_kernel(tie_df, name, spec, aggs):
     assert _native_expressible(spec, aggs, None, tie_df), f"{name} should route native"
     nat = window_agg(tie_df, spec, aggs, impl="native")
     plan = nat._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "Python" not in plan
+    assert "InArrow" not in plan and "Python" not in plan
     cols = ["k", "i"] + [a.name for a in aggs]
     got = _rows(nat, cols)
     want = _rows(window_agg(tie_df, spec, aggs, impl="kernel"), cols)
@@ -117,7 +117,7 @@ def test_native_window_union(spark, tie_df):
         aggs = [Agg("sum", "v", "sm"), Agg("count", "v", "c")]
         nat = window_agg(prim, spec, aggs, union=[u], impl="auto")
         plan = nat._jdf.queryExecution().executedPlan().toString()
-        assert "InPandas" not in plan and "Python" not in plan
+        assert "InArrow" not in plan and "Python" not in plan
         cols = ["k", "i", "sm", "c"]
         got = _rows(nat, cols)
         want = _rows(window_agg(prim, spec, aggs, union=[u], impl="kernel"), cols)

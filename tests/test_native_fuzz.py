@@ -49,8 +49,10 @@ def _data(spark, kind: str = "mixed"):
                 else:
                     ts = None if i % 19 == 18 else (i // 3) * 1000
                 v = None if i % 7 == 0 else float(i % 11)
-                rows.append((f"k{k}", i, ts, v))
-        df = (spark.createDataFrame(rows, "k string, i long, ts long, v double")
+                # a tiebreak with NULLs, ordered against i where set
+                tb = None if i % 4 == 1 else 1000 - i
+                rows.append((f"k{k}", i, ts, v, tb))
+        df = (spark.createDataFrame(rows, "k string, i long, ts long, v double, tb long")
               .withColumn("hot", F.col("i") % 3 == 0).cache())
         df.count()
         _DF_CACHE[kind] = df
@@ -74,7 +76,8 @@ def frame_specs(draw):
         open_end=draw(st.booleans()),
         exclude_current_time=draw(st.booleans()),
         exclude_current_row=draw(st.booleans()),
-        tiebreak=["i"],
+        # NULL tb values sort first; i makes the order total
+        tiebreak=draw(st.sampled_from([["i"], ["tb", "i"]])),
     )
     return WindowSpec(["k"], "ts", **kwargs)
 
@@ -96,7 +99,7 @@ def test_native_equals_kernel_fuzz(spark, spec, idxs, with_union, data_kind):
         union = [df.filter(F.col("i") % 2 == 0)]
         df = df.filter(F.col("i") % 2 == 1)
         nat = window_agg(df, spec, aggs, union=union, impl="auto")
-        assume("InPandas" not in
+        assume("InArrow" not in
                nat._jdf.queryExecution().executedPlan().toString())
         ker = window_agg(df, spec, aggs, union=union, impl="kernel")
     else:

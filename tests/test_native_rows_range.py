@@ -42,7 +42,7 @@ def test_native_rows_range_matches_kernel(spark):
     ]
     nat = window_agg(df, spec, aggs, impl="auto")
     plan = nat._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "InPandas" not in plan, \
+    assert "Python" not in plan and "InArrow" not in plan, \
         "rows_range sum/count/avg should route native"
     assert plan.count("Exchange") == 1, "cum+before must share one exchange"
     cols = ["k", "i", "c", "sm", "av", "cw", "sw", "lg", "call"]
@@ -69,4 +69,4 @@ def test_non_correctable_aggs_stay_on_kernel(spark):
     spec = WindowSpec(["k"], "ts", "rows_range", 5000, tiebreak=["i"])
     out = window_agg(df, spec, [Agg("min", "v", "mn")], impl="auto")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" in plan, "min is not prefix-invertible — kernel path"
+    assert "MapInArrow" in plan, "min is not prefix-invertible — kernel path"

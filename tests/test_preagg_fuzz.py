@@ -53,6 +53,22 @@ def _mk(spark, rows):
     return spark.createDataFrame(rows, "k string, ts long, i long, v double")
 
 
+def _full(spark):
+    """The whole history as one cached DataFrame, built once per session."""
+    if "full" not in _DF:
+        _DF["full"] = _mk(spark, _rows()).cache()
+    return _DF["full"]
+
+
+def _expected(spark, bucket_ms):
+    """The full-history recompute depends only on the bucket width, so
+    each width's answer is computed once per session."""
+    key = ("expected", bucket_ms)
+    if key not in _DF:
+        _DF[key] = _canon(long_window_agg(_full(spark), SPEC, AGGS, bucket_ms=bucket_ms))
+    return _DF[key]
+
+
 def _canon(df):
     out = []
     for r in df.select("k", "ts", "i", "a_sum", "a_cnt", "a_avg",
@@ -85,15 +101,14 @@ def test_chunked_appends_equal_full_recompute(spark, tmp_path_factory,
         if b > lo:
             chunks.append(rows[lo:b])
             lo = b
-    full = _mk(spark, rows)
+    full = _full(spark)
 
     state_dir = str(tmp_path_factory.mktemp("pa") / "state")
     t = PreAggTable.create(spark, state_dir, SPEC, AGGS, bucket_ms=bucket_ms)
     got = []
     for c in chunks:
         got.extend(_canon(t.append(_mk(spark, c))))
-    exp = _canon(long_window_agg(full, SPEC, AGGS, bucket_ms=bucket_ms))
-    assert sorted(got) == exp
+    assert sorted(got) == _expected(spark, bucket_ms)
 
     # append_tail of already-seen data is a no-op generation
     before = sum(g["pairs"] for g in t.meta["generations"])

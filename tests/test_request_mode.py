@@ -103,7 +103,7 @@ def test_request_zero_leakage_and_native_plan(spark, transcripts):
     history = _prep(transcripts.filter(F.col("turn_idx") != 5))
     out = request_features(requests, history, "ts", [_fw()])
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "Python" not in plan
+    assert "InArrow" not in plan and "Python" not in plan
     base = {(r["conv_id"], r["turn_idx"]): (r["n_10"], r["tools_10"]) for r in out.collect()}
 
     # adding FUTURE history (after every anchor) must not change anything

@@ -125,7 +125,7 @@ def test_salted_native_route_zero_python(spark, transcripts):
     spec = WindowSpec(["conv_id"], "ts", "rows", 7, tiebreak=["turn_idx"])
     out = window_agg_skewed(transcripts, spec, AGGS, quantiles=3, hot_threshold=50)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "ArrowEvalPython" not in plan, plan[:2000]
+    assert "InArrow" not in plan and "ArrowEvalPython" not in plan, plan[:2000]
 
 
 def test_salted_kernel_route_for_non_native(spark, transcripts):

@@ -45,7 +45,7 @@ def test_unbounded_rows_range_dc_routes_native(spark):
     ]
     out = window_agg_skewed(ev, spec, aggs, quantiles=4, hot_threshold=50)
     p = _plan(out)
-    assert "Python" not in p and "InPandas" not in p, \
+    assert "Python" not in p and "InArrow" not in p, \
         "unbounded dc should be zero-Python"
     cols = ["event_id", "cnt", "s", "dt"]
     got = _rows(out, cols)
@@ -67,7 +67,7 @@ def test_unbounded_dc_null_counts_type_default(spark):
     spec = WindowSpec(["k"], "ts", "rows", None)
     out = window_agg(df, spec, [Agg("distinct_count", "v", "dc")])
     p2 = _plan(out)
-    assert "Python" not in p2 and "InPandas" not in p2
+    assert "Python" not in p2 and "InArrow" not in p2
     got = {r["ts"]: r["dc"] for r in out.collect()}
     # ts=0: {a} → 1; ts=1: {a, ''} → 2; stays 2 afterwards
     assert got == {0: 1, 1: 2, 2: 2, 3: 2, 4: 2, 5: 2}
@@ -85,7 +85,7 @@ def test_unbounded_maxsize_canonicalizes_to_rows(spark):
                           exclude_current_row=ocr, tiebreak=["i"])
         aggs = [Agg("sum", "v", "sm"), Agg("count", "v", "c")]
         nat = window_agg(df, spec, aggs, impl="auto")
-        assert "InPandas" not in _plan(nat)
+        assert "InArrow" not in _plan(nat)
         cols = ["k", "i", "sm", "c"]
         assert _rows(nat, cols) == _rows(
             window_agg(df, spec, aggs, impl="kernel"), cols)

@@ -106,7 +106,7 @@ def test_auto_picks_native_for_plain_rows(spark, transcripts):
     spec = SPECS["rows_5"]
     df = window_agg(transcripts, spec, [Agg("sum", "turn_idx", "s")], impl="auto")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan, "auto should pick the native path"
+    assert "MapInArrow" not in plan, "auto should pick the native path"
 
 
 def test_stddev_var_median(spark, transcripts, tpdf):
