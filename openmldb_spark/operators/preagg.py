@@ -35,6 +35,15 @@ appending *generations*:
 - state is read with the schema recorded at the first write, so a read
   starts no schema-inference job; write statistics (pairs, watermark,
   row count) are observed on the write itself, so no read-back job.
+- state reads: up to ``_SMALL_PAIRS`` merged (key, bucket) pairs — the
+  bound under which reads broadcast the partials anyway — the merged
+  partials are kept on the driver as a local relation, one copy per
+  state version. Every write (``ingest``, ``append``, ``compact``) bumps
+  the version; the next read collects the generations' merge once, and
+  reads until the next write plan against that copy (no parquet scan,
+  no merge shuffle). Above the bound every read merges the generations
+  in Spark. The route is logged on the ``openmldb_spark`` logger at the
+  state's first read and whenever it changes.
 
 Scale shape: an append over D new rows touches O(D) raw data + the
 partials table (keys × buckets rows — KBs per TB of raw history). The
@@ -76,6 +85,20 @@ __all__ = ["PreAggTable", "serve_long_window", "long_window_serveable"]
 _META = "_preagg_meta.json"
 _WM = "__pa_max_ord__"
 _log = logging.getLogger("openmldb_spark")
+# partials are keys × buckets — metadata-sized against raw history. Up
+# to this many (key, bucket) pairs reads broadcast them and the merged
+# copy stays on the driver; above it, reads stay distributed.
+_SMALL_PAIRS = 2_000_000
+_NAN = object()
+
+
+def _hkey(values) -> tuple:
+    """Dict key for a tuple of collected Spark values with Spark's
+    grouping equality: NULL matches NULL (``eqNullSafe``) and NaN
+    matches NaN."""
+    return tuple(_NAN if isinstance(v, float) and v != v
+                 else bytes(v) if isinstance(v, bytearray) else v
+                 for v in values)
 
 
 def _check_spec(spec: WindowSpec, aggs: list[Agg]) -> None:
@@ -114,6 +137,11 @@ class PreAggTable:
         self.bucket_ms = int(self.meta["bucket_ms"])
         sch = self.meta.get("schema")
         self._schema = T.StructType.fromJson(sch) if sch else None
+        # writes so far; the driver-resident merged partials are
+        # [version, local DataFrame, own-bucket watermark index or None]
+        self._version = 0
+        self._resident = None
+        self._route = None
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -152,16 +180,62 @@ class PreAggTable:
 
     def partials(self) -> DataFrame | None:
         """Merged (key, bucket) partials across all generations —
-        the pre-agg table a long-window query plans against."""
+        the pre-agg table a long-window query plans against. Under the
+        small-state bound this is the driver-resident copy, collected
+        once per state version."""
+        version = self._version  # before the listing: a racing write re-collects
         dirs = self._gen_dirs()
         if not dirs:
             return None
+        small = self._small()
+        route = "resident" if small else "distributed"
+        if route != self._route:
+            self._route = route
+            _log.info("pre-agg %s: %s reads (%d pairs, bound %d)", self.dir,
+                      route, self._pairs(), _SMALL_PAIRS)
+        if not small:
+            return self._merged(dirs)
+        if self._resident is None or self._resident[0] != version:
+            # the JVM driver collects the merge and keeps it as a local
+            # relation: later plans read it without a scan or a job
+            merged = self._merged(dirs)._jdf
+            local = self.spark._jsparkSession.createDataFrame(
+                merged.collectAsList(), merged.schema())
+            self._resident = [version, DataFrame(local, self.spark), None]
+        return self._resident[1]
+
+    def _merged(self, dirs: list[str]) -> DataFrame:
         keys = list(self.spec.partition_by)
         raw = self._read(dirs)
         if len(dirs) == 1:
             return raw
         return raw.groupBy(*keys, _B).agg(*merge_exprs(self.aggs),
                                           F.max(_WM).alias(_WM))
+
+    def bucket_watermarks(self, pairs: DataFrame) -> dict:
+        """Own-bucket watermark (``__pa_max_ord__``) of stored (key,
+        bucket) pairs, keyed by ``_hkey((*key values, bucket))`` of
+        collected values. ``pairs`` (the partition-key columns and
+        ``__lw_bucket__``) names the pairs wanted: a resident state
+        answers from its copy without evaluating it; a distributed one
+        runs one semi-join restricted to them."""
+        P = self.partials()
+        if P is None:
+            return {}
+        if self._small():  # P is the resident copy; index it once
+            if self._resident[2] is None:
+                self._resident[2] = self._index(P)
+            return self._resident[2]
+        keys = list(self.spec.partition_by)
+        cond = reduce(and_, [F.col(f"p.{k}").eqNullSafe(F.col(f"q.{k}")) for k in keys],
+                      F.col(f"p.{_B}") == F.col(f"q.{_B}"))
+        return self._index(P.alias("p").join(F.broadcast(pairs.alias("q")), cond,
+                                             "left_semi"))
+
+    def _index(self, P: DataFrame) -> dict:
+        keys = list(self.spec.partition_by)
+        return {_hkey(row[:-1]): row[-1]
+                for row in P.select(*keys, _B, _WM).collect()}
 
     def _read(self, dirs: list[str]) -> DataFrame:
         reader = self.spark.read
@@ -195,7 +269,7 @@ class PreAggTable:
         else:
             keys = list(self.spec.partition_by)
             ord_ms = _order_ms(df, self.spec.order_by)
-            wside = F.broadcast(wmk) if self._carry_small() else wmk
+            wside = F.broadcast(wmk) if self._small() else wmk
             new = (df.join(wside, on=keys, how="left")
                    .filter(F.col("__pa_wm__").isNull() | (ord_ms > F.col("__pa_wm__")))
                    .drop("__pa_wm__"))
@@ -261,7 +335,7 @@ class PreAggTable:
                 .rowsBetween(Window.unboundedPreceding, 0))
         carry = (allb.select(*keys, _S, *carry_exprs(aggs, wcum))
                  .filter(F.col(_S) % 2 == 0))
-        if self._carry_small():
+        if self._small():
             carry = F.broadcast(carry)
         joined = (work.withColumn(_S, F.col(_B) * 2)
                   .join(carry, on=keys + [_S], how="left"))
@@ -326,29 +400,32 @@ class PreAggTable:
         if wm is not None:
             self.meta["watermark_ms"] = wm if old is None else max(old, wm)
         self._save_meta()
+        self._version += 1
 
-    def _carry_small(self) -> bool:
-        # partials are keys × buckets — metadata-sized vs raw history;
-        # broadcast unless the manifest says the state itself is huge
-        pairs = sum(g["pairs"] for g in self.meta["generations"])
-        return pairs <= 2_000_000
+    def _pairs(self) -> int:
+        return sum(g["pairs"] for g in self.meta["generations"])
+
+    def _small(self) -> bool:
+        # the manifest's pair count bounds the merged state from above
+        return self._pairs() <= _SMALL_PAIRS
 
     # -- maintenance ------------------------------------------------------------
 
     def compact(self) -> int:
         """Fold all generations into one (bounded metadata / read
         fan-in); returns the number of merged (key, bucket) rows."""
-        merged = self.partials()
-        if merged is None or len(self.meta["generations"]) <= 1:
-            return 0 if merged is None else self.meta["generations"][0]["pairs"]
+        dirs = self._gen_dirs()
+        if len(dirs) <= 1:
+            return self._pairs()
         tmp = os.path.join(self.dir, "_compact_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
-        entry, _ = self._write(merged, "_compact_tmp")
-        for g in self._gen_dirs():
+        entry, _ = self._write(self._merged(dirs), "_compact_tmp")
+        for g in dirs:
             shutil.rmtree(g)
         os.rename(tmp, os.path.join(self.dir, "gen=0"))
         self.meta["generations"] = [{**entry, "dir": "gen=0"}]
         self._save_meta()
+        self._version += 1
         return entry["pairs"]
 
 
@@ -415,11 +492,15 @@ def serve_long_window(requests, history, state: PreAggTable,
       bucket, under a pushable global time bound;
     - when no request needs raw rows, the history join is not planned.
 
-    One small collected job over (requests ⋈ partials) counts the requests
-    that need raw rows; the plan then joins the partials once per
-    request for both the carry and the raw-edge flag. The decision is
-    logged on the ``openmldb_spark`` logger as ``raw edge: k of n
-    requests``.
+    The driver decides which requests need raw rows: it collects the
+    batch's keys, order ms and buckets (a serving batch of thousands of
+    rows; one built from local data collects without a job) and looks
+    up each own bucket's ``__pa_max_ord__`` with
+    ``PreAggTable.bucket_watermarks`` — from the state's driver-resident
+    copy under the small-state bound. The plan then joins the partials
+    (that same copy, broadcast) once per request for both the carry and
+    the raw-edge flag. The decision is logged on the ``openmldb_spark``
+    logger as ``raw edge: k of n requests``.
 
     Frames: UNBOUNDED..CURRENT ROW, or bounded ROWS_RANGE [t-Δ, t].
     Returns ``requests`` with one column per aggregate appended."""
@@ -429,12 +510,11 @@ def serve_long_window(requests, history, state: PreAggTable,
     edge_cols = ["__lo__", "__b0__"] if bounded else []
 
     a_ms = _order_ms(requests, spec.order_by)
-    r = (requests
-         .withColumn("__a__", a_ms)
-         .withColumn("__b__", (F.col("__a__") / F.lit(W)).cast("long")))
+    r_new = [a_ms.alias("__a__"), (a_ms / F.lit(W)).cast("long").alias("__b__")]
     if bounded:
-        r = r.withColumn("__lo__", F.col("__a__") - F.lit(int(spec.preceding)))
-        r = r.withColumn("__b0__", (F.col("__lo__") / F.lit(W)).cast("long"))
+        lo = a_ms - F.lit(int(spec.preceding))
+        r_new += [lo.alias("__lo__"), (lo / F.lit(W)).cast("long").alias("__b0__")]
+    r = requests.select("*", *r_new)
     r_cols = [req_id, *keys, "__a__", "__b__", *edge_cols]
     pcols = partial_cols(aggs)
 
@@ -450,24 +530,26 @@ def serve_long_window(requests, history, state: PreAggTable,
         # partials are metadata-sized relative to history, but at
         # 10^12-turn scale keys × buckets can still exceed broadcast
         # limits — broadcast only under the recorded pair count
-        Pside = F.broadcast(P.alias("p")) if state._carry_small() else P.alias("p")
+        Pside = F.broadcast(P.alias("p")) if state._small() else P.alias("p")
         pb, rb = F.col(f"p.{_B}"), F.col("r.__b__")
 
-        # ---- which requests need raw rows (one small collected job)
+        # ---- which requests need raw rows, decided on the driver over
+        # the collected batch (a serving batch: a local one collects
+        # without a job) and the state's own-bucket watermarks
+        batch = r.select(*keys, "__a__", "__b__", *edge_cols[1:]).collect()
         if bounded:  # the lower edge bucket is always read raw
-            st = r.agg(F.count(F.lit(1)).alias("n"),
-                       F.min(F.col("__b0__") * F.lit(W)).alias("g")).collect()[0]
-            n_raw = st["n"]
+            n_raw = len(batch)
+            gmin = min((q["__b0__"] for q in batch if q["__b0__"] is not None),
+                       default=None)
         else:
-            newer = F.col(f"p.{_WM}") > F.col("r.__a__")
-            st = (r.alias("r").join(Pside, on_keys("r", "p") & (pb == rb), "left")
-                  .agg(F.count(F.lit(1)).alias("n"),
-                       F.count(F.when(newer, 1)).alias("k"),
-                       F.min(F.when(newer, rb * F.lit(W))).alias("g"))
-                  .collect()[0])
-            n_raw = st["k"]
-        gmin = st["g"]
-        _log.info("raw edge: %d of %d requests", n_raw, st["n"])
+            wm = state.bucket_watermarks(r.select(*keys, F.col("__b__").alias(_B)))
+            raw_b = [q["__b__"] for q in batch
+                     if (w := wm.get(_hkey(q[:len(keys)] + (q["__b__"],)))) is not None
+                     and w > q["__a__"]]
+            n_raw, gmin = len(raw_b), min(raw_b, default=None)
+        if gmin is not None:
+            gmin *= W
+        _log.info("raw edge: %d of %d requests", n_raw, len(batch))
 
         # ---- carry: partials of every bucket in frame that is read
         # whole, and the flag of an own bucket that is read raw. The
@@ -508,15 +590,17 @@ def serve_long_window(requests, history, state: PreAggTable,
         edge = edge.select(F.col(req_id),
                            *[F.col(c).alias(f"__edg_{c}") for c in pcols])
 
-    # ---- fold: carry ⊕ edge ⊕ the request row itself (current row)
+    # ---- fold: carry ⊕ edge ⊕ the request row itself (current row),
+    # one select; a carry or edge that was not planned reads NULL
     if edge is not None:
         out = out.join(edge, on=req_id, how="left")
-    for pre in ("__car_", "__edg_"):
-        for c in pcols:
-            if f"{pre}{c}" not in out.columns:
-                out = out.withColumn(f"{pre}{c}", F.lit(None))
+    have = set(out.columns)
+
+    def part(name: str):
+        return F.col(name) if name in have else F.lit(None)
 
     int_wrap = (T.ByteType, T.ShortType, T.IntegerType)
+    feats = []
     for i, a in enumerate(aggs):
         base = a.func[:-6] if a.func.endswith("_where") else a.func
         own = F.col(a.col) if a.col else F.lit(1)
@@ -524,14 +608,13 @@ def serve_long_window(requests, history, state: PreAggTable,
         own = F.when(gate.eqNullSafe(F.lit(True)), own)
         rt = _result_type(a, requests.schema[a.col].dataType if a.col
                           else T.LongType())
-        cs, cc, cm = f"__car___s{i}__", f"__car___c{i}__", f"__car___m{i}__"
-        es, ec, em = f"__edg___s{i}__", f"__edg___c{i}__", f"__edg___m{i}__"
+        cs, cc, cm = (part(f"__car___{x}{i}__") for x in "scm")
+        es, ec, em = (part(f"__edg___{x}{i}__") for x in "scm")
         if base in ("sum", "avg"):
-            s = (F.coalesce(F.col(cs), F.lit(0)) + F.coalesce(F.col(es), F.lit(0))
+            s = (F.coalesce(cs, F.lit(0)) + F.coalesce(es, F.lit(0))
                  + F.coalesce(own, F.lit(0)))
-            s = F.when(F.col(cs).isNotNull() | F.col(es).isNotNull()
-                       | own.isNotNull(), s)
-            c = (F.coalesce(F.col(cc), F.lit(0)) + F.coalesce(F.col(ec), F.lit(0))
+            s = F.when(cs.isNotNull() | es.isNotNull() | own.isNotNull(), s)
+            c = (F.coalesce(cc, F.lit(0)) + F.coalesce(ec, F.lit(0))
                  + F.when(own.isNotNull(), 1).otherwise(0))
             if base == "avg":
                 e = F.when(c > 0, s.cast("double") / c)
@@ -545,11 +628,11 @@ def serve_long_window(requests, history, state: PreAggTable,
                 else:
                     e = s.cast(rt)
         elif base == "count":
-            e = (F.coalesce(F.col(cc), F.lit(0)) + F.coalesce(F.col(ec), F.lit(0))
+            e = (F.coalesce(cc, F.lit(0)) + F.coalesce(ec, F.lit(0))
                  + F.when(own.isNotNull(), 1).otherwise(0)).cast("long")
         elif base == "min":
-            e = F.least(F.col(cm), F.col(em), own.cast(rt)).cast(rt)
+            e = F.least(cm, em, own.cast(rt)).cast(rt)
         else:
-            e = F.greatest(F.col(cm), F.col(em), own.cast(rt)).cast(rt)
-        out = out.withColumn(a.name, e)
-    return out.select(*requests.columns, *[a.name for a in aggs])
+            e = F.greatest(cm, em, own.cast(rt)).cast(rt)
+        feats.append(e.alias(a.name))
+    return out.select(*requests.columns, *feats)

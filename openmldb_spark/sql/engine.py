@@ -2063,7 +2063,10 @@ class SqlEngine:
         Every other change rebuilds it from ``hist``: DELETE, LOAD,
         ``register``, a TTL'd table, a re-DEPLOY, a table replaced
         outside the engine. Each choice is logged on the
-        ``openmldb_spark`` logger."""
+        ``openmldb_spark`` logger. Each write (ingest, compaction,
+        rebuild) retires the state's driver-resident copy of its merged
+        partials; the next request collects it once, and requests until
+        the next write read that copy instead of the generations."""
         import logging
         import shutil
         import tempfile

@@ -314,3 +314,135 @@ def test_long_windows_ttl_and_joined_history(spark, caplog):
     assert [m for m in _messages(caplog) if "rebuild" in m] == [
         "long_windows d/w: rebuild: ttl table (10 rows)",
         "long_windows dj/w: rebuild: joined history changed (10 rows)"]
+
+
+# ---- parity of the driver-side raw-edge decision and the resident state
+
+def _insert_null_key(engines, rows):
+    vals = ", ".join(f"(NULL, {t}, {v}, 'user')" for t, v in rows)
+    for e in engines:
+        e.sql(f"insert into conv_hist values {vals}")
+
+
+def _collect_nullable(df):
+    """``_collect`` for rows that may hold NULL keys."""
+    cols = [c for c in df.columns if c not in ("role",)]
+    return sorted((tuple(r[c] for c in cols) for r in df.select(*cols).collect()), key=repr)
+
+
+def _route_messages(caplog):
+    return [m for m in _messages(caplog) if m.startswith("pre-agg ")]
+
+
+@pytest.fixture(params=["resident", "distributed"])
+def route(request, monkeypatch):
+    """Serve from the driver-resident partials, or — with the small-state
+    bound at 0 — from the distributed merge and a semi-join lookup."""
+    if request.param == "distributed":
+        from openmldb_spark.operators import preagg
+
+        monkeypatch.setattr(preagg, "_SMALL_PAIRS", 0)
+    return request.param
+
+
+def test_long_windows_null_key_newer_own_bucket(engines, spark, caplog, route):
+    """A NULL partition key matches the stored NULL-key partials
+    null-safely: its own bucket holds a newer row, so it is read raw."""
+    opt, base = engines
+    opt.sql(f'DEPLOY d OPTIONS(long_windows="w:1h") {_SQL}')
+    base.sql(f"DEPLOY d {_SQL}")
+    _insert(engines, _hist_rows(0, 20))
+    _insert_null_key(engines, [(3 * HOUR + 600_000, 5.0), (3 * HOUR + 2_400_000, 7.0)])
+    caplog.set_level(logging.INFO, logger="openmldb_spark")
+    reqs = _reqs(spark, [(None, 3 * HOUR + 1_200_000, 1.0, "user"),
+                         ("c1", 20 * HOUR, 2.0, "user")])
+    got = _collect_nullable(opt.request("d", reqs))
+    assert got == _collect_nullable(base.request("d", reqs))
+    assert {r[0]: r[2] for r in got}[None] == 6.0  # 5 + itself, not 7
+    assert "raw edge: 1 of 2 requests" in _messages(caplog)
+    assert [m.split(": ", 1)[1].split(" (")[0] for m in _route_messages(caplog)] \
+        == [f"{route} reads"]
+
+
+def test_long_windows_integer_partition_key(spark, route):
+    out = []
+    for opts in ('OPTIONS(long_windows="w:1h") ', ""):
+        e = _engine(spark)
+        e.sql("create table ints (k int, ts bigint, v double)")
+        e.sql("insert into ints values " + ", ".join(
+            f"({i % 3}, {i * 1_000_000}, {float(i)})" for i in range(40)))
+        e.sql(f"DEPLOY d {opts}SELECT k, ts, sum(v) OVER w AS sv, count(v) OVER w AS cv, "
+              "min(v) OVER w AS mn FROM ints WINDOW w AS (PARTITION BY k ORDER BY ts "
+              "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
+        # inside stored buckets (raw), past every stored row, unseen key
+        reqs = spark.createDataFrame(
+            [(0, 8_000_000, 1.0), (1, 50_000_000, 2.0), (7, 5_000_000, 3.0)],
+            "k int, ts bigint, v double")
+        out.append(sorted(e.request("d", reqs).collect(), key=str))
+    assert out[0] == out[1]
+
+
+def test_long_windows_request_at_bucket_watermark(engines, spark, caplog, route):
+    """A request at exactly its own bucket's newest stored order ms
+    reads that bucket whole from the partials (watermark ≤ request)."""
+    opt, base = engines
+    opt.sql(f'DEPLOY d OPTIONS(long_windows="w:1h") {_SQL}')
+    base.sql(f"DEPLOY d {_SQL}")
+    _insert(engines, _hist_rows(0, 20))
+    caplog.set_level(logging.INFO, logger="openmldb_spark")
+    # c1's newest row (bucket 5) is at 19·17 min; c2's newest in bucket 6
+    # is at 10·40 min
+    reqs = _reqs(spark, [("c1", 19 * 17 * 60_000, 1.0, "user"),
+                         ("c2", 10 * 40 * 60_000, 2.0, "user")])
+    assert _collect(opt.request("d", reqs)) == _collect(base.request("d", reqs))
+    assert "raw edge: 0 of 2 requests" in _messages(caplog)
+    caplog.clear()
+    behind = _reqs(spark, [("c2", 10 * 40 * 60_000 - 1, 2.0, "user")])
+    assert _collect(opt.request("d", behind)) == _collect(base.request("d", behind))
+    assert _messages(caplog) == ["raw edge: 1 of 1 requests"]
+
+
+def test_long_windows_bounded_frame_parity(engines, spark, caplog, route):
+    """A bounded ROWS_RANGE frame reads every request's lower edge
+    bucket raw, NULL keys included."""
+    opt, base = engines
+    opt.sql(f'DEPLOY d OPTIONS(long_windows="w:1h") {_SQL_BOUNDED}')
+    base.sql(f"DEPLOY d {_SQL_BOUNDED}")
+    _insert(engines, _hist_rows(0, 30))
+    _insert_null_key(engines, [(4 * HOUR, 5.0), (5 * HOUR + 1, 7.0)])
+    caplog.set_level(logging.INFO, logger="openmldb_spark")
+    reqs = _reqs(spark, [(None, 6 * HOUR, 1.0, "user"),
+                         ("c1", 5 * HOUR + 1, 50.0, "user"),
+                         ("c2", 7 * HOUR, 60.0, "user"),
+                         ("c3", 7 * HOUR, 70.0, "user")])
+    assert _collect_nullable(opt.request("d", reqs)) == _collect_nullable(base.request("d", reqs))
+    assert "raw edge: 4 of 4 requests" in _messages(caplog)
+
+
+def test_long_windows_route_logged_when_it_changes(engines, spark, caplog, monkeypatch):
+    """The read route is logged at the state's first read and when the
+    state crosses the small-state bound, and at no other time."""
+    from openmldb_spark.operators import preagg
+
+    opt, base = engines
+    opt.sql(f'DEPLOY d OPTIONS(long_windows="w:1h") {_SQL}')
+    base.sql(f"DEPLOY d {_SQL}")
+    _insert(engines, _hist_rows(0, 20))
+    caplog.set_level(logging.INFO, logger="openmldb_spark")
+    req = _reqs(spark, [("c1", 30 * HOUR, 1.0, "user"), ("c2", 30 * HOUR, 2.0, "user")])
+    assert _collect(opt.request("d", req)) == _collect(base.request("d", req))
+    state = opt._lw_states[("d", "w")]["t"]
+    pairs = state._pairs()
+    assert _route_messages(caplog) == [
+        f"pre-agg {state.dir}: resident reads ({pairs} pairs, bound {preagg._SMALL_PAIRS})"]
+
+    monkeypatch.setattr(preagg, "_SMALL_PAIRS", pairs)
+    caplog.clear()
+    _insert(engines, [("c1", 6 * HOUR, 3.0, "user")])  # a new (key, bucket) pair
+    assert _collect(opt.request("d", req)) == _collect(base.request("d", req))
+    assert _route_messages(caplog) == [
+        f"pre-agg {state.dir}: distributed reads ({pairs + 1} pairs, bound {pairs})"]
+    caplog.clear()
+    _insert(engines, [("c1", 29 * HOUR, 4.0, "user")])
+    assert _collect(opt.request("d", req)) == _collect(base.request("d", req))
+    assert _route_messages(caplog) == []

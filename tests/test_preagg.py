@@ -13,7 +13,9 @@ import os
 import pandas as pd
 import pytest
 
-from openmldb_spark.operators.long_window import long_window_agg
+from pyspark.sql import functions as F
+
+from openmldb_spark.operators.long_window import long_window_agg, merge_exprs
 from openmldb_spark.operators.preagg import PreAggTable
 from openmldb_spark.operators.window import Agg, WindowSpec
 
@@ -143,3 +145,34 @@ def test_rejects_non_decomposable(spark, tmp_path):
     with pytest.raises(ValueError, match="non-decomposable"):
         PreAggTable.create(spark, str(tmp_path / "s"), SPEC,
                            [Agg("distinct_count", "v", "d")])
+
+
+def _partials_rows(df):
+    cols = ["k", "__lw_bucket__", *sorted(c for c in df.columns if c.startswith("__")
+                                          and c != "__lw_bucket__")]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_partials_follow_every_write(spark, tmp_path):
+    """The driver-resident partials equal a fresh merge of the written
+    generations after every write, and stay one copy between writes."""
+    c1, c2, c3 = _dataset()
+    t = PreAggTable.create(spark, str(tmp_path / "state"), SPEC, AGGS, bucket_ms=HOUR)
+
+    def fresh():
+        dirs = [os.path.join(t.dir, g["dir"]) for g in t.meta["generations"]]
+        return (spark.read.parquet(*dirs).groupBy("k", "__lw_bucket__")
+                .agg(*merge_exprs(AGGS), F.max("__pa_max_ord__").alias("__pa_max_ord__")))
+
+    seen = []
+    for write in (lambda: t.ingest(_mkdf(spark, c1)),
+                  lambda: t.append(_mkdf(spark, c2)),
+                  lambda: t.ingest(_mkdf(spark, c3)),
+                  t.compact):
+        write()
+        P = t.partials()
+        assert _partials_rows(P) == _partials_rows(fresh())
+        assert t.partials() is P  # no write since: the same copy
+        assert all(P is not q for q in seen)
+        seen.append(P)
+    assert len(t.meta["generations"]) == 1
