@@ -12,7 +12,6 @@ import os
 
 import pandas as pd
 import pytest
-
 from pyspark.sql import functions as F
 
 from openmldb_spark.operators.long_window import long_window_agg, merge_exprs
