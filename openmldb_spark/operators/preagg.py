@@ -35,10 +35,9 @@ appending *generations*:
 - state is read with the schema recorded at the first write, so a read
   starts no schema-inference job; write statistics (pairs, watermark,
   row count) are observed on the write itself, so no read-back job.
-- state reads: up to ``_SMALL_PAIRS`` merged (key, bucket) pairs — the
-  bound under which reads broadcast the partials anyway — the merged
-  partials are kept on the driver as a local relation, one copy per
-  state version. Every write (``ingest``, ``append``, ``compact``) bumps
+- state reads: while the state holds at most ``_RESIDENT_PAIRS`` (key,
+  bucket) pairs, the merged partials are kept on the driver as a local
+  relation, one copy per state version. Every write (``ingest``, ``append``, ``compact``) bumps
   the version; the next read collects the generations' merge once, and
   reads until the next write plan against that copy (no parquet scan,
   no merge shuffle). Above the bound every read merges the generations
@@ -86,9 +85,17 @@ _META = "_preagg_meta.json"
 _WM = "__pa_max_ord__"
 _log = logging.getLogger("openmldb_spark")
 # partials are keys × buckets — metadata-sized against raw history. Up
-# to this many (key, bucket) pairs reads broadcast them and the merged
-# copy stays on the driver; above it, reads stay distributed.
+# to this many (key, bucket) pairs reads broadcast them.
 _SMALL_PAIRS = 2_000_000
+# Up to this many pairs the merged partials also stay on the driver. A
+# copy costs O(pairs) at every state version (collect, local relation,
+# watermark index) and in each plan that reads it, so it pays only for
+# small states. tools/preagg_residency.py on a 4-vCPU VM, local[4], mean
+# of two runs' median s, distributed → resident: an INSERT of 50 rows and
+# two 500-row requests 2.00 → 1.83 at 10^4 pairs, 2.13 → 1.91 at 2·10^4,
+# 2.16 → 2.62 at 5·10^4; a 50-row PreAggTable.append 1.91 → 1.93 at
+# 10^4, 1.86 → 2.09 at 2·10^4.
+_RESIDENT_PAIRS = 10_000
 _NAN = object()
 
 
@@ -180,29 +187,30 @@ class PreAggTable:
 
     def partials(self) -> DataFrame | None:
         """Merged (key, bucket) partials across all generations —
-        the pre-agg table a long-window query plans against. Under the
-        small-state bound this is the driver-resident copy, collected
+        the pre-agg table a long-window query plans against. Under
+        ``_RESIDENT_PAIRS`` this is the driver-resident copy, collected
         once per state version."""
         version = self._version  # before the listing: a racing write re-collects
         dirs = self._gen_dirs()
         if not dirs:
             return None
-        small = self._small()
-        route = "resident" if small else "distributed"
+        pairs = self._pairs()
+        route = "resident" if pairs <= _RESIDENT_PAIRS else "distributed"
         if route != self._route:
             self._route = route
             _log.info("pre-agg %s: %s reads (%d pairs, bound %d)", self.dir,
-                      route, self._pairs(), _SMALL_PAIRS)
-        if not small:
+                      route, pairs, _RESIDENT_PAIRS)
+        if route == "distributed":
             return self._merged(dirs)
-        if self._resident is None or self._resident[0] != version:
+        res = self._resident
+        if res is None or res[0] != version:
             # the JVM driver collects the merge and keeps it as a local
             # relation: later plans read it without a scan or a job
             merged = self._merged(dirs)._jdf
             local = self.spark._jsparkSession.createDataFrame(
                 merged.collectAsList(), merged.schema())
-            self._resident = [version, DataFrame(local, self.spark), None]
-        return self._resident[1]
+            res = self._resident = [version, DataFrame(local, self.spark), None]
+        return res[1]
 
     def _merged(self, dirs: list[str]) -> DataFrame:
         keys = list(self.spec.partition_by)
@@ -212,25 +220,24 @@ class PreAggTable:
         return raw.groupBy(*keys, _B).agg(*merge_exprs(self.aggs),
                                           F.max(_WM).alias(_WM))
 
-    def bucket_watermarks(self, pairs: DataFrame) -> dict:
-        """Own-bucket watermark (``__pa_max_ord__``) of stored (key,
-        bucket) pairs, keyed by ``_hkey((*key values, bucket))`` of
-        collected values. ``pairs`` (the partition-key columns and
-        ``__lw_bucket__``) names the pairs wanted: a resident state
-        answers from its copy without evaluating it; a distributed one
-        runs one semi-join restricted to them."""
-        P = self.partials()
-        if P is None:
-            return {}
-        if self._small():  # P is the resident copy; index it once
-            if self._resident[2] is None:
-                self._resident[2] = self._index(P)
-            return self._resident[2]
+    def bucket_watermarks(self, P: DataFrame, wanted: DataFrame, bucket: str) -> dict:
+        """Own-bucket watermark (``__pa_max_ord__``) of the (key, bucket)
+        pairs of ``P``, a result of ``partials()``, keyed by
+        ``_hkey((*key values, bucket))`` of collected values. ``wanted``
+        holds the pairs asked for, as the partition-key columns and the
+        bucket column ``bucket``. The resident copy answers from an index
+        of itself, built once per copy, without evaluating ``wanted``;
+        any other ``P`` runs one semi-join restricted to those pairs."""
+        res = self._resident
+        if res is not None and res[1] is P:  # the index describes P itself
+            if res[2] is None:
+                res[2] = self._index(P)
+            return res[2]
         keys = list(self.spec.partition_by)
+        q = wanted.select(*keys, F.col(bucket).alias(_B)).alias("q")
         cond = reduce(and_, [F.col(f"p.{k}").eqNullSafe(F.col(f"q.{k}")) for k in keys],
                       F.col(f"p.{_B}") == F.col(f"q.{_B}"))
-        return self._index(P.alias("p").join(F.broadcast(pairs.alias("q")), cond,
-                                             "left_semi"))
+        return self._index(P.alias("p").join(F.broadcast(q), cond, "left_semi"))
 
     def _index(self, P: DataFrame) -> dict:
         keys = list(self.spec.partition_by)
@@ -497,7 +504,7 @@ def serve_long_window(requests, history, state: PreAggTable,
     rows; one built from local data collects without a job) and looks
     up each own bucket's ``__pa_max_ord__`` with
     ``PreAggTable.bucket_watermarks`` — from the state's driver-resident
-    copy under the small-state bound. The plan then joins the partials
+    copy up to ``_RESIDENT_PAIRS``. The plan then joins the partials
     (that same copy, broadcast) once per request for both the carry and
     the raw-edge flag. The decision is logged on the ``openmldb_spark``
     logger as ``raw edge: k of n requests``.
@@ -536,13 +543,13 @@ def serve_long_window(requests, history, state: PreAggTable,
         # ---- which requests need raw rows, decided on the driver over
         # the collected batch (a serving batch: a local one collects
         # without a job) and the state's own-bucket watermarks
-        batch = r.select(*keys, "__a__", "__b__", *edge_cols[1:]).collect()
         if bounded:  # the lower edge bucket is always read raw
+            batch = r.select("__b0__").collect()
             n_raw = len(batch)
-            gmin = min((q["__b0__"] for q in batch if q["__b0__"] is not None),
-                       default=None)
+            gmin = min((q[0] for q in batch if q[0] is not None), default=None)
         else:
-            wm = state.bucket_watermarks(r.select(*keys, F.col("__b__").alias(_B)))
+            batch = r.select(*keys, "__a__", "__b__").collect()
+            wm = state.bucket_watermarks(P, r, "__b__")
             raw_b = [q["__b__"] for q in batch
                      if (w := wm.get(_hkey(q[:len(keys)] + (q["__b__"],)))) is not None
                      and w > q["__a__"]]

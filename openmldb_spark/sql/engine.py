@@ -2065,8 +2065,9 @@ class SqlEngine:
         outside the engine. Each choice is logged on the
         ``openmldb_spark`` logger. Each write (ingest, compaction,
         rebuild) retires the state's driver-resident copy of its merged
-        partials; the next request collects it once, and requests until
-        the next write read that copy instead of the generations."""
+        partials; while the state is within the residency bound the next
+        request collects it once, and requests until the next write read
+        that copy instead of the generations."""
         import logging
         import shutil
         import tempfile

@@ -336,11 +336,13 @@ def _route_messages(caplog):
 
 @pytest.fixture(params=["resident", "distributed"])
 def route(request, monkeypatch):
-    """Serve from the driver-resident partials, or — with the small-state
-    bound at 0 — from the distributed merge and a semi-join lookup."""
+    """Serve from the driver-resident partials, or — with the residency
+    and broadcast bounds at 0 — from the distributed merge and a
+    semi-join lookup."""
     if request.param == "distributed":
         from openmldb_spark.operators import preagg
 
+        monkeypatch.setattr(preagg, "_RESIDENT_PAIRS", 0)
         monkeypatch.setattr(preagg, "_SMALL_PAIRS", 0)
     return request.param
 
@@ -421,7 +423,7 @@ def test_long_windows_bounded_frame_parity(engines, spark, caplog, route):
 
 def test_long_windows_route_logged_when_it_changes(engines, spark, caplog, monkeypatch):
     """The read route is logged at the state's first read and when the
-    state crosses the small-state bound, and at no other time."""
+    state crosses the residency bound, and at no other time."""
     from openmldb_spark.operators import preagg
 
     opt, base = engines
@@ -434,9 +436,9 @@ def test_long_windows_route_logged_when_it_changes(engines, spark, caplog, monke
     state = opt._lw_states[("d", "w")]["t"]
     pairs = state._pairs()
     assert _route_messages(caplog) == [
-        f"pre-agg {state.dir}: resident reads ({pairs} pairs, bound {preagg._SMALL_PAIRS})"]
+        f"pre-agg {state.dir}: resident reads ({pairs} pairs, bound {preagg._RESIDENT_PAIRS})"]
 
-    monkeypatch.setattr(preagg, "_SMALL_PAIRS", pairs)
+    monkeypatch.setattr(preagg, "_RESIDENT_PAIRS", pairs)
     caplog.clear()
     _insert(engines, [("c1", 6 * HOUR, 3.0, "user")])  # a new (key, bucket) pair
     assert _collect(opt.request("d", req)) == _collect(base.request("d", req))

@@ -175,3 +175,27 @@ def test_partials_follow_every_write(spark, tmp_path):
         assert all(P is not q for q in seen)
         seen.append(P)
     assert len(t.meta["generations"]) == 1
+
+
+def test_bucket_watermarks_answer_for_the_copy_given(spark, tmp_path):
+    """A watermark lookup describes the partials it is handed, also when
+    a write has replaced the resident copy since they were read, and
+    leaves the new copy's own index to be built from that copy."""
+    c1, c2, c3 = _dataset()
+    t = PreAggTable.create(spark, str(tmp_path / "state"), SPEC, AGGS, bucket_ms=HOUR)
+    t.ingest(_mkdf(spark, c1))
+    P0 = t.partials()
+    t.ingest(_mkdf(spark, c2 + c3))
+    P1 = t.partials()
+    wanted = P1.select("k", "__lw_bucket__")
+
+    def index(P):
+        return {(r[0], r[1]): r[2]
+                for r in P.select("k", "__lw_bucket__", "__pa_max_ord__").collect()}
+
+    w0 = t.bucket_watermarks(P0, wanted, "__lw_bucket__")
+    w1 = t.bucket_watermarks(P1, wanted, "__lw_bucket__")
+    assert w0 == index(P0)
+    assert w1 == index(P1)
+    assert w0 != w1
+    assert t.bucket_watermarks(P1, wanted, "__lw_bucket__") is w1
