@@ -3,7 +3,9 @@
 Each operator is declarative DataFrame composition: shingling /
 hashing / banding / bucket-join all stay in native Spark expressions,
 so Catalyst handles pushdown and AQE handles the bucket-join skew.
-Scale notes per operator; nothing collects to the driver.
+Scale notes per operator; no operator collects its rows. The one
+intermediate read several times, the shingle table, is a local
+checkpoint that lives as long as the DataFrame reading it.
 
 - ``exact_dedup`` — hash-groupBy on a normalized fingerprint.
 - ``minhash_dedup`` — shingle → k minhashes → LSH bands → bucket join
@@ -24,8 +26,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from openmldb_spark.operators.text import fingerprint
-
-_LAST_PERSIST = []  # bounded cache accretion across repeated calls
 
 
 def _cap_buckets(banded: DataFrame, bucket_col: str, cap: int) -> DataFrame:
@@ -118,26 +118,28 @@ def _grams_from_tokens(tok: Column, n: int) -> Column:
 
 
 def _shingle_table(df: DataFrame, text_col: str, id_col: str, n: int,
-                   words: bool = True) -> tuple[DataFrame, list]:
-    """(__id__, __sh__) shingle table with tokenization evaluated exactly
-    once per row: the token table is persisted (a hard optimizer barrier —
-    CollapseProject would otherwise re-inline the regexp chain into the
-    per-index gram lambda), then grams are built from the cached arrays.
-    Returns the shingle frame plus the persist handles to unpersist."""
+                   words: bool = True) -> DataFrame:
+    """(__id__, __sh__) shingle table, local-checkpointed so its readers
+    (the minhash signature pass and both verify joins; both sides of
+    the n-gram self-join) reuse grams built once. The checkpoint lives
+    as long as the DataFrame that reads it. Tokenization is evaluated
+    once per row: the token array is bound through a single-element
+    ``transform`` (as ``simhash`` does), so the per-index gram lambda
+    reads a lambda variable and CollapseProject cannot re-inline the
+    regexp chain into it (see ``_grams_from_tokens``)."""
     # spread by id hash BEFORE tokenizing: a small parquet scan yields
-    # 1-2 splits, and a persisted table inherits them — every downstream
+    # 1-2 splits, and a checkpoint inherits them — every downstream
     # consumer (signature explode, both verify scans) would then run
     # 2-wide regardless of core count (measured: the whole shingle+sig
     # pipeline pinned to 2 tasks at sf1.0). The exchange moves raw text
     # once; tokenize+gram construction run at full parallelism.
     npart = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    tok = (df.select(F.col(id_col).alias("__id__"), F.col(text_col).alias("__tx__"))
-             .repartition(npart, "__id__")
-             .select("__id__", _tokenize(F.col("__tx__"), words).alias("__tk__"))
-             .persist())
-    sh = (tok.select("__id__", _grams_from_tokens(F.col("__tk__"), n).alias("__sh__"))
-             .filter(F.size("__sh__") > 0))
-    return sh, [tok]
+    grams = F.transform(F.array(_tokenize(F.col("__tx__"), words)),
+                        lambda tk: _grams_from_tokens(tk, n))
+    return (df.select(F.col(id_col).alias("__id__"), F.col(text_col).alias("__tx__"))
+              .repartition(npart, "__id__")
+              .select("__id__", F.element_at(grams, 1).alias("__sh__"))
+              .localCheckpoint(eager=False))
 
 
 def shingles(col, n: int = 3, words: bool = True) -> Column:
@@ -146,7 +148,7 @@ def shingles(col, n: int = 3, words: bool = True) -> Column:
     Column-expression form: tokenization is evaluated O(1) times per row
     (shifted-slice zip_with — lambdas reference only lambda variables),
     not once per shingle index. Prefer ``_shingle_table`` inside
-    operators: a persisted token column is cheaper still."""
+    operators: a checkpointed shingle table is cheaper still."""
     toks = _tokenize(col, words)
     if n <= 1:
         return F.array_distinct(F.filter(toks, lambda g: F.length(g) > 0))
@@ -200,19 +202,7 @@ def minhash_dedup(
     bands × docs rows) and the verify join; no driver materialization.
     """
     rows_per_band = num_hashes // bands
-    # unpersist stale handles BEFORE persisting: a repeated call builds
-    # plan-identical frames, and CacheManager uncaches by plan equality —
-    # unpersisting the old handle after the new persist would silently
-    # wipe the new registration too (then the gram lambda re-inlines the
-    # tokenize chain and the quadratic comes back)
-    while _LAST_PERSIST:
-        _LAST_PERSIST.pop().unpersist(False)
-    sh_df, handles = _shingle_table(df, text_col, id_col, shingle_n)
-    # the shingle table feeds both the signature pass and the exact
-    # verify join — persist so gram construction runs once
-    base = sh_df.persist()
-    handles.append(base)
-    _LAST_PERSIST.extend(handles)
+    base = _shingle_table(df, text_col, id_col, shingle_n)
     # signature: explode shingles + k native min(xxhash64(shingle, seed_i))
     # aggregates — bit-identical to the array-fold minhash_signature but
     # whole-stage-codegen'd with map-side partial aggregation, instead of
@@ -394,11 +384,7 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard similar pairs via shingle explode +
     self-join. Exact but quadratic within shared-shingle buckets — use
     minhash_dedup for discovery at scale, this for verification."""
-    while _LAST_PERSIST:  # stale-first: see minhash_dedup
-        _LAST_PERSIST.pop().unpersist(False)
-    sh, handles = _shingle_table(df, text_col, id_col, n)
-    _LAST_PERSIST.extend(handles)
-    sh = sh.withColumn("__n__", F.size("__sh__"))
+    sh = _shingle_table(df, text_col, id_col, n).withColumn("__n__", F.size("__sh__"))
     ex = sh.select("__id__", "__n__", F.explode("__sh__").alias("__g__"))
     a = ex.select(F.col("__id__").alias("id_a"), F.col("__n__").alias("na"), "__g__")
     b = ex.select(F.col("__id__").alias("id_b"), F.col("__n__").alias("nb"), "__g__")

@@ -19,12 +19,12 @@ Three physical strategies (survey §7.1-3), selectable or auto:
   ``reduceByKey`` keep-max, JoinPlan.scala:176-196). Robust default;
   the join explodes |left_key_rows| × |right_key_rows| before reducing,
   so it degrades on hot keys with many right versions.
-- ``merge_asof`` — co-grouped ``applyInPandas`` running a per-key
-  backward merge (pandas ``merge_asof``): one shuffle of each side on
-  the key, O(n log n) per key, no row explosion. The scalable default
-  at 10^12-row scale for the time-condition case.
+- ``union_asof`` — both sides unioned into one per-key timeline and
+  the newest right row carried forward by a native window: one
+  shuffle, one sort, no row explosion, no Python. The default for the
+  point-in-time shape.
 
-All strategies stay Arrow/JVM-side — no per-row Python.
+All strategies stay JVM-side — no Python.
 """
 
 from __future__ import annotations
@@ -32,9 +32,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-import numpy as np
-import pandas as pd
 
 __all__ = ["last_join"]
 
@@ -50,7 +47,7 @@ def last_join(
     asof_left_ts: str | None = None,
     asof_right_ts: str | None = None,
     strict: bool = False,
-    how: str = "auto",  # 'auto' | 'broadcast' | 'shuffle' | 'union_asof' | 'merge_asof'
+    how: str = "auto",  # 'auto' | 'broadcast' | 'shuffle' | 'union_asof'
     right_prefix: str | None = None,
     prefix_keys: bool = False,
     pick: str = "max",  # 'max' (ordered LAST JOIN) | 'min' (storage-order semantics)
@@ -65,10 +62,12 @@ def last_join(
             (only for broadcast/shuffle strategies).
         asof_left_ts/asof_right_ts: sugar for the point-in-time
             condition ``right.ts <= left.ts`` (strict: ``<``); required
-            by the merge_asof strategy, implied condition for others.
+            by the union_asof strategy, implied condition for others.
         right_prefix: rename right output columns with this prefix to
             avoid collisions (key columns are not duplicated).
     """
+    if how not in ("auto", "broadcast", "shuffle", "union_asof"):
+        raise ValueError(f"unknown last_join strategy {how!r}")
     keys = [(k, k) if isinstance(k, str) else tuple(k) for k in on]
     if how == "auto":
         if asof_left_ts and order_by in (None, asof_right_ts) and condition is None:
@@ -80,11 +79,6 @@ def last_join(
             raise ValueError("union_asof strategy needs asof_left_ts/asof_right_ts")
         return _union_asof_join(left, right, keys, asof_left_ts, asof_right_ts,
                                 strict, right_prefix)
-    if how == "merge_asof":
-        if not (asof_left_ts and asof_right_ts):
-            raise ValueError("merge_asof strategy needs asof_left_ts/asof_right_ts")
-        return _merge_asof_join(left, right, keys, asof_left_ts, asof_right_ts,
-                                strict, right_prefix)
     return _rownum_join(left, right, keys, order_by, condition,
                         asof_left_ts, asof_right_ts, strict,
                         broadcast=(how == "broadcast"), right_prefix=right_prefix,
@@ -94,8 +88,8 @@ def last_join(
 def _renamed_right(right: DataFrame, keys, right_prefix, prefix_keys: bool = False):
     """Right side with output columns renamed; returns (df, outname map).
 
-    Join-key columns keep their names by default (the merge/union
-    strategies group on them); ``prefix_keys`` prefixes them too so the
+    Join-key columns keep their names by default (the union
+    strategy groups on them); ``prefix_keys`` prefixes them too so the
     caller can still address the right side's key values (NULL on
     unmatched rows) — used by the SQL front-end.
     """
@@ -205,7 +199,7 @@ def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix,
     ``allow exact matches``); under ``strict`` left rows sort first.
     Ties among right rows at one ts resolve to the max tiebreak (the
     struct comparison is positional over right columns) — matching the
-    row_number and merge_asof strategies.
+    row_number strategies.
 
     ``exchange=(n, cols)`` hash-partitions the unioned timeline with an
     explicit ``repartition(n, *cols)`` (``cols`` a subset of the join
@@ -263,61 +257,3 @@ def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix,
     )
     return out.select(*left.columns, *right_val_cols)
 
-
-def _merge_asof_join(left, right, keys, lts, rts, strict, right_prefix):
-    """Co-grouped per-key backward as-of merge — the scale path."""
-    if any(lk != rk for lk, rk in keys):
-        right = right.select(*[
-            F.col(c).alias(dict((r, l) for l, r in keys).get(c, c)) for c in right.columns
-        ])
-    key_cols = [lk for lk, _ in keys]
-    right2, m = _renamed_right(right, [(k, k) for k in key_cols], right_prefix)
-    rts_out = m[rts]
-    _check_collisions(left, right2, key_cols, rts_out)
-
-    right_val_cols = [c for c in right2.columns if c not in key_cols]
-    out_fields = list(left.schema.fields) + [
-        right2.schema[c] for c in right_val_cols
-    ]
-    out_schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in out_fields])
-    left_cols = list(left.columns)
-    allow_exact = not strict
-
-    def merge(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(ldf):
-            # keep the Arrow-derived dtypes so empty groups round-trip
-            out = ldf.copy()
-            for c in right_val_cols:
-                out[c] = rdf[c].head(0)
-            return out[left_cols + right_val_cols]
-        lsorted = ldf.sort_values(lts, kind="mergesort")
-        null_ts = lsorted[lts].isna()
-        lsorted = pd.concat([lsorted[~null_ts], lsorted[null_ts]])
-        lvalid = lsorted[~lsorted[lts].isna().to_numpy()]
-        lnull = lsorted[lsorted[lts].isna().to_numpy()]
-        if len(rdf):
-            # sort by (ts, *value cols) so the tie-break at equal right
-            # ts is deterministic and matches the row_number strategies
-            tie = [c for c in right_val_cols if c != rts_out]
-            rsorted = rdf.sort_values([rts_out] + tie, kind="mergesort").dropna(subset=[rts_out])
-        else:
-            rsorted = rdf
-        if len(rsorted) and len(lvalid):
-            merged = pd.merge_asof(
-                lvalid, rsorted[right_val_cols],
-                left_on=lts, right_on=rts_out,
-                direction="backward", allow_exact_matches=allow_exact,
-            )
-        else:
-            merged = lvalid.copy()
-            for c in right_val_cols:
-                merged[c] = None
-        if len(lnull):
-            ln = lnull.copy()
-            for c in right_val_cols:
-                ln[c] = None
-            merged = pd.concat([merged, ln], ignore_index=True)
-        return merged[left_cols + right_val_cols]
-
-    cg = left.groupBy(*key_cols).cogroup(right2.groupBy(*key_cols))
-    return cg.applyInPandas(merge, schema=out_schema)

@@ -262,25 +262,25 @@ class PreAggTable:
 
     def append_tail(self, df: DataFrame) -> None:
         """Idempotent catch-up: ingest only the rows of ``df`` STRICTLY
-        newer than their key's watermark (new keys ingest whole).
-        ``df`` may be the full current table — already-ingested history
-        is filtered by the per-key watermark join, so re-running after
-        new data lands appends only the new buckets. This is the
-        late-data rule of the streaming sink (``preagg_sink``): a row
-        at or below its key's watermark — a same-timestamp or
-        out-of-order row — is dropped. Callers that know which rows
-        are new use ``ingest`` instead, which keeps them all."""
+        newer than their key's watermark (new keys ingest whole; a NULL
+        key matches the NULL key's watermark). ``df`` may be the full
+        current table — already-ingested history is filtered by the
+        per-key watermark join, so re-running after new data lands
+        ingests only the new rows. This is the late-data rule of the
+        streaming sink (``preagg_sink``): a row at or below its key's
+        watermark — a same-timestamp or out-of-order row — is dropped.
+        Callers that know which rows are new use ``ingest`` directly,
+        which keeps them all."""
         wmk = self.key_watermarks()
-        if wmk is None:
-            new = df
-        else:
+        if wmk is not None:
             keys = list(self.spec.partition_by)
             ord_ms = _order_ms(df, self.spec.order_by)
-            wside = F.broadcast(wmk) if self._small() else wmk
-            new = (df.join(wside, on=keys, how="left")
-                   .filter(F.col("__pa_wm__").isNull() | (ord_ms > F.col("__pa_wm__")))
-                   .drop("__pa_wm__"))
-        self.append(new)
+            wside = (F.broadcast(wmk) if self._small() else wmk).alias("w")
+            cond = reduce(and_, [F.col(f"d.{k}").eqNullSafe(F.col(f"w.{k}")) for k in keys])
+            df = (df.alias("d").join(wside, cond, "left")
+                  .filter(F.col("w.__pa_wm__").isNull() | (ord_ms > F.col("w.__pa_wm__")))
+                  .select("d.*"))
+        self.ingest(df)
 
     # -- append ---------------------------------------------------------------
 
@@ -367,8 +367,10 @@ class PreAggTable:
         work, ord_ms = self._bucketed(df)
         rows = Observation()
         work = work.observe(rows, F.count(F.lit(1)).alias("n"))
-        self._write_generation(self._own_partials(work, ord_ms))
-        return int(rows.get["n"])
+        pairs = self._write_generation(self._own_partials(work, ord_ms))
+        # AQE drops a stage that came out empty together with the
+        # observation in it; a generation without pairs had no rows
+        return int(rows.get["n"]) if pairs else 0
 
     def _bucketed(self, df: DataFrame):
         """``df`` without NULL order keys, with its bucket column, and
@@ -400,7 +402,8 @@ class PreAggTable:
                  "wall_sec": round(time.time() - t0, 3)}
         return entry, None if st["wm"] is None else int(st["wm"])
 
-    def _write_generation(self, own: DataFrame) -> None:
+    def _write_generation(self, own: DataFrame) -> int:
+        """Write ``own`` as the next generation; return its pair count."""
         entry, wm = self._write(own, f"gen={len(self.meta['generations'])}")
         self.meta["generations"].append(entry)
         old = self.meta["watermark_ms"]
@@ -408,6 +411,7 @@ class PreAggTable:
             self.meta["watermark_ms"] = wm if old is None else max(old, wm)
         self._save_meta()
         self._version += 1
+        return entry["pairs"]
 
     def _pairs(self) -> int:
         return sum(g["pairs"] for g in self.meta["generations"])

@@ -6,7 +6,10 @@ Reimplements the reference's window skew optimization
 primitives:
 
 1. **Detect** hot keys by per-key row counts (partial-aggregated, one
-   pass; the result is tiny and broadcast back).
+   job). The keys at or over the threshold are collected into a local
+   relation, which decides the route (cold → native, salted
+   BIG or SMALL regime from the exact hot-row count) and is broadcast
+   back as the hot-key side of the salting joins.
 2. **Slice** each hot key's timeline into ``q`` buckets by
    ``percentile_approx`` of the order key (time-quantile salting).
 3. **Expand** context: each bucket i also receives the *frame-relevant*
@@ -18,12 +21,19 @@ primitives:
    ``WindowAggPlan.scala:531-541``).
 4. **Compute** per (key, bucket) with the same kernel as window_agg.
 
+In the BIG regime the intermediates the plan reads more than once (the
+spread hot subset, the ROWS context suffix) are local checkpoints: they
+live exactly as long as the returned DataFrame, and no module state
+tracks them.
+
 AQE's skew handling cannot fix per-key *ordered window* skew (the whole
 key must otherwise be seen by one task), so this operator is what keeps
 a 10%-hot-conversation transcript table scalable at 10^12 turns.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,34 +49,36 @@ from openmldb_spark.operators.window import (
     with_flags,
 )
 
-# persisted hot-subsets of recent skewed-window calls. Bounded FIFO
-# (not unpersist-on-next-call): a multi-window lazy backfill builds
-# several plans before any action runs, and unpersisting window 1's
-# hot cache while building window 2 would force a recompute at action
-# time (VERDICT r3 #10)
-_LAST_HOT = []
-_MAX_HOT_CACHED = 8
-
 __all__ = ["window_agg_skewed", "key_counts"]
 
 _BUCKET = "__skew_bucket__"
+# hot rows from which the salted plan spreads and materializes the hot
+# subset before expanding it (the BIG regime below)
+_BIG_HOT_ROWS = 2_000_000
+
+_log = logging.getLogger("openmldb_spark")
 
 
-def key_counts(df: DataFrame, keys: list[str], cache: bool = True) -> DataFrame:
-    """Per-key row counts (columns ``*keys, __n__``) — the skew
-    statistics table. Compute once and pass to several
+def key_counts(df: DataFrame, keys: list[str], min_n: int,
+               union: list[DataFrame] | None = None) -> DataFrame:
+    """The skew statistics: ``(*keys, __n__)`` for every key with at
+    least ``min_n`` rows in ``df`` ∪ ``union``, collected by one job into
+    a local relation (the hot keys are few by construction; the salted
+    plan broadcasts them). Compute once and pass to several
     ``window_agg_skewed`` calls (or ``backfill_features`` windows) via
-    ``key_stats=`` so a k-window plan runs ONE statistics job instead
-    of k probe scans — the batch analogue of the reference's
-    precomputed ``openmldb.window.skew.opt.config`` distribution table
+    ``key_stats=`` with ``min_n`` the smallest ``hot_threshold`` among
+    them, so a k-window plan runs ONE statistics job instead of k — the
+    batch analogue of the reference's precomputed
+    ``openmldb.window.skew.opt.config`` distribution table
     (WindowAggPlan.scala:245-251)."""
-    out = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n__"))
-    if cache:
-        out = out.persist()
-        _LAST_HOT.append(out)  # same bounded-FIFO lifecycle as hot caches
-        while len(_LAST_HOT) > _MAX_HOT_CACHED:
-            _LAST_HOT.pop(0).unpersist(False)
-    return out
+    src = df.select(*keys)
+    for u in union or []:
+        src = src.unionByName(u.select(*keys))
+    counts = (src.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n__"))
+              .filter(F.col("__n__") >= min_n))._jdf
+    spark = df.sparkSession
+    local = spark._jsparkSession.createDataFrame(counts.collectAsList(), counts.schema())
+    return DataFrame(local, spark)
 
 
 def _order_ms_expr(df: DataFrame, order_by: str):
@@ -102,10 +114,15 @@ def window_agg_skewed(
     route, where window_agg uses it for the distinct_count event plan;
     the salted kernel passes payload columns through its Arrow boundary.
 
-    ``key_stats``: precomputed per-key counts (``key_counts``) shared
-    across calls — replaces this call's own statistics scans, so a
-    k-window backfill pays for ONE distribution job (the reference's
-    ``openmldb.window.skew.opt.config`` pattern)."""
+    ``key_stats``: precomputed statistics (``key_counts`` over ``df`` ∪
+    ``union`` with ``min_n`` ≤ ``hot_threshold``) shared across calls —
+    replaces this call's own statistics job, so a k-window backfill pays
+    for ONE distribution job (the reference's
+    ``openmldb.window.skew.opt.config`` pattern).
+
+    The route decision (cold → native, or salted native|kernel in the
+    BIG|SMALL regime, with the hot-key and hot-row counts it read) is
+    logged on the ``openmldb_spark`` logger."""
     from openmldb_spark.operators.window import canonicalize_spec
 
     spec = canonicalize_spec(spec)
@@ -141,47 +158,28 @@ def window_agg_skewed(
                 df, spec, aggs,
                 bucket_ms=min(max(int(spec.preceding), 1), 3_600_000))
 
-    counts = key_stats if key_stats is not None else None
-    if native_when_cold and not union:
-        from openmldb_spark.operators.window import (
-            _native_expressible, window_agg)
+    # the skew decision reads the collected statistics locally
+    # (the analogue of the reference's skew-config table): when NO key
+    # reaches hot_threshold, salting buys nothing and the pure-JVM
+    # native window plan (zero Python, whole-stage codegen) is strictly
+    # better
+    from openmldb_spark.operators.window import _native_expressible, window_agg
 
-        if _native_expressible(spec, aggs, union, df):
-            # planner-statistics probe (the analogue of the reference's
-            # skew-config decision): one cheap key-count scan — when NO
-            # key reaches hot_threshold, salting buys nothing and the
-            # pure-JVM native window plan (zero Python, whole-stage
-            # codegen) is strictly better. With ``key_stats`` supplied
-            # the probe is a filter on the cached tiny table.
-            if counts is None:
-                # cache=True: the same tiny table is re-read below for
-                # hot_rows and hot_keys — uncached it would re-run the
-                # full per-key groupBy scan up to three times (ADVICE r5)
-                counts = key_counts(df, keys, cache=True)
-            n_hot = (counts.filter(F.col("__n__") >= hot_threshold)
-                     .limit(1).count())
-            if n_hot == 0:
-                return window_agg(df, spec, aggs, impl="native", row_key=row_key)
+    counts = key_stats if key_stats is not None else key_counts(df, keys, hot_threshold, union)
+    hot_stats = counts.filter(F.col("__n__") >= hot_threshold)
+    hot_ns = [r[0] for r in hot_stats.select("__n__").collect()]
+    hot_rows = sum(hot_ns)
+    if native_when_cold and not union and not hot_ns and _native_expressible(spec, aggs, union, df):
+        _log.info("skew %s: cold → native (0 hot keys ≥ %d)", keys, hot_threshold)
+        return window_agg(df, spec, aggs, impl="native", row_key=row_key)
 
     work = with_flags(df, union).withColumn("__oms__", _order_ms_expr(df, spec.order_by))
 
-    # 1. distribution analysis — two passes so the percentile sketch
-    # only runs over HOT keys' rows (a per-key count is a cheap partial
-    # aggregate; sketching every key's timeline is not):
+    # 1. distribution analysis: the percentile sketch runs over the hot
+    # keys' rows only (sketching every key's timeline would not be cheap)
     probs = [i / quantiles for i in range(1, quantiles)]
-    if counts is not None and not union:
-        # reuse the shared statistics table (primary-only is exact:
-        # no union rows to fold in)
-        hot_keys = counts.filter(F.col("__n__") >= hot_threshold).select(*keys)
-    else:
-        hot_keys = (
-            work.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n__"))
-            .filter(F.col("__n__") >= hot_threshold)
-            .select(*keys)
-        )
     dist = (
-        work.join(F.broadcast(hot_keys), on=keys, how="left_semi")
+        work.join(F.broadcast(hot_stats.select(*keys)), on=keys, how="left_semi")
         .groupBy(*keys)
         .agg(F.percentile_approx("__oms__", probs, 1_000).alias("__qs__"))
     )
@@ -200,44 +198,28 @@ def window_agg_skewed(
     tagged = tagged.withColumn(_BUCKET, bucket.cast("int"))
 
     # 3. context expansion (emit=0 copies into later buckets). Copies
-    # derive from the HOT subset only — persisted so the q-1 union
-    # branches don't each re-scan the full table (hot rows are a bounded
-    # fraction by construction, safe to cache even at 10^12 total rows).
-    # Two regimes, decided by the hot-subset size (exact when the
-    # statistics table is at hand, else assume big):
-    # - BIG: repartition the hot subset by (key, bucket) before caching
-    #   (a hot key's rows sit contiguously in source files, so an
-    #   unspread cache serializes every consumer on one scan task) and
-    #   materialize the cache NOW — the q-1 expansion branches below
-    #   are siblings of one union and would otherwise race the
-    #   unmaterialized cache, EACH re-scanning the full input behind
-    #   the hot straggler task (measured: 7 extra full-table stages at
-    #   q=8, 42M rows). The eager job is bounded (hot rows only) and
-    #   precedented — the native_when_cold probe above is one already.
-    # - SMALL (hot subset under ~2M rows): the redundant branch scans
-    #   cost less than the extra shuffle + eager jobs' fixed latency —
-    #   keep the single-pass lazy plan (measured: the eager plan is
-    #   ~2x flagship latency at 660k rows, BENCH.md r5).
-    hot_rows = None
-    if counts is not None:
-        # with union, counts covers the primary side only — union tables
-        # are comparable in practice, so the primary-side estimate still
-        # picks the right regime (ADVICE r5: without it every union call
-        # paid the eager BIG path even on tiny inputs)
-        hot_rows = (counts.filter(F.col("__n__") >= hot_threshold)
-                    .agg(F.sum("__n__")).collect()[0][0]) or 0
-        if union:
-            hot_rows *= 1 + len(union)
-    big = hot_rows is None or hot_rows >= 2_000_000
+    # derive from the HOT subset only. Two regimes, decided by the exact
+    # hot-row count from the statistics:
+    # - BIG: repartition the hot subset by (key, bucket) (a hot key's
+    #   rows sit contiguously in source files, so an unspread subset
+    #   serializes every consumer on one scan task) and checkpoint it
+    #   NOW — the q-1 expansion branches below are siblings of one union
+    #   and would otherwise EACH re-scan the full input behind the hot
+    #   straggler task (measured: 7 extra full-table stages at q=8, 42M
+    #   rows). The eager job is bounded (hot rows only).
+    # - SMALL: the redundant branch scans cost less than the extra
+    #   shuffle + eager jobs' fixed latency — keep the single-pass lazy
+    #   plan with no barrier (measured: the eager plan is ~2x flagship
+    #   latency at 660k rows, BENCH.md r5; a lazy checkpoint still runs
+    #   its map stages at build time — 3 → 6 build jobs on a ROWS_RANGE
+    #   and 2 → 6 on a ROWS skewed window over sf0.01 events, local[4] —
+    #   and was no faster built and run).
+    # A local checkpoint lives as long as the DataFrame that reads it:
+    # Spark's ContextCleaner drops its blocks once the result is gone.
+    big = hot_rows >= _BIG_HOT_ROWS
     hot = tagged.filter(F.col("__qs__").isNotNull())
     if big:
-        hot = hot.repartition(*keys, _BUCKET)
-    hot = hot.persist()
-    _LAST_HOT.append(hot)
-    while len(_LAST_HOT) > _MAX_HOT_CACHED:
-        _LAST_HOT.pop(0).unpersist(False)
-    if big:
-        hot.count()
+        hot = hot.repartition(*keys, _BUCKET).localCheckpoint(eager=True)
     copies = []
     if spec.preceding is None:
         for i in range(1, quantiles):
@@ -275,17 +257,14 @@ def window_agg_skewed(
             F.col("__oms__").desc(), (-F.col(_U)).desc(),
             *[F.col(c).desc() for c in spec.tiebreak]
         )
-        # ONE ranked window over the cached hot subset, then persist
-        # just the per-bucket context suffix (≤ n_rows × buckets ×
-        # hot keys — tiny) so the q-1 branches are filters on a small
-        # cached table instead of q-1 window recomputations
+        # ONE ranked window over the hot subset keeps the per-bucket
+        # context suffix (≤ n_rows × buckets × hot keys — tiny); BIG
+        # checkpoints it so the q-1 branches are filters on a small
+        # materialized table instead of q-1 window recomputations
         ctx = (hot.withColumn("__rk__", F.row_number().over(wdesc))
-               .filter(F.col("__rk__") <= n_rows).drop("__rk__").persist())
-        _LAST_HOT.append(ctx)
-        while len(_LAST_HOT) > _MAX_HOT_CACHED:
-            _LAST_HOT.pop(0).unpersist(False)
+               .filter(F.col("__rk__") <= n_rows).drop("__rk__"))
         if big:
-            ctx.count()  # same race: materialize before the siblings
+            ctx = ctx.localCheckpoint(eager=True)
         for i in range(1, quantiles):
             copies.append(
                 ctx.filter(F.col(_BUCKET) < i)
@@ -294,7 +273,7 @@ def window_agg_skewed(
             )
     # BIG regime: primary buffer = cold rows straight off the scan (the
     # hot file's scan task filters to nothing) ∪ hot rows from the
-    # spread cache — no union branch funnels the hot key through a
+    # spread checkpoint — no union branch funnels the hot key through a
     # single source task. SMALL: single-pass tagged scan.
     expanded = (tagged.filter(F.col("__qs__").isNull()).unionByName(hot)
                 if big else tagged)
@@ -312,13 +291,15 @@ def window_agg_skewed(
     # Arrow↔Python kernel is the scaling ceiling at 32 cores).
     from dataclasses import replace as _dc_replace
 
-    from openmldb_spark.operators.window import (
-        _UNION, _native_expressible, _native_window_agg)
+    from openmldb_spark.operators.window import _UNION, _native_window_agg
 
     spec_b = _dc_replace(
         spec, partition_by=tuple(keys) + (_BUCKET,),
         tiebreak=(("__negu__",) if union else ()) + tuple(spec.tiebreak))
-    if _native_expressible(spec_b, aggs, None, expanded):
+    route = "native" if _native_expressible(spec_b, aggs, None, expanded) else "kernel"
+    _log.info("skew %s: salted %s, %s (%d hot keys, %d hot rows)", keys, route,
+              "BIG" if big else "SMALL", len(hot_ns), hot_rows)
+    if route == "native":
         work_b = (expanded.withColumn("__negu__", -F.col(_UNION))
                   if union else expanded)
         out = _native_window_agg(work_b, spec_b, aggs)

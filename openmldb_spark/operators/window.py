@@ -609,6 +609,17 @@ def _native_distinct_count_rows(df: DataFrame, spec: WindowSpec, agg: Agg,
             .drop("__dc_pos__", "__dc_d__", "__dc_probe__"))
 
 
+# plan choice for small-frame distinct_count: the lag-chain spends ~2n
+# window functions per row regardless of data size — it wins when
+# collect_list's O(frame) per-row allocations become a GC storm
+# (measured 4185 → 2123 task-s at 42M rows, BENCH.md r5) but LOSES
+# ~2.2× task-sec on sub-million-row inputs where allocation pressure is
+# trivial (request_mode 6.9 → 16 task-s, the r5 regression
+# adjudicated in OPTIMIZATION_r06.md). Catalyst's size estimate of the
+# input picks the regime against this bound.
+_DC_LAG_MIN_BYTES = 1 << 30
+
+
 def _native_window_agg(df: DataFrame, spec: WindowSpec, aggs: list[Agg]) -> DataFrame:
     # reference buffer semantics: rows with a NULL order key are
     # neither emitted nor part of any frame (the kernel's NULL-order
@@ -762,23 +773,13 @@ def _native_window_agg(df: DataFrame, spec: WindowSpec, aggs: list[Agg]) -> Data
         cnt = F.count(F.lit(1)).over(w)
         return out.withColumn(a.name, (cnt - rep).cast("long")).drop(dcol)
 
-    # plan choice for small-frame dc is SIZE-ADAPTIVE: the lag-chain
-    # spends ~2n window functions per row regardless of data size — it
-    # wins when collect_list's O(frame) per-row allocations become a GC
-    # storm (measured 4185 → 2123 task-s at 42M rows, BENCH.md r5) but
-    # LOSES ~2.2× task-sec on sub-million-row inputs where allocation
-    # pressure is trivial (request_mode 6.9 → 16 task-s, the r5 driver
-    # regression adjudicated in OPTIMIZATION_r06.md). Catalyst's size
-    # estimate picks the regime; threshold overridable for clusters.
+    # plan choice for small-frame dc is SIZE-ADAPTIVE (_DC_LAG_MIN_BYTES)
     prefer_dc_lag = True
     if small_dc and any(a.func == "distinct_count" for a in aggs):
-        import os as _os
-
-        _lag_min = int(_os.environ.get("OMLDB_DC_LAG_MIN_BYTES", str(1 << 30)))
         try:
             est = int(str(df._jdf.queryExecution().optimizedPlan()
                           .stats().sizeInBytes()))
-            prefer_dc_lag = est >= _lag_min
+            prefer_dc_lag = est >= _DC_LAG_MIN_BYTES
         except Exception:  # noqa: BLE001 — no stats: keep the scale-safe plan
             pass
     for a in aggs:

@@ -169,27 +169,34 @@ def backfill_features(
         [_describe(windows[i]) for i in order if not kernel[i]],
         [_describe(windows[i]) for i in order if kernel[i]])
 
-    # ONE skew-statistics job per distinct partition-key-set, shared by
-    # every skewed window over it (the reference precomputes the same
-    # distribution via openmldb.window.skew.opt.config —
-    # WindowAggPlan.scala:245-251); without this, k skewed windows pay
-    # k probe scans of the full primary table
-    stats_cache: dict[tuple[str, ...], DataFrame] = {}
+    # ONE skew-statistics job per distinct (partition-key-set, union),
+    # shared by every skewed window over it at the smallest of their hot
+    # thresholds (the reference precomputes the same distribution via
+    # openmldb.window.skew.opt.config — WindowAggPlan.scala:245-251);
+    # without this, k skewed windows pay k statistics jobs
+    stats: dict[tuple, DataFrame] = {}
+
+    def stats_key(fw: FeatureWindow) -> tuple:
+        return tuple(fw.spec.partition_by), tuple(map(id, fw.union or ()))
+
     for i in order:
         fw = windows[i]
         if fw.skew:
             from openmldb_spark.operators.skew import key_counts, window_agg_skewed
 
-            kset = tuple(fw.spec.partition_by)
-            if kset not in stats_cache:
-                stats_cache[kset] = key_counts(primary, list(kset))
+            sk = stats_key(fw)
+            # a long-window route reads no statistics
+            if sk not in stats and window_route(out, fw.spec, fw.aggs, fw.union) != "long_window":
+                min_n = min(w.skew_hot_threshold for w in windows
+                            if w.skew and stats_key(w) == sk)
+                stats[sk] = key_counts(primary, list(sk[0]), min_n, fw.union)
             out = window_agg_skewed(
                 out, fw.spec, fw.aggs,
                 quantiles=fw.skew_quantiles,
                 hot_threshold=fw.skew_hot_threshold,
                 union=fw.union,
                 row_key=fw.row_key,
-                key_stats=stats_cache[kset],
+                key_stats=stats.get(sk),
             )
         else:
             out = window_agg(out, fw.spec, fw.aggs, union=fw.union, impl=fw.impl,

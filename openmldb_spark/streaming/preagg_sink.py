@@ -11,14 +11,11 @@ long-window DEPLOY serving path and ``long_window_agg`` reads see the
 updated state immediately after the batch commits.
 
 Ordering: Structured Streaming delivers micro-batches in processing
-order; within the pre-agg contract appends must be per-key
-time-ordered. ``mode="tail"`` (default) uses the idempotent
-``append_tail`` — rows at or below a key's watermark are dropped
-(exactly the late-data rule a watermarked stream would enforce), so
-replayed batches after a failure do not double-count: the state
-commit is idempotent under Structured Streaming's at-least-once
-``foreachBatch`` semantics. ``mode="strict"`` uses ``append`` and
-fails loudly on out-of-order keys instead.
+order. Each batch goes through the idempotent ``append_tail`` — rows
+at or below a key's watermark are dropped (exactly the late-data rule
+a watermarked stream would enforce), so replayed batches after a
+failure do not double-count: the state commit is idempotent under
+Structured Streaming's at-least-once ``foreachBatch`` semantics.
 """
 
 from __future__ import annotations
@@ -31,7 +28,6 @@ __all__ = ["preagg_sink"]
 def preagg_sink(
     stream_df,
     state: PreAggTable,
-    mode: str = "tail",
     checkpoint_dir: str | None = None,
     trigger: dict | None = None,
 ):
@@ -40,14 +36,9 @@ def preagg_sink(
     ``StreamingQuery``. Each micro-batch appends one partial
     generation; call ``state.compact()`` periodically (e.g. from a
     maintenance job) to bound generation count."""
-    if mode not in ("tail", "strict"):
-        raise ValueError(f"unknown preagg_sink mode {mode!r}")
 
     def _sink(batch_df, batch_id: int) -> None:
-        if mode == "tail":
-            state.append_tail(batch_df)
-        else:
-            state.append(batch_df)
+        state.append_tail(batch_df)
 
     writer = stream_df.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:

@@ -53,7 +53,7 @@ def _norm(pdf, cols):
     return out.where(out.notna(), None)
 
 
-@pytest.mark.parametrize("how", ["broadcast", "shuffle", "merge_asof", "union_asof"])
+@pytest.mark.parametrize("how", ["broadcast", "shuffle", "union_asof"])
 def test_asof_last_join_strategies(spark, transcripts, conv_meta, oracle_result, how):
     kwargs = dict(
         on=["conv_id"], order_by="ts",
@@ -74,7 +74,7 @@ def test_strict_less_than(spark, transcripts, conv_meta):
     got = last_join(
         transcripts, conv_meta, on=["conv_id"], order_by="ts",
         asof_left_ts="ts", asof_right_ts="ts", strict=True,
-        right_prefix="m_", how="merge_asof",
+        right_prefix="m_", how="union_asof",
     ).toPandas()
     lpdf = transcripts.toPandas()
     rpdf = conv_meta.toPandas()
@@ -85,6 +85,15 @@ def test_strict_less_than(spark, transcripts, conv_meta):
     e = _norm(exp.rename(columns={"model": "m_model"}), cols)
     assert g["m_model"].tolist() == e["m_model"].tolist()
 
+
+
+def test_unknown_strategy_rejected(spark, transcripts, conv_meta):
+    """A strategy name the operator does not have raises instead of
+    silently running the shuffle plan (``merge_asof`` was deleted)."""
+    with pytest.raises(ValueError, match="merge_asof"):
+        last_join(transcripts, conv_meta, on=["conv_id"], order_by="ts",
+                  asof_left_ts="ts", asof_right_ts="ts", right_prefix="m_",
+                  how="merge_asof")
 
 def test_left_rows_preserved_exactly_once(spark, transcripts, conv_meta):
     got = last_join(
@@ -100,7 +109,7 @@ def test_unmatched_left_rows_null(spark, transcripts, conv_meta):
     covered = {r["conv_id"] for r in conv_meta.select("conv_id").distinct().collect()}
     got = last_join(
         transcripts, conv_meta, on=["conv_id"], order_by="ts",
-        asof_left_ts="ts", asof_right_ts="ts", right_prefix="m_", how="merge_asof",
+        asof_left_ts="ts", asof_right_ts="ts", right_prefix="m_", how="union_asof",
     ).toPandas()
     uncovered = got[~got["conv_id"].isin(covered)]
     assert len(uncovered) > 0, "fixture should leave some convs uncovered"

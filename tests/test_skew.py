@@ -141,3 +141,69 @@ def test_salted_kernel_route_for_non_native(spark, transcripts):
     pn = pd.to_numeric(p["a_ew"], errors="coerce").astype(float).to_numpy()
     sn = pd.to_numeric(s["a_ew"], errors="coerce").astype(float).to_numpy()
     assert np.allclose(pn, sn, equal_nan=True)
+
+
+def _reads(df):
+    """Cached, checkpointed and local relations a fresh plan of ``df``
+    reads (a new Dataset re-runs the cache lookup)."""
+    plan = df.select("*")._jdf.queryExecution().optimizedPlan().toString()
+    return {n: plan.count(n) for n in ("InMemoryRelation", "LogicalRDD", "LocalRelation")}
+
+
+def test_skewed_intermediates_outlive_later_calls(spark, transcripts):
+    """Building more salted windows must not evict what an earlier,
+    not yet run, result reads: its plan keeps every intermediate it read
+    when built alone."""
+    first = window_agg_skewed(transcripts, SPECS[0], AGGS, quantiles=3, hot_threshold=50)
+    alone = _reads(first)
+    later = [window_agg_skewed(
+        transcripts, WindowSpec(["conv_id"], "ts", "rows", n, tiebreak=["turn_idx"]),
+        AGGS, quantiles=3, hot_threshold=50) for n in (5, 9)]
+    assert _reads(first) == alone
+    assert all(_reads(x) == alone for x in later)
+
+
+@pytest.mark.parametrize("spec_idx", [0, 1])
+def test_union_regime_reads_exact_hot_rows(spark, monkeypatch, caplog, spec_idx):
+    """With a WINDOW UNION the regime is decided from the hot key's rows
+    in primary ∪ union, counted, not estimated from the primary side:
+    here the union holds 4× the primary rows of the hot key, so only
+    the exact count (100) reaches the BIG bound. The BIG plan equals
+    the plain kernel."""
+    import logging
+
+    import openmldb_spark.operators.skew as skew_mod
+
+    monkeypatch.setattr(skew_mod, "_BIG_HOT_ROWS", 90)
+    rows = [("h", i * 60_000, i, i % 7) for i in range(20)]
+    rows += [("c", i * 60_000, 100 + i, i % 3) for i in range(5)]
+    urows = [("h", i * 15_000 + 7, 200 + i, i % 5) for i in range(80)]
+    urows += [("c", i * 30_000 + 3, 300 + i, i % 2) for i in range(5)]
+    schema = "conv_id string, ts long, turn_idx long, tool long"
+    df = spark.createDataFrame(rows, schema)
+    union = [spark.createDataFrame(urows, schema)]
+    spec = SPECS[spec_idx]
+    aggs = [Agg("count", None, "a_cnt"), Agg("sum", "turn_idx", "a_sum"),
+            Agg("distinct_count", "tool", "a_dt")]
+    with caplog.at_level(logging.INFO, logger="openmldb_spark"):
+        salted = window_agg_skewed(df, spec, aggs, quantiles=3, hot_threshold=50,
+                                   union=union).toPandas()
+    msgs = [r.getMessage() for r in caplog.records if r.getMessage().startswith("skew ")]
+    assert len(msgs) == 1 and msgs[0].startswith("skew ['conv_id']: salted ")
+    assert msgs[0].endswith(", BIG (1 hot keys, 100 hot rows)")
+    plain = window_agg(df, spec, aggs, union=union, impl="kernel").toPandas()
+    cols = [a.name for a in aggs]
+    p, s = _norm(plain, cols), _norm(salted, cols)
+    assert len(p) == len(s) == 25
+    for c in cols:
+        assert p[c].tolist() == s[c].tolist(), f"spec {spec_idx} col {c}"
+
+
+def test_cold_route_logged(spark, transcripts, caplog):
+    import logging
+
+    spec = SPECS[0]
+    with caplog.at_level(logging.INFO, logger="openmldb_spark"):
+        window_agg_skewed(transcripts, spec, AGGS, quantiles=3, hot_threshold=10**9)
+    msgs = [r.getMessage() for r in caplog.records if r.getMessage().startswith("skew ")]
+    assert msgs == ["skew ['conv_id']: cold → native (0 hot keys ≥ 1000000000)"]

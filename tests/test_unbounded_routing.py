@@ -99,9 +99,9 @@ def test_backfill_single_stats_job(spark, transcripts, conv_meta, monkeypatch):
     calls = []
     real = skew_mod.key_counts
 
-    def spy(df, keys, cache=True):
+    def spy(df, keys, min_n, union=None):
         calls.append(tuple(keys))
-        return real(df, keys, cache=cache)
+        return real(df, keys, min_n, union)
 
     monkeypatch.setattr(skew_mod, "key_counts", spy)
     primary = transcripts.withColumn("__is_tool__", F.col("role") == "tool")
