@@ -21,7 +21,13 @@ mem_catalog.h:234-430``) with two physical strategies:
    per-row Python: frame bounds come from vectorized ``searchsorted``,
    basic aggregates from pandas' C rolling engine with a
    variable-bounds indexer, distinct counts from an amortized
-   two-pointer sweep.
+   two-pointer sweep. Every aggregate is a function of a frame given
+   as index ranges — a buffer segment plus, optionally, the current
+   row — whatever rule picked the range, so one evaluator per
+   aggregate serves every frame type. ``INSTANCE_NOT_IN_WINDOW`` only
+   changes which rows may be buffered: its batches are evaluated over
+   the gathered rows ``[union rows…, emitted rows…]``, with frame
+   bounds counted over the union rows.
 
 Frame semantics reproduced bit-for-bit (survey §2.2):
 
@@ -167,7 +173,6 @@ _WHERE = {f"{f}_where" for f in ("sum", "count", "avg", "min", "max")}
 _CATE = {f"{f}_cate" for f in ("sum", "avg", "count", "min", "max")}
 _CATE_WHERE = {f"{f}_where" for f in _CATE}
 _POSITIONAL = {"lag", "at", "first_value"}
-_GENERIC = {"entropy", "drawdown", "ew_avg", "top", "topn_frequency", "top1_ratio"}
 _NATIVE_OK = _ROLLING | _WHERE | {"lag", "at", "first_value", "distinct_count"}
 
 # top_n_key_*_cate_where / top_n_value_*_cate_where (+ the ratio forms
@@ -894,55 +899,68 @@ def _grouped_ss(ok: np.ndarray, gs: np.ndarray, delta: int, side: str) -> np.nda
     return out
 
 
-def _frame_bounds(spec: WindowSpec, ok: np.ndarray, emit: np.ndarray,
-                  gs: np.ndarray | None = None, gid: np.ndarray | None = None):
-    """Vectorized frame bounds under buffer-order semantics.
+def _frame_bounds(spec: WindowSpec, ok: np.ndarray, gs: np.ndarray, gid: np.ndarray,
+                  buffered: np.ndarray | None = None):
+    """Vectorized frame bounds under buffer-order semantics for a batch
+    of whole key groups (``gs``/``gid``: per-row group start index and
+    group ordinal). Range lookups run over group-offset order keys and
+    ROWS bounds clamp at the group start, so frames never cross groups
+    and no per-group Python loop runs.
 
-    Returns (lo, seg_hi, inc_cur): the frame of row i is the contiguous
-    buffer segment [lo[i], seg_hi[i]] plus (optionally) row i itself.
+    Returns (lo, seg_hi, inc_cur, anchor, first) per batch row: the
+    frame of row i is the contiguous buffer segment [lo[i], seg_hi[i]]
+    plus (where ``inc_cur``) row i itself; ``anchor`` is the buffer
+    position lag/at count back from (the current row, or the first
+    same-order-key row under EXCLUDE CURRENT_TIME) and ``first`` the
+    group's first buffer position.
 
-    With ``gs``/``gid`` (per-row group start index / group id) the same
-    math serves a whole multi-group batch: range lookups run over
-    group-offset order keys and ROWS bounds clamp at the group start,
-    so frames never cross key groups.
+    ``buffered`` marks the rows that may be buffered; every other row
+    is only ever a current row (INSTANCE_NOT_IN_WINDOW: union rows
+    only). Positions then count buffered rows — position p of the
+    buffer is the p-th buffered row of the batch — so ROWS offsets
+    count over buffered rows only, and the current row itself never
+    sits in a segment.
     """
     n = len(ok)
-    idx = np.arange(n, dtype=np.int64)
-    if gs is None:
-        gs = np.zeros(n, dtype=np.int64)
+    idx = np.arange(n + 1, dtype=np.int64)
+    # c[p]: number of buffered rows before batch row p
+    c = idx if buffered is None else np.r_[0, np.cumsum(buffered)]
     margin = abs(int(spec.preceding or 0)) + abs(int(spec.end_preceding or 0))
-    sok = _offset_ok(ok, gid, margin) if gid is not None else ok
+    sok = _offset_ok(ok, gid, margin)
     if sok is None:
         def _ss(delta: int, side: str) -> np.ndarray:
-            return _grouped_ss(ok, gs, delta, side)
+            return c[_grouped_ss(ok, gs, delta, side)]
     else:
         def _ss(delta: int, side: str, _sok=sok) -> np.ndarray:
-            return np.searchsorted(_sok, _sok - delta, side=side)
+            return c[np.searchsorted(_sok, _sok - delta, side=side)]
+    cur = c[:n]
+    first = c[gs]
+    anchor = _ss(0, "left") if spec.exclude_current_time else cur
     has_end = bool(spec.end_preceding) or spec.end_is_offset
+    clamp_hi = cur - 1
     if spec.frame == "rows":
-        first_same = _ss(0, "left") if spec.exclude_current_time else None
-        anchor = first_same if spec.exclude_current_time else idx
         if has_end:
             e = int(spec.end_preceding) + (1 if spec.open_end else 0)
             # a non-positive end offset reaches past the current row;
             # the buffer caps there, so the current row joins the frame
-            # (test_window_row.yaml id=40: ROWS BETWEEN -1 AND -2 PRECEDING)
+            # (test_window_row.yaml id=40: ROWS BETWEEN -1 AND -2
+            # PRECEDING) — unless it is never buffered
             seg_hi = anchor - max(e, 1)
-            inc_cur = np.full(n, e <= 0 and not spec.exclude_current_row)
+            inc_cur = np.full(n, e <= 0 and not spec.exclude_current_row
+                              and buffered is None)
         else:
             seg_hi = anchor - 1
             inc_cur = np.full(n, not spec.exclude_current_row)
         if spec.preceding is None:
-            lo = gs.copy()
+            lo = first
         else:
             # n PRECEDING = n buffered rows before the current position;
             # under EXCLUDE CURRENT_TIME the buffer holds no same-ts rows
             p = int(spec.preceding) - (1 if spec.open_preceding else 0)
             lo = anchor - p
-        clamp_hi = idx - 1
     else:  # rows_range
         if spec.preceding is None:
-            lo = gs.copy()
+            lo = first
         else:
             side = "right" if spec.open_preceding else "left"
             lo = _ss(int(spec.preceding), side)
@@ -951,25 +969,26 @@ def _frame_bounds(spec: WindowSpec, ok: np.ndarray, emit: np.ndarray,
             side_end = "left" if spec.open_end else "right"
             seg_hi = _ss(e, side_end) - 1
             inc_cur = np.zeros(n, dtype=bool)
-            # negative end offset reaches past the current row: the
-            # buffer caps at the current position (current row included
-            # in the segment — test_window_row_range.yaml id=45)
-            clamp_hi = idx if e < 0 else idx - 1
+            if e < 0:
+                # negative end offset reaches past the current row: the
+                # buffer caps at the current position (current row
+                # included in the segment if buffered —
+                # test_window_row_range.yaml id=45)
+                clamp_hi = c[1:] - 1
             if spec.exclude_current_time:
-                seg_hi = np.minimum(seg_hi, _ss(0, "left") - 1)
+                seg_hi = np.minimum(seg_hi, anchor - 1)
         else:
-            if spec.exclude_current_time:
-                seg_hi = _ss(0, "left") - 1
-            else:
-                seg_hi = idx - 1
+            seg_hi = anchor - 1
             inc_cur = np.full(n, not spec.exclude_current_row)
-            clamp_hi = idx - 1
-    lo = np.maximum(lo, gs)
+    lo = np.maximum(lo, first)
     seg_hi = np.minimum(seg_hi, clamp_hi)
     if spec.maxsize:
         cap = int(spec.maxsize) - inc_cur.astype(np.int64)
         lo = np.maximum(lo, seg_hi - cap + 1)
-    return lo, seg_hi, inc_cur
+    # an empty segment is [lo, lo - 1]: a segment end before -1 would
+    # wrap as a negative slice bound in the per-frame evaluators
+    seg_hi = np.maximum(seg_hi, lo - 1)
+    return lo, seg_hi, inc_cur, anchor, first
 
 
 def _rolling_seg(vals: np.ndarray, lo, seg_hi, fn: str) -> np.ndarray:
@@ -984,8 +1003,7 @@ def _rolling_seg(vals: np.ndarray, lo, seg_hi, fn: str) -> np.ndarray:
     return out
 
 
-def _combine(fn: str, seg: np.ndarray, cur: np.ndarray, inc: np.ndarray,
-              seg_cnt: np.ndarray):
+def _combine(fn: str, seg: np.ndarray, cur: np.ndarray, inc: np.ndarray):
     """Merge segment aggregate with the (optional) current row value."""
     cur = np.where(inc, cur, np.nan)
     both = ~np.isnan(seg) & ~np.isnan(cur)
@@ -1000,28 +1018,24 @@ def _combine(fn: str, seg: np.ndarray, cur: np.ndarray, inc: np.ndarray,
     return out
 
 
-def _eval_rolling(agg: Agg, fn: str, vals: np.ndarray, lo, seg_hi, inc_cur,
-                   seg_mask: np.ndarray | None, cur_mask: np.ndarray | None) -> np.ndarray:
+def _eval_rolling(fn: str, vals: np.ndarray, lo, seg_hi, inc_cur,
+                  mask: np.ndarray | None) -> np.ndarray:
     """sum/count/avg/min/max/stddev/var/median (+_where) over the frame.
 
-    ``seg_mask`` gates rows' eligibility when buffered in someone else's
-    frame segment; ``cur_mask`` gates the row's own (current-row)
-    contribution — they differ under INSTANCE_NOT_IN_WINDOW, where
-    primary rows are seg-ineligible but still count as themselves.
-    """
+    ``mask`` is the *_where condition: rows failing it count neither in
+    a segment nor as the current row."""
     v = vals.astype("float64", copy=True)
-    vs = np.where(seg_mask, v, np.nan) if seg_mask is not None else v
-    vc = np.where(cur_mask, v, np.nan) if cur_mask is not None else v
+    vs = np.where(mask, v, np.nan) if mask is not None else v
     nn = (~np.isnan(vs)).astype("float64")
-    inc_nn = inc_cur & ~np.isnan(vc)
+    inc_nn = inc_cur & ~np.isnan(vs)
     if fn == "count":
         seg = _rolling_seg(nn, lo, seg_hi, "sum")
         return np.nan_to_num(seg) + inc_nn
     if fn in ("sum", "min", "max"):
         seg = _rolling_seg(vs, lo, seg_hi, fn)
-        return _combine(fn, seg, vc, inc_cur, None)
+        return _combine(fn, seg, vs, inc_cur)
     if fn == "avg":
-        s = np.nan_to_num(_rolling_seg(vs, lo, seg_hi, "sum")) + np.where(inc_nn, np.nan_to_num(vc), 0.0)
+        s = np.nan_to_num(_rolling_seg(vs, lo, seg_hi, "sum")) + np.where(inc_nn, np.nan_to_num(vs), 0.0)
         c = np.nan_to_num(_rolling_seg(nn, lo, seg_hi, "sum")) + inc_nn
         with np.errstate(invalid="ignore", divide="ignore"):
             return np.where(c > 0, s / c, np.nan)
@@ -1031,9 +1045,8 @@ def _eval_rolling(agg: Agg, fn: str, vals: np.ndarray, lo, seg_hi, inc_cur,
         # both the naive formula and pandas' incremental rolling drift
         mu = float(np.nanmean(v)) if np.isfinite(np.nanmean(v)) else 0.0
         vs = vs - mu
-        vc = vc - mu
-        s1 = np.nan_to_num(_rolling_seg(vs, lo, seg_hi, "sum")) + np.where(inc_nn, np.nan_to_num(vc), 0.0)
-        s2 = np.nan_to_num(_rolling_seg(vs * vs, lo, seg_hi, "sum")) + np.where(inc_nn, np.nan_to_num(vc * vc), 0.0)
+        s1 = np.nan_to_num(_rolling_seg(vs, lo, seg_hi, "sum")) + np.where(inc_nn, np.nan_to_num(vs), 0.0)
+        s2 = np.nan_to_num(_rolling_seg(vs * vs, lo, seg_hi, "sum")) + np.where(inc_nn, np.nan_to_num(vs * vs), 0.0)
         c = np.nan_to_num(_rolling_seg(nn, lo, seg_hi, "sum")) + inc_nn
         with np.errstate(invalid="ignore", divide="ignore"):
             pop_var = s2 / c - (s1 / c) ** 2
@@ -1050,8 +1063,8 @@ def _eval_rolling(agg: Agg, fn: str, vals: np.ndarray, lo, seg_hi, inc_cur,
         out = np.full(len(v), np.nan)
         for i in range(len(v)):
             seg = vs[lo[i]: seg_hi[i] + 1]
-            if inc_cur[i] and not np.isnan(vc[i]):
-                seg = np.append(seg, vc[i])
+            if inc_cur[i] and not np.isnan(vs[i]):
+                seg = np.append(seg, vs[i])
             seg = seg[~np.isnan(seg)]
             if len(seg):
                 out[i] = float(np.median(seg))
@@ -1338,17 +1351,23 @@ def _eval_nth_where(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur) -> np.ndar
 # ---------------------------------------------------------------------------
 
 
+def _sorted_codes(cats: list) -> list[int]:
+    """Category codes in ascending category order (by ``str`` when the
+    categories do not compare)."""
+    try:
+        return sorted(range(len(cats)), key=lambda c: cats[c])
+    except TypeError:
+        return sorted(range(len(cats)), key=lambda c: str(cats[c]))
+
+
 def _cate_frame_inputs(agg: Agg, pdf: pd.DataFrame):
     """Shared factorized inputs for the vectorized *_cate evaluators:
-    (codes, cats, cat_order, vals, ok, col_is_float) where ``ok`` masks
-    rows whose key AND value are non-null."""
-    cate_s = pdf[agg.cate]
-    codes, cats = pd.factorize(cate_s, use_na_sentinel=True)
+    (codes, cats, cat_order, vals, contrib, ok, col_is_float) where
+    ``ok`` masks rows whose key AND value are non-null and ``contrib``
+    those of them that also pass the *_where condition."""
+    codes, cats = pd.factorize(pdf[agg.cate], use_na_sentinel=True)
     cats = list(cats)
-    try:
-        cat_order = sorted(range(len(cats)), key=lambda c: cats[c])
-    except TypeError:
-        cat_order = sorted(range(len(cats)), key=lambda c: str(cats[c]))
+    cat_order = _sorted_codes(cats)
     if agg.col is not None:
         col_s = pdf[agg.col]
         vals = pd.to_numeric(col_s, errors="coerce").to_numpy(dtype="float64")
@@ -1359,23 +1378,21 @@ def _cate_frame_inputs(agg: Agg, pdf: pd.DataFrame):
         null_v = np.zeros(len(pdf), dtype=bool)
         col_is_float = False
     ok = (codes >= 0) & ~null_v
-    return codes, cats, cat_order, vals, ok, col_is_float
+    contrib = ok if agg.cond is None else ok & _bool_mask(pdf[agg.cond])
+    return codes, cats, cat_order, vals, contrib, ok, col_is_float
 
 
 def _eval_topn_cate(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
-                     emit_pos: np.ndarray,
-                     seg_mask: np.ndarray | None = None) -> np.ndarray:
+                    emit_pos: np.ndarray) -> np.ndarray:
     """top_n_{key,value}_{sum,avg,count,min,max,ratio}_cate[_where] —
     vectorized: per-frame numpy slices + bincount per category, no
     per-frame-row Python loop (VERDICT r2 #6)."""
     m = _TOPN_CATE_RE.match(agg.func)
     by_key = m.group(1) == "key"
     base = m.group(2)
-    codes, cats, cat_order, vals, ok, col_is_float = _cate_frame_inputs(agg, pdf)
+    codes, cats, cat_order, vals, contrib, ok, col_is_float = _cate_frame_inputs(agg, pdf)
     key_str = [_fmt_scalar(c) for c in cats]
     ncat = len(cats)
-    cond = _bool_mask(pdf[agg.cond]) if agg.cond is not None else None
-    contrib = ok if cond is None else (ok & cond)
     n = len(pdf)
     out = np.full(n, None, dtype=object)
     topn = int(agg.n)
@@ -1391,20 +1408,10 @@ def _eval_topn_cate(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
         s0, s1 = lo[i], seg_hi[i] + 1
         csl = codes[s0:s1]
         msl = contrib[s0:s1]
-        if seg_mask is not None:
-            # INW eligibility gates buffered rows; the current row is
-            # exempt (but still subject to the *_where cond)
-            sm = seg_mask[s0:s1].copy()
-            if s0 <= i < s1:
-                sm[i - s0] = True
-            msl = msl & sm
         cs = csl[msl]
         add_cur = inc_cur[i] and contrib[i]
         if base == "ratio":
-            osl = ok[s0:s1]
-            if seg_mask is not None:
-                osl = osl & sm
-            call = np.bincount(csl[osl], minlength=ncat)
+            call = np.bincount(csl[ok[s0:s1]], minlength=ncat)
             cnum = np.bincount(cs, minlength=ncat)
             if inc_cur[i] and ok[i]:
                 call[codes[i]] += 1
@@ -1453,18 +1460,16 @@ def _eval_topn_cate(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
 
 
 def _eval_cate_vec(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
-                   emit_pos: np.ndarray,
-                   seg_mask: np.ndarray | None = None) -> np.ndarray:
+                   emit_pos: np.ndarray) -> np.ndarray:
     """``{sum,avg,count,min,max}_cate[_where]`` — vectorized per-frame
-    bincounts (no per-frame-row Python loop, VERDICT r2 #6); rendering
-    follows _eval_generic's rules (keys ascending, 'k:v,...')."""
+    bincounts (no per-frame-row Python loop, VERDICT r2 #6), rendered
+    'k:v,...' with keys ascending; sum/min/max follow the value type
+    (group_query.yaml id=8: 'aa:160' vs 'aa:32.000000'), avg is %f."""
     fn = agg.func
     base = fn[: fn.index("_cate")]
-    codes, cats, cat_order, vals, ok, col_is_float = _cate_frame_inputs(agg, pdf)
+    codes, cats, cat_order, vals, ok, _, col_is_float = _cate_frame_inputs(agg, pdf)
     key_str = [_fmt_scalar(c) for c in cats]
     ncat = len(cats)
-    if seg_mask is not None:
-        ok = ok & seg_mask
     n = len(pdf)
     out = np.full(n, None, dtype=object)
 
@@ -1520,11 +1525,25 @@ def _eval_cate_vec(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
 # frames (slice + bincount + flatnonzero + Python string build per row —
 # profiled 30 s single-threaded over the sf1.0 events); the dense path
 # replaces them with ncat vector passes plus vectorized '%f'/'%d'
-# formatting. Gated: seg_mask-free routes only, and the (ncat × rows)
-# matrix must stay under a memory budget — everything else falls back to
-# the loop evaluators, which remain the semantics reference.
+# formatting. Gated: the (ncat × rows) matrix must stay under a memory
+# budget and float sums under a magnitude bound — everything else falls
+# back to the loop evaluators, which remain the semantics reference.
 
 _DENSE_CELL_BUDGET = 8_000_000
+
+# Magnitude gate for dense float sum/avg. A prefix sum never exceeds
+# S = Σ|x| over the buffer, so each cumsum addition rounds by at most
+# u·S (u = 2^-53, float64's unit roundoff), and a frame sum — the
+# difference of two prefixes — carries their accumulated rounding:
+# about √k·u·S after k additions, k·u·S at worst. S < 2^22 makes
+# u·S < 2^-31 ≈ 4.7e-10, which keeps √k·u·S under 5e-7, half the last
+# digit '%f' prints, up to k ≈ 10^6 rows; a kernel buffer (one Arrow
+# batch plus a carried key group) is ~10^4. At 2e9-sized values over
+# 10^6 rows (S ≈ 1e15) a single addition already rounds by ~0.1, and
+# nearly every frame renders differently from its per-frame sum.
+# Integer-valued inputs sum exactly below 2^53 and stay dense up to
+# there.
+_DENSE_FLOAT_SUM_BOUND = 2.0 ** 22
 
 
 def _win_prefix_diff(ind: np.ndarray, lo_e: np.ndarray, hi1_e: np.ndarray) -> np.ndarray:
@@ -1611,112 +1630,76 @@ def _join_cat_strings(order: list, present: np.ndarray, pieces: dict,
     return res
 
 
+def _sums_exact_enough(vals: np.ndarray, rows: np.ndarray) -> bool:
+    """Whether whole-buffer float64 prefix differences render the frame
+    sums of ``vals[rows]`` like per-frame sums do (see
+    ``_DENSE_FLOAT_SUM_BOUND``)."""
+    v = vals[rows]
+    bound = 2.0 ** 53 if np.array_equal(v, np.floor(v)) else _DENSE_FLOAT_SUM_BOUND
+    return float(np.abs(v).sum()) < bound
+
+
 def _eval_cate_dense(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
                      emit_pos: np.ndarray) -> np.ndarray | None:
-    """Dense {count,sum,avg}_cate[_where]; None → caller falls back."""
-    fn = agg.func
-    base = fn[: fn.index("_cate")]
-    if base not in ("count", "sum", "avg"):
+    """Dense ``{count,sum,avg}_cate[_where]`` (keys ascending, an empty
+    frame is NULL) and by-key ``top_n_key_{count,sum,avg,ratio}_cate
+    [_where]`` (the ``n`` largest keys descending, an empty frame is
+    ''); None → caller falls back to the loop evaluator."""
+    m = _TOPN_CATE_RE.match(agg.func)
+    if m and m.group(1) != "key":
         return None
-    codes, cats, cat_order, vals, ok, col_is_float = _cate_frame_inputs(agg, pdf)
+    base = m.group(2) if m else agg.func[: agg.func.index("_cate")]
+    if base not in ("count", "sum", "avg", "ratio"):
+        return None
+    codes, cats, cat_order, vals, contrib, ok, col_is_float = _cate_frame_inputs(agg, pdf)
     ncat = len(cats)
-    if ncat == 0 or ncat * max(len(emit_pos), 1) > _DENSE_CELL_BUDGET:
+    if ncat == 0 or ncat * len(emit_pos) > _DENSE_CELL_BUDGET:
         return None
-    cond = _bool_mask(pdf[agg.cond]) if agg.cond is not None else None
-    contrib = ok if cond is None else (ok & cond)
+    need_vals = base in ("sum", "avg")
+    if need_vals and not _sums_exact_enough(vals, contrib):
+        return None
     key_str = [_fmt_scalar(c) for c in cats]
+    order = list(reversed(cat_order)) if m else cat_order
     lo_e = lo[emit_pos]
     hi1_e = seg_hi[emit_pos] + 1
-    need_vals = base in ("sum", "avg")
+    codes_e = codes[emit_pos]
     cnt, sums = _cat_matrices(codes, ncat, contrib, lo_e, hi1_e,
                               vals if need_vals else None)
     add_cur = inc_cur[emit_pos] & contrib[emit_pos]
-    codes_e = codes[emit_pos]
     _add_current(cnt, add_cur, codes_e)
     if need_vals:
         _add_current(sums, add_cur, codes_e, add=vals[emit_pos])
     present = cnt > 0
-    if base == "count":
-        pieces = {c: _pieces_int(key_str[c], cnt[:, c]) for c in cat_order}
-    elif base == "avg":
-        with np.errstate(invalid="ignore", divide="ignore"):
-            av = sums / np.maximum(cnt, 1)
-        pieces = {c: _pieces_float(key_str[c], av[:, c]) for c in cat_order}
-    else:  # sum
-        if col_is_float:
-            pieces = {c: _pieces_float(key_str[c], sums[:, c]) for c in cat_order}
-        else:
-            # int-column sums render via str(int(v)); non-integral sums
-            # (can't arise from int inputs) fall back to the loop
-            if not np.all(sums[present] == np.floor(sums[present])):
-                return None
-            si = sums.astype(np.int64)
-            pieces = {c: np.char.mod(key_str[c].replace("%", "%%") + ":%d", si[:, c])
-                      for c in cat_order}
-    res = _join_cat_strings(cat_order, present, pieces)
-    out = np.full(len(pdf), None, dtype=object)
-    vals_out = res.astype(object)
-    vals_out[res == ""] = None
-    out[emit_pos] = vals_out
-    return out
-
-
-def _eval_topn_cate_dense(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
-                          emit_pos: np.ndarray) -> np.ndarray | None:
-    """Dense by-key top_n_key_*_cate[_where] for decomposable bases;
-    None → caller falls back (by-value ordering, min/max, INW masks)."""
-    m = _TOPN_CATE_RE.match(agg.func)
-    by_key = m.group(1) == "key"
-    base = m.group(2)
-    if not by_key or base not in ("count", "sum", "avg", "ratio"):
-        return None
-    codes, cats, cat_order, vals, ok, col_is_float = _cate_frame_inputs(agg, pdf)
-    ncat = len(cats)
-    if ncat == 0 or ncat * max(len(emit_pos), 1) > _DENSE_CELL_BUDGET:
-        return None
-    cond = _bool_mask(pdf[agg.cond]) if agg.cond is not None else None
-    contrib = ok if cond is None else (ok & cond)
-    key_str = [_fmt_scalar(c) for c in cats]
-    desc_order = list(reversed(cat_order))
-    lo_e = lo[emit_pos]
-    hi1_e = seg_hi[emit_pos] + 1
-    codes_e = codes[emit_pos]
-    need_vals = base in ("sum", "avg")
-    cnt, sums = _cat_matrices(codes, ncat, contrib, lo_e, hi1_e,
-                              vals if need_vals else None)
-    add_cur = inc_cur[emit_pos] & contrib[emit_pos]
-    _add_current(cnt, add_cur, codes_e)
-    if need_vals:
-        _add_current(sums, add_cur, codes_e, add=vals[emit_pos])
     if base == "ratio":
         call, _ = _cat_matrices(codes, ncat, ok, lo_e, hi1_e)
         _add_current(call, inc_cur[emit_pos] & ok[emit_pos], codes_e)
         present = call > 0
         with np.errstate(invalid="ignore", divide="ignore"):
             rat = cnt / np.maximum(call, 1)
-        pieces = {c: _pieces_float(key_str[c], rat[:, c]) for c in desc_order}
+        pieces = {c: _pieces_float(key_str[c], rat[:, c]) for c in order}
+    elif base == "count":
+        pieces = {c: _pieces_int(key_str[c], cnt[:, c]) for c in order}
+    elif base == "avg":
+        with np.errstate(invalid="ignore", divide="ignore"):
+            av = sums / np.maximum(cnt, 1)
+        pieces = {c: _pieces_float(key_str[c], av[:, c]) for c in order}
+    elif col_is_float:
+        pieces = {c: _pieces_float(key_str[c], sums[:, c]) for c in order}
     else:
-        present = cnt > 0
-        if base == "count":
-            pieces = {c: _pieces_int(key_str[c], cnt[:, c]) for c in desc_order}
-        elif base == "avg":
-            with np.errstate(invalid="ignore", divide="ignore"):
-                av = sums / np.maximum(cnt, 1)
-            pieces = {c: _pieces_float(key_str[c], av[:, c]) for c in desc_order}
-        else:  # sum — fmt_val: %f for float columns, str(int) otherwise
-            if col_is_float:
-                pieces = {c: _pieces_float(key_str[c], sums[:, c]) for c in desc_order}
-            else:
-                if not np.all(sums[present] == np.floor(sums[present])):
-                    return None
-                si = sums.astype(np.int64)
-                pieces = {c: np.char.mod(key_str[c].replace("%", "%%") + ":%d", si[:, c])
-                          for c in desc_order}
-    topn = int(agg.n)
-    res = _join_cat_strings(desc_order, present, pieces,
-                            limit=topn if topn >= 0 else None)
+        # int-column sums render via str(int(v)); non-integral sums
+        # (can't arise from int inputs) fall back to the loop
+        if not np.all(sums[present] == np.floor(sums[present])):
+            return None
+        si = sums.astype(np.int64)
+        pieces = {c: np.char.mod(key_str[c].replace("%", "%%") + ":%d", si[:, c])
+                  for c in order}
+    topn = int(agg.n) if m else -1
+    res = _join_cat_strings(order, present, pieces,
+                            limit=topn if topn >= 0 else None).astype(object)
+    if not m:
+        res[res == ""] = None
     out = np.full(len(pdf), None, dtype=object)
-    out[emit_pos] = res.astype(object)  # empty frames render '' exactly
+    out[emit_pos] = res
     return out
 
 
@@ -1762,18 +1745,14 @@ def _eval_sliding_dense(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
 
 def _eval_top_vec(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
                   emit_pos: np.ndarray) -> np.ndarray:
-    """``top`` / ``topn_frequency`` — vectorized per-frame bincounts
-    over the factorized value column (the last per-frame Python list
-    builds, VERDICT r3 #5). INSTANCE_NOT_IN_WINDOW frames keep the
-    generic path (seg_mask semantics live there)."""
+    """``top`` (the n largest non-NULL values, descending) and
+    ``topn_frequency`` (the n most frequent, count desc then value asc,
+    'NULL'-padded; an empty frame is '') — per-frame bincounts over the
+    factorized value column (VERDICT r3 #5)."""
     fn = agg.func
-    col_s = pdf[agg.col]
-    codes, cats = pd.factorize(col_s, use_na_sentinel=True)
+    codes, cats = pd.factorize(pdf[agg.col], use_na_sentinel=True)
     cats = list(cats)
-    try:
-        cat_order = sorted(range(len(cats)), key=lambda c: cats[c])
-    except TypeError:
-        cat_order = sorted(range(len(cats)), key=lambda c: str(cats[c]))
+    cat_order = _sorted_codes(cats)
     desc_order = list(reversed(cat_order))
     key_str = [_fmt_scalar(c) for c in cats]
     ok = codes >= 0
@@ -1820,7 +1799,7 @@ def _eval_top_vec(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
 
 
 def _eval_sliding(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
-                   emit_pos: np.ndarray, seg_mask: np.ndarray | None) -> np.ndarray:
+                  emit_pos: np.ndarray) -> np.ndarray:
     """O(n) amortized sliding evaluation — replaces the per-row frame
     rebuild for entropy / ew_avg / top1_ratio (VERDICT r1 'what's wrong'
     #1). Frame segments [lo, seg_hi] are non-decreasing, so a two-pointer
@@ -1832,8 +1811,6 @@ def _eval_sliding(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
 
     if fn == "ew_avg":
         v = pd.to_numeric(col, errors="coerce").to_numpy(dtype="float64")
-        if seg_mask is not None:
-            v = np.where(seg_mask, v, np.nan)
         q = 1.0 - float(agg.param)
         N = D = 0.0
         size = 0
@@ -1875,8 +1852,6 @@ def _eval_sliding(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
 
     # entropy / top1_ratio: factorized counting with O(1) updates
     codes, _ = pd.factorize(col, use_na_sentinel=True)
-    if seg_mask is not None:
-        codes = np.where(seg_mask, codes, -1)
     counts: dict[int, int] = {}
     total = 0
     S = 0.0  # sum of c*log2(c) over groups (entropy)
@@ -1960,115 +1935,19 @@ def _eval_sliding(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
     return out
 
 
-def _eval_generic(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
-                   emit_pos: np.ndarray, seg_mask: np.ndarray | None,
-                   cur_mask: np.ndarray | None = None) -> np.ndarray:
-    """Per-row frame-slice aggregates (cate/top-n/entropy/drawdown/ew_avg).
-
-    Only evaluated at emitted positions; frames are bounded in practice
-    (MAXSIZE / finite preceding), keeping this O(emit × frame).
-    """
-    fn = agg.func
-    if _TOPN_CATE_RE.match(fn):
-        return _eval_topn_cate(agg, pdf, lo, seg_hi, inc_cur, emit_pos,
-                                seg_mask if seg_mask is not cur_mask else None)
-    if fn in ("top", "topn_frequency") and seg_mask is None:
-        return _eval_top_vec(agg, pdf, lo, seg_hi, inc_cur, emit_pos)
-    def _objvals(c):
-        s = pdf[c]
-        if pd.api.types.is_extension_array_dtype(s.dtype):
-            # nullable Int64 etc. — to_numpy() would degrade to float64
-            return s.to_numpy(dtype=object, na_value=None)
-        return s.to_numpy()
-
-    vals = _objvals(agg.col) if agg.col else None
-    cate = _objvals(agg.cate) if agg.cate else None
-    col_is_float = agg.col is not None and pd.api.types.is_float_dtype(pdf[agg.col].dtype)
-    n = len(pdf)
-    out = np.full(n, None, dtype=object)
-    numeric = fn in ("drawdown", "ew_avg")
-    vnum = None
-    if vals is not None and numeric and seg_mask is None:
-        vnum = pd.to_numeric(pdf[agg.col], errors="coerce").to_numpy(dtype="float64")
-
+def _eval_drawdown(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
+                   emit_pos: np.ndarray) -> np.ndarray:
+    """Largest peak-to-trough drop over the frame's non-NULL values in
+    buffer order (the current row last); NULL for an empty frame."""
+    v = pd.to_numeric(pdf[agg.col], errors="coerce").to_numpy(dtype="float64")
+    out = np.full(len(pdf), None, dtype=object)
     for i in emit_pos:
-        idxs = _frame_indices(i, lo, seg_hi, inc_cur)
-        if seg_mask is not None:
-            # the current row is exempt from INSTANCE_NOT_IN_WINDOW but
-            # not from a *_where condition
-            idxs = [j for j in idxs if seg_mask[j] or (j == i and (cur_mask is None or cur_mask[j]))]
-        v = None
-        if vals is not None and numeric:
-            if vnum is not None:
-                # contiguous fast path: numpy slice, no per-element loop
-                v = vnum[lo[i]: seg_hi[i] + 1]
-                if inc_cur[i]:
-                    v = np.append(v, vnum[i])
-            else:
-                v = pd.to_numeric(pd.Series([vals[j] for j in idxs]), errors="coerce").to_numpy(dtype="float64")
-        if fn == "entropy":
-            x = [vals[j] for j in idxs if not _is_na(vals[j])]
-            if x:
-                _, cnts = np.unique(np.array(x, dtype=object).astype(str), return_counts=True)
-                p = cnts / cnts.sum()
-                out[i] = float(-(p * np.log2(p)).sum() + 0.0)  # avoid -0.0
-        elif fn == "drawdown":
-            x = v[~np.isnan(v)]
-            out[i] = float(np.max(np.maximum.accumulate(x) - x)) if len(x) else None
-        elif fn == "ew_avg":
-            x = v[~np.isnan(v)][::-1]  # newest-first weighting
-            if len(x):
-                w = (1.0 - agg.param) ** np.arange(len(x))
-                out[i] = float((x * w).sum() / w.sum())
-        elif fn == "top":
-            x = sorted([vals[j] for j in idxs if not _is_na(vals[j])], reverse=True)
-            out[i] = ",".join(_fmt_scalar(e) for e in x[: agg.n])
-        elif fn == "topn_frequency":
-            # pads to exactly n with 'NULL'; a frame with zero rows
-            # yields '' (Update never ran — feature_zero_def.cc:519)
-            if not idxs:
-                out[i] = ""
-            else:
-                x = [vals[j] for j in idxs if not _is_na(vals[j])]
-                out[i] = _topn_freq_str(x, agg.n)
-        elif fn == "top1_ratio":
-            x = [vals[j] for j in idxs if not _is_na(vals[j])]
-            if not x:
-                out[i] = 0.0  # reference: 0 when no non-null values
-            else:
-                c: dict = {}
-                for t in x:
-                    c[t] = c.get(t, 0) + 1
-                out[i] = max(c.values()) / len(x)
-        elif fn in _CATE or fn in _CATE_WHERE:
-            base = fn[: fn.index("_cate")]
-            pairs: dict = {}
-            for j in idxs:
-                k = cate[j]
-                x = vals[j] if vals is not None else 1.0
-                if _is_na(k) or _is_na(x):
-                    continue
-                pairs.setdefault(k, []).append(x if base == "count" else float(x))
-            items = []
-            try:
-                keys = sorted(pairs)
-            except TypeError:
-                keys = sorted(pairs, key=str)
-            for k in keys:
-                xs = pairs[k]
-                val = {"sum": sum(xs), "avg": sum(xs) / len(xs), "count": len(xs),
-                       "min": min(xs), "max": max(xs)}[base] if base != "count" else len(xs)
-                if base == "count":
-                    items.append(f"{_fmt_scalar(k)}:{int(val)}")
-                elif base == "avg" or col_is_float:
-                    # avg renders as %f; sum/min/max follow the value type
-                    # (group_query.yaml id=8: 'aa:160' vs 'aa:32.000000')
-                    items.append(f"{_fmt_scalar(k)}:{val:f}")
-                else:
-                    items.append(f"{_fmt_scalar(k)}:{int(val) if val == int(val) else val}")
-            out[i] = ",".join(items) if items else None
-        else:
-            raise ValueError(f"unknown generic aggregate: {fn}")
+        x = v[lo[i]: seg_hi[i] + 1]
+        if inc_cur[i]:
+            x = np.append(x, v[i])
+        x = x[~np.isnan(x)]
+        if len(x):
+            out[i] = float(np.max(np.maximum.accumulate(x) - x))
     return out
 
 
@@ -2204,49 +2083,36 @@ def _eval_anchor_pair(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
 
 
 def _eval_minmax_obj(base: str, s: pd.Series, lo, seg_hi, inc_cur,
-                     emit_pos: np.ndarray,
-                     seg_mask: np.ndarray | None = None,
-                     cur_mask: np.ndarray | None = None) -> np.ndarray:
+                     emit_pos: np.ndarray, mask: np.ndarray | None) -> np.ndarray:
     """Lexical min/max over object (string) frames — the rolling C
     engine is numeric-only (function/test_udaf_function.yaml id=54/55:
-    max(string) compares lexically)."""
+    max(string) compares lexically); ``mask`` is the *_where
+    condition."""
     vals = s.to_numpy(dtype=object)
     n = len(s)
     out = np.full(n, None, dtype=object)
     pick = min if base == "min" else max
     for i in emit_pos:
-        idxs = _frame_indices(i, lo, seg_hi, inc_cur)
-        if seg_mask is not None:
-            idxs = [j for j in idxs
-                    if (seg_mask[j] if j != i else (cur_mask is None or cur_mask[j]))]
-        xs = [vals[j] for j in idxs if not _is_na(vals[j])]
+        xs = [vals[j] for j in _frame_indices(i, lo, seg_hi, inc_cur)
+              if (mask is None or mask[j]) and not _is_na(vals[j])]
         out[i] = pick(xs) if xs else None
     return out
 
 
 def _eval_positional(agg: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
-                      ok: np.ndarray | None = None,
-                      exclude_current_time: bool = False,
-                      gs: np.ndarray | None = None) -> pd.Series:
+                      anchor: np.ndarray, first: np.ndarray) -> pd.Series:
     s = pdf[agg.col]
     if agg.func in ("lag", "at"):
+        # offset 0 is the current row; offset n the n-th buffered row
+        # before the anchor (earlier-keyed rows only under EXCLUDE
+        # CURRENT_TIME — window_attributes.yaml id=9), never before the
+        # key group's first buffered row nor after the anchor
         n = len(s)
-        idx = np.arange(n, dtype=np.int64)
-        if gs is None:
-            gs = np.zeros(n, dtype=np.int64)
-        if exclude_current_time and ok is not None:
-            # same-order-key rows are outside the buffer under EXCLUDE
-            # CURRENT_TIME — lag counts only earlier-keyed rows
-            # (window_attributes.yaml id=9); ok is group-offset when
-            # evaluating a multi-group batch
-            anchor = np.searchsorted(ok, ok, side="left")
-        else:
-            anchor = idx
-        idxv = anchor - agg.n
+        pos = np.arange(n, dtype=np.int64) if agg.n == 0 else anchor - agg.n
         vals = s.to_numpy(dtype=object)
         out = np.full(n, None, dtype=object)
-        valid = idxv >= gs  # lag never crosses the key-group boundary
-        out[valid] = vals[idxv[valid]]
+        valid = (pos >= first) & ((pos < anchor) | (agg.n == 0))
+        out[valid] = vals[pos[valid]]
         return pd.Series(out, index=s.index)
     if agg.func == "first_value":
         # reference semantics: NEWEST value in frame (frame buffered
@@ -2301,6 +2167,102 @@ def _group_index(pdf: pd.DataFrame, keys: list[str]):
     gid = np.cumsum(change) - 1
     starts = np.flatnonzero(change)
     return gid, starts[gid]
+
+
+def _eval_aggs(aggs: list[Agg], pdf: pd.DataFrame, lo, seg_hi, inc_cur,
+               emit: np.ndarray, anchor: np.ndarray, first: np.ndarray,
+               tz: str | None) -> dict:
+    """Every aggregate's values over one frame layout (``_frame_bounds``):
+    the frame of row i is the segment [lo[i], seg_hi[i]] of ``pdf`` plus,
+    where ``inc_cur[i]``, row i itself. Only rows with ``emit`` need
+    values; a row outside them may hold anything."""
+    emit_pos = np.flatnonzero(emit)
+    res: dict[str, object] = {}
+    for a in aggs:
+        fn = a.func
+        mask = _bool_mask(pdf[a.cond]) if a.cond is not None else None
+        if a.pair is not None or a.cond_pair is not None:
+            r = _eval_anchor_pair(a, pdf, lo, seg_hi, inc_cur, emit_pos)
+        elif a.split is not None:
+            r = _eval_fz_list(a, pdf, lo, seg_hi, inc_cur, emit_pos, mask)
+        elif fn == "nth_value_where":
+            r = _eval_nth_where(a, pdf, lo, seg_hi, inc_cur)
+        elif _TOPN_CATE_RE.match(fn) or fn in _CATE or fn in _CATE_WHERE:
+            r = _eval_cate_dense(a, pdf, lo, seg_hi, inc_cur, emit_pos)
+            if r is None:
+                loop = _eval_topn_cate if _TOPN_CATE_RE.match(fn) else _eval_cate_vec
+                r = loop(a, pdf, lo, seg_hi, inc_cur, emit_pos)
+        elif fn in ("entropy", "ew_avg", "top1_ratio"):
+            r = _eval_sliding_dense(a, pdf, lo, seg_hi, inc_cur, emit_pos)
+            if r is None:
+                r = _eval_sliding(a, pdf, lo, seg_hi, inc_cur, emit_pos)
+        elif fn in ("top", "topn_frequency"):
+            r = _eval_top_vec(a, pdf, lo, seg_hi, inc_cur, emit_pos)
+        elif fn == "drawdown":
+            r = _eval_drawdown(a, pdf, lo, seg_hi, inc_cur, emit_pos)
+        elif fn in _ROLLING or fn in _WHERE:
+            r = _eval_rolling_col(a, pdf, lo, seg_hi, inc_cur, emit_pos, mask, tz)
+        elif fn == "distinct_count":
+            v = _fill_na_default(pdf[a.col])
+            if mask is not None:
+                v = v.where(pd.Series(mask, index=v.index))
+            r = _eval_distinct(v, lo, seg_hi, inc_cur)
+        elif fn in _POSITIONAL:
+            r = _eval_positional(a, pdf, lo, seg_hi, inc_cur, anchor, first)
+        else:
+            raise ValueError(f"unknown aggregate: {fn}")
+        res[a.name] = r
+    return res
+
+
+def _eval_rolling_col(a: Agg, pdf: pd.DataFrame, lo, seg_hi, inc_cur,
+                      emit_pos: np.ndarray, mask: np.ndarray | None, tz: str | None):
+    """``_eval_rolling`` over one column: timestamps and dates aggregate
+    as epoch ms and convert back, strings take lexical min/max, and a
+    non-numeric column counts its non-NULL values."""
+    base = a.func[: -len("_where")] if a.func.endswith("_where") else a.func
+    col_s = pdf[a.col] if a.col is not None else None
+    is_dt = col_s is not None and pd.api.types.is_datetime64_any_dtype(col_s)
+    is_date = is_str = False
+    if col_s is not None and not is_dt and col_s.dtype == object:
+        nn0 = col_s.dropna()
+        is_date = len(nn0) > 0 and isinstance(nn0.iloc[0], _dt.date) \
+            and not isinstance(nn0.iloc[0], _dt.datetime)
+        is_str = len(nn0) > 0 and isinstance(nn0.iloc[0], str)
+    if is_str and base in ("min", "max"):
+        # lexical min/max over string frames (udaf id=54/55)
+        return _eval_minmax_obj(base, col_s, lo, seg_hi, inc_cur, emit_pos, mask)
+    if is_dt:
+        if tz and tz != "UTC":
+            loc = col_s.dt.tz_localize(tz, ambiguous="NaT", nonexistent="shift_forward")
+            vals = (loc.astype("int64").to_numpy() // 1_000_000).astype("float64")
+        else:
+            vals = _to_order_int64(col_s).astype("float64")
+        vals[col_s.isna().to_numpy()] = np.nan
+    elif is_date:
+        dt64 = pd.to_datetime(col_s, errors="coerce")
+        vals = (dt64.astype("datetime64[ns]").astype("int64") // 1_000_000).astype("float64")
+        vals[dt64.isna().to_numpy()] = np.nan
+    elif a.col and base == "count" and col_s.dtype == object:
+        # count over non-numeric frames (strings, bools in object
+        # arrays) counts NON-NULL values — to_numeric would coerce them
+        # all to NaN and count 0 (long_window/test_count_where.yaml id=4)
+        vals = np.where(col_s.isna().to_numpy(), np.nan, 1.0)
+    elif a.col:
+        vals = pd.to_numeric(col_s, errors="coerce").to_numpy()
+    else:
+        vals = np.ones(len(pdf))
+    r = _eval_rolling(base, vals, lo, seg_hi, inc_cur, mask)
+    if (is_dt or is_date) and base in ("min", "max", "median", "sum", "avg"):
+        # dialect sums/avgs timestamps as epoch-ms values
+        if is_dt and tz and tz != "UTC":
+            r = (pd.to_datetime(pd.Series(r), unit="ms", utc=True)
+                 .dt.tz_convert(tz).dt.tz_localize(None))
+        else:
+            r = pd.to_datetime(pd.Series(r), unit="ms")
+        if is_date:
+            r = pd.Series([None if v is pd.NaT else v.date() for v in r], dtype=object)
+    return r
 
 
 def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_fields: list,
@@ -2380,11 +2342,11 @@ def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_f
             pdf = pdf[valid].reset_index(drop=True)
         ok = _arrow_order_ms(tbl.column(order_col))
         ok = _to_order_int64(pdf[order_col]) if ok is None else ok[valid]
-        res = _evaluate(pdf, ok)
         keep = np.zeros(tbl.num_rows, dtype=bool)
         keep[np.flatnonzero(valid)[pdf[_EMIT].to_numpy() == 1]] = True
         if not keep.any():
             return
+        res = _evaluate(pdf, ok)
         kept = tbl.select(out_cols)
         if not keep.all():
             kept = kept.filter(pa.array(keep))
@@ -2395,165 +2357,35 @@ def make_kernel(spec: WindowSpec, aggs: list[Agg], out_cols: list[str], result_f
         yield from pa.Table.from_arrays(arrays, names=names).to_batches()
 
     def _evaluate(pdf: pd.DataFrame, ok: np.ndarray) -> pd.DataFrame:
-        """Features of the emitted rows of a buffer-ordered batch that
-        may hold MANY key groups, in one pandas pass: frame bounds come
-        from group-offset searchsorted, so no per-group Python loop runs
-        for the vectorized aggregates."""
+        """Features of the emitted rows (at least one) of a
+        buffer-ordered batch that may hold MANY key groups, in one
+        pandas pass: frame bounds come from group-offset searchsorted,
+        so no per-group Python loop runs for the vectorized
+        aggregates."""
         for c in int_cols:
             if c in pdf.columns and pd.api.types.is_float_dtype(pdf[c].dtype):
                 pdf = pdf.assign(**{c: pdf[c].astype("Int64")})
-        if not len(pdf):
-            out = pd.DataFrame(index=pdf.index)
-            for a in aggs_b:
-                out[a.name] = pd.Series(dtype=object)
-            return out
-        gid = gs = None
-        if key_list:
-            gid, gs = _group_index(pdf, key_list)
         emit = pdf[_EMIT].to_numpy() == 1
-
+        gid, gs = _group_index(pdf, key_list)
         if spec_b.instance_not_in_window:
-            # dedicated path: positional frames count over the eligible
-            # (union rows) subsequence, not the raw buffer — per group
-            if gs is None:
-                res = _eval_inw_all(spec_b, aggs_b, pdf, ok, emit)
-                out = pd.DataFrame(index=pdf.index)
-                for k, v in res.items():
-                    out[k] = v
-                return _to_int(out[emit].copy())
-            outs = []
-            starts = np.flatnonzero(np.concatenate(([True], gid[1:] != gid[:-1])))
-            bounds = list(starts) + [len(pdf)]
-            for a0, b0 in zip(bounds[:-1], bounds[1:]):
-                g = pdf.iloc[a0:b0].reset_index(drop=True)
-                res = _eval_inw_all(spec_b, aggs_b, g, ok[a0:b0], emit[a0:b0])
-                out = pd.DataFrame(index=g.index)
-                for k, v in res.items():
-                    out[k] = v
-                outs.append(_to_int(out[emit[a0:b0]].copy()))
-            if outs:
-                return pd.concat(outs, ignore_index=True)
-            out = pd.DataFrame()
-            for a in aggs_b:
-                out[a.name] = pd.Series(dtype=object)
-            return out
-
-        sok = ok
-        if gid is not None:
-            margin = abs(int(spec_b.preceding or 0)) + abs(int(spec_b.end_preceding or 0))
-            sok = _offset_ok(ok, gid, margin)
-            if sok is None:
-                # huge-span fallback: _eval_positional only needs the
-                # EQUALITY structure of the keys (first-same-key anchor),
-                # so rank-compress then offset — cannot wrap int64
-                rk = np.unique(ok, return_inverse=True)[1].astype(np.int64)
-                sok = rk + gid.astype(np.int64) * np.int64(len(ok) + 1)
-        lo, seg_hi, inc_cur = _frame_bounds(spec_b, ok, emit, gs, gid)
-
-        res: dict[str, object] = {}
-        for a in aggs_b:
-            where_mask = None
-            if a.cond is not None:
-                where_mask = _bool_mask(pdf[a.cond])
-            seg_mask = where_mask
-
-            fn = a.func
-            if a.pair is not None or a.cond_pair is not None:
-                emit_pos = np.flatnonzero(emit)
-                res[a.name] = _eval_anchor_pair(a, pdf, lo, seg_hi, inc_cur, emit_pos)
-            elif a.split is not None:
-                emit_pos = np.flatnonzero(emit)
-                res[a.name] = _eval_fz_list(a, pdf, lo, seg_hi, inc_cur, emit_pos, seg_mask)
-            elif fn == "nth_value_where":
-                res[a.name] = _eval_nth_where(a, pdf, lo, seg_hi, inc_cur)
-            elif _TOPN_CATE_RE.match(fn):
-                emit_pos = np.flatnonzero(emit)
-                r = (_eval_topn_cate_dense(a, pdf, lo, seg_hi, inc_cur, emit_pos)
-                     if len(emit_pos) else None)
-                res[a.name] = r if r is not None else \
-                    _eval_topn_cate(a, pdf, lo, seg_hi, inc_cur, emit_pos)
-            elif fn in ("entropy", "ew_avg", "top1_ratio"):
-                emit_pos = np.flatnonzero(emit)
-                r = (_eval_sliding_dense(a, pdf, lo, seg_hi, inc_cur, emit_pos)
-                     if len(emit_pos) else None)
-                res[a.name] = r if r is not None else \
-                    _eval_sliding(a, pdf, lo, seg_hi, inc_cur, emit_pos, None)
-            elif fn in _ROLLING or fn in _WHERE:
-                import datetime as _dtmod
-
-                base = fn[: -len("_where")] if fn.endswith("_where") else fn
-                col_s = pdf[a.col] if a.col is not None else None
-                is_dt = col_s is not None and pd.api.types.is_datetime64_any_dtype(col_s)
-                is_date = is_str = False
-                if col_s is not None and not is_dt and col_s.dtype == object:
-                    nn0 = col_s.dropna()
-                    is_date = len(nn0) > 0 and isinstance(nn0.iloc[0], _dtmod.date) \
-                        and not isinstance(nn0.iloc[0], _dtmod.datetime)
-                    is_str = len(nn0) > 0 and isinstance(nn0.iloc[0], str)
-                if is_str and base in ("min", "max"):
-                    # lexical min/max over string frames (udaf id=54/55)
-                    emit_pos = np.flatnonzero(emit)
-                    res[a.name] = _eval_minmax_obj(
-                        base, col_s, lo, seg_hi, inc_cur, emit_pos,
-                        seg_mask, where_mask)
-                    continue
-                if is_dt:
-                    if tz and tz != "UTC":
-                        loc = col_s.dt.tz_localize(
-                            tz, ambiguous="NaT", nonexistent="shift_forward")
-                        ns = loc.astype("int64").to_numpy()
-                        vals = (ns // 1_000_000).astype("float64")
-                    else:
-                        vals = _to_order_int64(col_s).astype("float64")
-                    vals[col_s.isna().to_numpy()] = np.nan
-                elif is_date:
-                    dt64 = pd.to_datetime(col_s, errors="coerce")
-                    vals = (dt64.astype("datetime64[ns]").astype("int64") // 1_000_000).astype("float64")
-                    vals[dt64.isna().to_numpy()] = np.nan
-                elif a.col and base == "count" and col_s.dtype == object:
-                    # count over non-numeric frames (strings, bools in
-                    # object arrays) counts NON-NULL values — to_numeric
-                    # would coerce them all to NaN and count 0
-                    # (long_window/test_count_where.yaml id=4)
-                    vals = np.where(col_s.isna().to_numpy(), np.nan, 1.0)
-                elif a.col:
-                    vals = pd.to_numeric(col_s, errors="coerce").to_numpy()
-                else:
-                    vals = np.ones(len(pdf))
-                r = _eval_rolling(a, base, vals, lo, seg_hi, inc_cur, seg_mask, where_mask)
-                if (is_dt or is_date) and base in ("min", "max", "median", "sum", "avg"):
-                    # dialect sums/avgs timestamps as epoch-ms values
-                    if is_dt and tz and tz != "UTC":
-                        r = (pd.to_datetime(pd.Series(r), unit="ms", utc=True)
-                             .dt.tz_convert(tz).dt.tz_localize(None))
-                    else:
-                        r = pd.to_datetime(pd.Series(r), unit="ms")
-                    if is_date:
-                        r = pd.Series([None if v is pd.NaT else v.date() for v in r], dtype=object)
-                res[a.name] = r
-            elif fn == "distinct_count":
-                v = _fill_na_default(pdf[a.col])
-                if seg_mask is not None:
-                    v = v.where(pd.Series(seg_mask, index=v.index))
-                res[a.name] = _eval_distinct(v, lo, seg_hi, inc_cur)
-            elif fn in _CATE or fn in _CATE_WHERE:
-                emit_pos = np.flatnonzero(emit)
-                # seg_mask on this branch is exactly the *_where cond
-                # mask (INW has its own route); dense applies agg.cond
-                # itself, so it is eligible either way
-                r = (_eval_cate_dense(a, pdf, lo, seg_hi, inc_cur, emit_pos)
-                     if len(emit_pos) else None)
-                res[a.name] = r if r is not None else \
-                    _eval_cate_vec(a, pdf, lo, seg_hi, inc_cur,
-                                   emit_pos, seg_mask)
-            elif fn in _POSITIONAL:
-                res[a.name] = _eval_positional(a, pdf, lo, seg_hi, inc_cur,
-                                                sok, spec_b.exclude_current_time,
-                                                gs=gs)
-            else:
-                emit_pos = np.flatnonzero(emit)
-                res[a.name] = _eval_generic(a, pdf, lo, seg_hi, inc_cur, emit_pos, seg_mask, where_mask)
-
+            # only union rows are ever buffered (WINDOW_CLAUSE.md:
+            # 245-254; WindowAggPlan.scala:592-597): evaluate over the
+            # gathered rows [union rows…, emitted rows…], where the
+            # buffer positions _frame_bounds counts are row indices and
+            # every emitted row is a current row after its frame
+            union = pdf[_UNION].to_numpy() >= 1
+            bounds = _frame_bounds(spec_b, ok, gs, gid, buffered=union)
+            nu = int(union.sum())
+            pdf = pdf.iloc[np.r_[np.flatnonzero(union), np.flatnonzero(emit)]] \
+                .reset_index(drop=True)
+            # union rows get empty frames: they are never emitted
+            lo, seg_hi, inc_cur, anchor, first = (
+                np.r_[np.full(nu, fill), b[emit]]
+                for b, fill in zip(bounds, (0, -1, False, 0, 0)))
+            emit = np.arange(len(pdf)) >= nu
+        else:
+            lo, seg_hi, inc_cur, anchor, first = _frame_bounds(spec_b, ok, gs, gid)
+        res = _eval_aggs(aggs_b, pdf, lo, seg_hi, inc_cur, emit, anchor, first, tz)
         out = pd.DataFrame(index=pdf.index)
         for k, v in res.items():
             out[k] = v
@@ -2668,192 +2500,6 @@ def run_kernel_partitioned(work: DataFrame, keys: list[str], order: list[Column]
     n = int(work.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     parted = work.repartition(n, *keys).sortWithinPartitions(*keys, *order)
     return parted.mapInArrow(run_partition, schema=out_schema)
-
-
-def _py_agg(agg: Agg, pdf: pd.DataFrame, idxs: list[int]):
-    """Reference-exact scalar aggregate over explicit frame indices
-    (used by the INSTANCE_NOT_IN_WINDOW path; frames are tiny there)."""
-    fn = agg.func
-    base = fn[: -len("_where")] if fn.endswith("_where") else fn
-    if agg.cond is not None:
-        cvals = pdf[agg.cond].to_numpy()
-        idxs = [j for j in idxs if bool(cvals[j])]
-    vals = pdf[agg.col].to_numpy() if agg.col else None
-    xs = []
-    if vals is not None:
-        for j in idxs:
-            v = vals[j]
-            if v is None or (isinstance(v, float) and v != v) or v is pd.NaT:
-                continue
-            xs.append(v)
-    if base == "count":
-        return len(xs) if agg.col else len(idxs)
-    if base == "distinct_count":
-        # NULL rows insert the type DEFAULT (hybridse Update — same
-        # rule as the batch kernel's _fill_na_default; fz_ddl
-        # test_luoji NULL-cId request row)
-        s = _fill_na_default(pdf[agg.col].iloc[idxs])
-        return len(set(s.tolist()))
-    if not xs:
-        return None
-    if base == "sum":
-        return sum(xs)
-    if base == "avg":
-        return float(sum(xs) / len(xs))
-    if base == "min":
-        return min(xs)
-    if base == "max":
-        return max(xs)
-    if base == "median":
-        return float(np.median([float(x) for x in xs]))
-    if base in ("stddev", "var"):
-        if len(xs) < 2:
-            return None
-        a = np.array(xs, dtype=float)
-        v = float(np.var(a, ddof=1))
-        return float(np.sqrt(v)) if base == "stddev" else v
-    if base in ("stddev_pop", "var_pop"):
-        a = np.array(xs, dtype=float)
-        v = float(np.var(a, ddof=0))
-        return float(np.sqrt(v)) if base == "stddev_pop" else v
-    raise ValueError(f"INSTANCE_NOT_IN_WINDOW: unsupported aggregate {fn!r}")
-
-
-def _eval_inw_all(spec: WindowSpec, aggs: list[Agg], pdf: pd.DataFrame,
-                   ok: np.ndarray, emit: np.ndarray) -> dict:
-    """INSTANCE_NOT_IN_WINDOW: frames draw ONLY from union-table rows
-    (plus the current row), and positional (ROWS) offsets count over
-    that eligible subsequence — primary rows are never buffered
-    (WINDOW_CLAUSE.md:245-254; WindowAggPlan.scala:592-597)."""
-    n = len(pdf)
-    is_u = pdf[_UNION].to_numpy() >= 1
-    posU = np.flatnonzero(is_u)
-    okU = ok[posU]
-    before = np.cumsum(is_u) - is_u  # union rows strictly before i
-    has_end = bool(spec.end_preceding) or spec.end_is_offset
-
-    if spec.exclude_current_time:
-        anchor = np.minimum(np.searchsorted(okU, ok, side="left"), before)
-    else:
-        anchor = before.astype(np.int64)
-
-    if spec.frame == "rows":
-        if has_end:
-            e = max(int(spec.end_preceding) + (1 if spec.open_end else 0), 1)
-            hi_sub = anchor - e
-            inc_cur = np.zeros(n, dtype=bool)
-        else:
-            hi_sub = anchor - 1
-            inc_cur = np.full(n, not spec.exclude_current_row)
-        if spec.preceding is None:
-            lo_sub = np.zeros(n, dtype=np.int64)
-        else:
-            lo_sub = anchor - (int(spec.preceding) - (1 if spec.open_preceding else 0))
-    else:
-        if spec.preceding is None:
-            lo_sub = np.zeros(n, dtype=np.int64)
-        else:
-            side = "right" if spec.open_preceding else "left"
-            lo_sub = np.searchsorted(okU, ok - int(spec.preceding), side=side)
-        if has_end:
-            e = int(spec.end_preceding)
-            side_end = "left" if spec.open_end else "right"
-            hi_sub = np.searchsorted(okU, ok - e, side=side_end) - 1
-            inc_cur = np.zeros(n, dtype=bool)
-        else:
-            hi_sub = anchor - 1
-            inc_cur = np.full(n, not spec.exclude_current_row)
-        if spec.exclude_current_time:
-            hi_sub = np.minimum(hi_sub, np.searchsorted(okU, ok, side="left") - 1)
-    lo_sub = np.maximum(lo_sub, 0)
-    hi_sub = np.minimum(hi_sub, before - 1)
-    if spec.maxsize:
-        cap = int(spec.maxsize) - inc_cur.astype(np.int64)
-        lo_sub = np.maximum(lo_sub, hi_sub - cap + 1)
-
-    emit_pos = np.flatnonzero(emit)
-    res: dict[str, object] = {}
-    for a in aggs:
-        out = np.full(n, None, dtype=object)
-        if a.func in ("lag", "at"):
-            vals = pdf[a.col].to_numpy()
-            for i in emit_pos:
-                if a.n == 0:
-                    # offset 0 is the current (primary) row itself — it
-                    # heads the eligible subsequence even though primary
-                    # rows are never buffered (test_news.yaml lag(c,0))
-                    out[i] = vals[i]
-                    continue
-                j = anchor[i] - a.n
-                out[i] = vals[posU[j]] if 0 <= j < len(posU) else None
-        elif a.func == "first_value":
-            vals = pdf[a.col].to_numpy()
-            for i in emit_pos:
-                if inc_cur[i]:
-                    out[i] = vals[i]
-                elif hi_sub[i] >= lo_sub[i]:
-                    out[i] = vals[posU[hi_sub[i]]]
-        elif a.func == "nth_value_where":
-            vals = pdf[a.col].to_numpy(dtype=object)
-            condv = _bool_mask(pdf[a.cond])
-            nth = int(a.n)
-            for i in emit_pos:
-                idxs = [int(posU[j]) for j in range(lo_sub[i], hi_sub[i] + 1)]
-                if inc_cur[i]:
-                    idxs.append(i)
-                matches = [j for j in idxs if condv[j]]  # oldest → newest
-                if nth == 0 or len(matches) < abs(nth):
-                    continue
-                out[i] = vals[matches[nth - 1 if nth > 0 else nth]]
-        elif a.split is not None:
-            kind, delim, kvd = a.split
-            toks = _fz_tokens(pdf[a.col].to_numpy(dtype=object), kind, delim, kvd)
-            for i in emit_pos:
-                flat: list[str] = []
-                if inc_cur[i]:
-                    flat.extend(toks[i])
-                for j in range(hi_sub[i], lo_sub[i] - 1, -1):
-                    flat.extend(toks[int(posU[j])])
-                if a.func == "count":
-                    out[i] = len(flat)
-                elif a.func == "distinct_count":
-                    out[i] = len(set(flat))
-                elif a.func == "join":
-                    out[i] = a.sep.join(flat)
-                elif a.func == "top1_ratio":
-                    out[i] = (max({t: flat.count(t) for t in set(flat)}.values()) / len(flat)) if flat else 0.0
-                elif a.func == "topn_frequency":
-                    out[i] = _topn_freq_str(flat, a.n) if flat else ""
-        elif a.func in _GENERIC or a.func in _CATE or a.func in _CATE_WHERE \
-                or _TOPN_CATE_RE.match(a.func):
-            for i in emit_pos:
-                idxs = [int(posU[j]) for j in range(lo_sub[i], hi_sub[i] + 1)]
-                if inc_cur[i]:
-                    idxs.append(i)
-                out[i] = _generic_one(a, pdf, idxs)
-        else:
-            for i in emit_pos:
-                idxs = [int(posU[j]) for j in range(lo_sub[i], hi_sub[i] + 1)]
-                if inc_cur[i]:
-                    idxs.append(i)
-                out[i] = _py_agg(a, pdf, idxs)
-        res[a.name] = out
-    return res
-
-
-def _generic_one(agg: Agg, pdf: pd.DataFrame, idxs: list[int]):
-    """One-row evaluation of the generic aggregates over explicit
-    indices (shares the branch logic with _eval_generic via a 1-frame
-    call)."""
-    sub = pdf.iloc[idxs].reset_index(drop=True)
-    k = len(sub)
-    if k == 0:
-        return None
-    # frame of sub's last row = the whole sub
-    r = _eval_generic(agg, sub, np.zeros(k, dtype=np.int64),
-                       np.arange(k) - 1, np.full(k, True),
-                       np.array([k - 1]), None)
-    return r[k - 1]
 
 
 def _kernel_window_agg(

@@ -44,6 +44,7 @@ itself participates in its own frame (CURRENT ROW).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import replace
 
 from openmldb_spark.operators.last_join import last_join
@@ -51,6 +52,8 @@ from openmldb_spark.operators.window import window_agg
 from openmldb_spark.plans.backfill import AsOfSource, FeatureWindow
 
 __all__ = ["request_features", "requests_isolated"]
+
+_log = logging.getLogger("openmldb_spark")
 
 
 def requests_isolated(requests, keys) -> bool:
@@ -154,20 +157,22 @@ def request_features(
     Multiple requests for the same key are independent anchors — a
     request's frame contains history rows and itself, never other
     request rows (see module docstring for how ``independent``
-    realizes that).
+    realizes that). Logs, once per partition-key set, whether its
+    windows ran as a plain union or with INSTANCE_NOT_IN_WINDOW, why,
+    and in how many of them history was pruned.
     """
     out = requests
-    iso_cache: dict[tuple, bool] = {}
+    route: dict[tuple, tuple[bool, str]] = {}  # keys → (INW, why)
+    pruned: dict[tuple, list[bool]] = {}
     for fw in windows:
         keys = tuple(fw.spec.partition_by)
-        if independent is True:
-            inw = True
-        elif independent is False:
-            inw = False
-        else:
-            if keys not in iso_cache:
-                iso_cache[keys] = requests_isolated(requests, keys)
-            inw = not iso_cache[keys]
+        if keys not in route:
+            if independent is True or independent is False:
+                route[keys] = (independent, f"independent={independent}")
+            else:
+                inw = not requests_isolated(requests, keys)
+                route[keys] = (inw, "key collisions" if inw else "isolated")
+        inw = route[keys][0]
         spec = replace(fw.spec, instance_not_in_window=True) if inw else fw.spec
         # prune only ahead of the kernel isolation route: the native
         # zero-Python WINDOW-UNION plan gains nothing from a smaller
@@ -175,6 +180,7 @@ def request_features(
         # measured 0.78→1.34 s native vs 4.68→1.64 s kernel (BENCH r5)
         hist_w = prune_rows_history(requests, history, fw.spec, fw.aggs) \
             if (prune and inw) else history
+        pruned.setdefault(keys, []).append(hist_w is not history)
         union = [hist_w] + list(fw.union or [])
         if fw.skew:
             from openmldb_spark.operators.skew import window_agg_skewed
@@ -189,6 +195,10 @@ def request_features(
         else:
             out = window_agg(out, spec, fw.aggs, union=union, impl=fw.impl,
                              row_key=fw.row_key)
+    for keys, (inw, why) in route.items():
+        _log.info("request %s: %s (%s), history pruned in %d of %d windows", list(keys),
+                  "INSTANCE_NOT_IN_WINDOW" if inw else "plain union", why,
+                  sum(pruned[keys]), len(pruned[keys]))
     for src in asof or []:
         out = last_join(
             out, src.df, on=src.on, order_by=src.right_ts,

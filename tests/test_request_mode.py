@@ -213,3 +213,43 @@ def test_history_pruning_rows_range(spark, transcripts):
     pruned = request_features(reqs, hist, "ts", [fw], prune=True)
     full = request_features(reqs, hist, "ts", [fw], prune=False)
     assert canon(pruned) == canon(full)
+
+
+def test_request_isolation_decision_logged(spark, caplog):
+    """request_features logs, once per key set, whether the window was
+    isolated (plain union) or had key collisions (INSTANCE_NOT_IN_WINDOW)
+    and whether history was pruned."""
+    import logging
+
+    hist = spark.createDataFrame(
+        [("a", 1000 * i, i, float(i)) for i in range(6)]
+        + [("b", 1000 * i, i, float(i)) for i in range(6)],
+        "k string, ts long, i int, v double")
+    rows = WindowSpec(["k"], "ts", "rows", 3, tiebreak=["i"])
+    unbounded = WindowSpec(["k"], "ts", "rows", None, tiebreak=["i"])
+    fws = [FeatureWindow(spec=rows, aggs=[Agg("sum", "v", "s3")]),
+           FeatureWindow(spec=unbounded, aggs=[Agg("sum", "v", "s_all")])]
+
+    def logged(requests, **kw):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="openmldb_spark"):
+            request_features(requests, hist, "ts", fws, **kw)
+        return [r.getMessage() for r in caplog.records
+                if r.getMessage().startswith("request ")]
+
+    one_each = spark.createDataFrame([("a", 9000, 100, 1.0), ("b", 9000, 100, 1.0)],
+                                     hist.schema)
+    two_a = spark.createDataFrame([("a", 9000, 100, 1.0), ("a", 3500, 101, 1.0)],
+                                  hist.schema)
+    assert logged(one_each) == [
+        "request ['k']: plain union (isolated), history pruned in 0 of 2 windows"]
+    # the bounded ROWS window prunes history, the unbounded one cannot
+    assert logged(two_a) == [
+        "request ['k']: INSTANCE_NOT_IN_WINDOW (key collisions), "
+        "history pruned in 1 of 2 windows"]
+    assert logged(two_a, prune=False) == [
+        "request ['k']: INSTANCE_NOT_IN_WINDOW (key collisions), "
+        "history pruned in 0 of 2 windows"]
+    assert logged(one_each, independent=True) == [
+        "request ['k']: INSTANCE_NOT_IN_WINDOW (independent=True), "
+        "history pruned in 1 of 2 windows"]

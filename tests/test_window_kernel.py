@@ -256,3 +256,200 @@ def test_rows_and_range_windows_coexist(spark):
         lo_rng = max(0, i - 5)
         assert out.s_rows[i] == sum(range(lo_rows, i + 1))
         assert out.s_range[i] == sum(range(lo_rng, i + 1))
+
+
+# ---------------------------------------------------------------------------
+# INSTANCE_NOT_IN_WINDOW ≡ per-request isolation
+# ---------------------------------------------------------------------------
+
+INW_AGGS = [
+    Agg("count", None, "n"),
+    Agg("sum", "v", "sum_v"),
+    Agg("avg", "f", "avg_f"),
+    Agg("min", "s", "min_s"),
+    Agg("max", "s", "max_s"),
+    Agg("max", "t", "max_t"),
+    Agg("min", "t", "min_t"),
+    Agg("stddev", "f", "std_f"),
+    Agg("var_pop", "v", "varp_v"),
+    Agg("median", "f", "med_f"),
+    Agg("sum_where", "v", "sumw_v", cond="b"),
+    Agg("avg_where", "f", "avgw_f", cond="b"),
+    Agg("count_where", "s", "cntw_s", cond="b"),
+    Agg("min_where", "s", "minw_s", cond="b"),
+    Agg("max_where", "t", "maxw_t", cond="b"),
+    Agg("distinct_count", "s", "dc_s"),
+    Agg("lag", "s", "lag0", n=0),
+    Agg("lag", "s", "lag1", n=1),
+    Agg("at", "v", "at2", n=2),
+    Agg("lag", "s", "lag_far", n=40),
+    Agg("first_value", "s", "fv_s"),
+    Agg("nth_value_where", "v", "nth_p2", cond="b", n=2),
+    Agg("nth_value_where", "v", "nth_m2", cond="b", n=-2),
+    Agg("sum_cate", "v", "sum_c", cate="c"),
+    Agg("avg_cate", "f", "avg_c", cate="c"),
+    Agg("count_cate", "v", "cnt_c", cate="c"),
+    Agg("min_cate", "f", "min_c", cate="c"),
+    Agg("max_cate_where", "v", "maxw_c", cond="b", cate="c"),
+    Agg("sum_cate_where", "f", "sumw_c", cond="b", cate="c"),
+    Agg("top_n_key_sum_cate_where", "v", "tk_sum", cond="b", cate="c", n=2),
+    Agg("top_n_key_ratio_cate", "v", "tk_ratio", cond="b", cate="c", n=2),
+    Agg("top_n_key_max_cate_where", "f", "tk_max", cond="b", cate="c", n=2),
+    Agg("top_n_value_avg_cate_where", "f", "tv_avg", cond="b", cate="c", n=2),
+    Agg("top_n_value_count_cate_where", "v", "tv_cnt", cond="b", cate="c", n=1),
+    Agg("entropy", "c", "ent"),
+    Agg("ew_avg", "f", "ew", param=0.5),
+    Agg("top1_ratio", "c", "t1"),
+    Agg("top", "v", "top3", n=3),
+    Agg("topn_frequency", "c", "tf2", n=2),
+    Agg("drawdown", "f", "dd"),
+    Agg("join", "kv", "keys_j", split=("split_by_key", ",", ":"), sep="|"),
+    Agg("count", "kv", "vals_n", split=("split_by_value", ",", ":")),
+    # anchor pairs: frame v minus the request's v; frame rows above it
+    Agg("avg", None, "pair_avg", pair=("v", "-", "v")),
+    Agg("count_where", "v", "pair_cnt", cond_pair=("v", ">", "v")),
+]
+
+INW_SPECS = {
+    "rows_4": WindowSpec(["k"], "ts", "rows", 4, tiebreak=["i"]),
+    "rows_6_to_2": WindowSpec(["k"], "ts", "rows", 6, end_preceding=2, tiebreak=["i"]),
+    "range_maxsize": WindowSpec(["k"], "ts", "rows_range", 9_000, maxsize=3, tiebreak=["i"]),
+    "range_end": WindowSpec(["k"], "ts", "rows_range", 9_000, end_preceding=2_000,
+                            tiebreak=["i"]),
+    "rows_excl_row": WindowSpec(["k"], "ts", "rows", 5, exclude_current_row=True,
+                                tiebreak=["i"]),
+    "range_excl_time": WindowSpec(["k"], "ts", "rows_range", None,
+                                  exclude_current_time=True, tiebreak=["i"]),
+    "rows_excl_time": WindowSpec(["k"], "ts", "rows", 5, exclude_current_time=True,
+                                 tiebreak=["i"]),
+}
+
+
+@pytest.fixture(scope="module")
+def inw_tables(spark):
+    """History (the union side) and several requests per key, NULL key
+    included; requests share timestamps with history rows."""
+    rng = np.random.RandomState(7)
+    cats = ["x", "y", "z"]
+
+    def row(k, i, ts):
+        return {
+            "k": k, "i": i, "ts": pd.Timestamp(1_700_000_000_000 + ts, unit="ms"),
+            "v": int(rng.randint(-5, 20)) if rng.rand() > 0.1 else None,
+            "f": float(rng.randint(0, 400)) / 4 if rng.rand() > 0.1 else None,
+            "s": f"s{rng.randint(0, 6)}" if rng.rand() > 0.1 else None,
+            "t": pd.Timestamp(1_600_000_000_000 + int(rng.randint(0, 10**6)), unit="ms"),
+            "c": cats[rng.randint(0, 3)] if rng.rand() > 0.1 else None,
+            "b": bool(rng.rand() > 0.4),
+            "kv": ",".join(f"{cats[rng.randint(0, 3)]}:{rng.randint(0, 4)}"
+                           for _ in range(rng.randint(0, 3))),
+        }
+
+    hist, reqs = [], []
+    for k in ["a", "b", "c", None]:
+        hist += [row(k, i, 1000 * int(rng.randint(0, 40))) for i in range(30)]
+        reqs += [dict(row(k, 100 + j, 1000 * int(rng.randint(0, 45))), rid=len(reqs) + j)
+                 for j in range(5)]
+    schema = ("k string, i int, ts timestamp, v int, f double, s string, "
+              "t timestamp, c string, b boolean, kv string")
+    h = spark.createDataFrame(pd.DataFrame(hist), schema)
+    r = spark.createDataFrame(pd.DataFrame(reqs), schema + ", rid long")
+    return h, r
+
+
+@pytest.mark.parametrize("spec_name", list(INW_SPECS))
+def test_instance_not_in_window_is_per_request_isolation(spark, inw_tables, spec_name):
+    """An INSTANCE_NOT_IN_WINDOW window over many requests per key
+    equals a plain kernel window in which every request is its own
+    partition holding its own copy of that key's history."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    hist, reqs = inw_tables
+    spec = INW_SPECS[spec_name]
+    got = window_agg(reqs, replace(spec, instance_not_in_window=True), INW_AGGS,
+                     union=[hist], impl="kernel").toPandas()
+    owners = reqs.select(F.col("k").alias("__k"), "rid")
+    copies = (hist.join(owners, hist["k"].eqNullSafe(owners["__k"])).drop("__k")
+              .withColumn("rk", F.col("rid")))
+    iso = window_agg(reqs.withColumn("rk", F.col("rid")), replace(spec, partition_by=["rk"]),
+                     INW_AGGS, union=[copies], impl="kernel").toPandas()
+    got = got.sort_values("rid").reset_index(drop=True)
+    iso = iso.sort_values("rid").reset_index(drop=True)
+    assert len(got) == len(iso) == 20
+    for a in INW_AGGS:
+        g, e = got[a.name], iso[a.name]
+        if pd.api.types.is_float_dtype(g.dtype):
+            assert np.allclose(g.to_numpy(float), e.to_numpy(float), rtol=1e-9,
+                               atol=1e-9, equal_nan=True), (a.name, g.tolist(), e.tolist())
+        else:
+            gl = g.where(g.notna(), None).tolist()
+            el = e.where(e.notna(), None).tolist()
+            assert gl == el, (a.name, gl, el)
+
+
+def test_end_offset_frame_of_a_batch_first_row_is_empty(spark):
+    """ROWS BETWEEN 4 AND 2 PRECEDING: the first two rows have empty
+    frames. A batch's first row used to get the segment end -2, which
+    the per-frame evaluators read as a slice to the buffer's
+    second-to-last row — future rows."""
+    rows = [(i, "a", 1000 * i, float(i), "x" if i % 2 else "y") for i in range(6)]
+    df = spark.createDataFrame(rows, "i int, k string, ts long, v double, c string")
+    spec = WindowSpec(["k"], "ts", "rows", 4, end_preceding=2, tiebreak=["i"])
+    aggs = [Agg("max_cate", "v", "m", cate="c"), Agg("drawdown", "v", "d"),
+            Agg("top", "v", "t", n=3)]
+    got = window_agg(df, spec, aggs, impl="kernel").orderBy("i").collect()
+    assert [(r.m, r.d, r.t) for r in got[:3]] == [
+        (None, None, ""), (None, None, ""), ("y:0.000000", 0.0, "0.000000")]
+    assert got[5].m == "x:3.000000,y:2.000000"
+
+
+def test_dense_float_category_sums_match_per_frame_sums(spark):
+    """Dense sum_cate / avg_cate read frame sums off whole-buffer
+    float64 prefix sums. Over one 5,000-row buffer of values up to
+    1e13 with fractional parts the prefixes (~1e16) lose the fraction,
+    so the kernel must fall back to per-frame sums: every frame's
+    exact sum (quarter multiples below 2^51, exact in any summation
+    order) renders identically."""
+    rng = np.random.RandomState(3)
+    n = 5000
+    vals = rng.randint(0, 4 * 10**13, size=n) / 4
+    cats = np.array(["p", "q", "r"])[rng.randint(0, 3, size=n)]
+    pdf = pd.DataFrame({"k": "a", "i": np.arange(n), "ts": np.arange(n) * 1000,
+                        "v": vals, "c": cats})
+    df = spark.createDataFrame(pdf, "k string, i long, ts long, v double, c string")
+    spec = WindowSpec(["k"], "ts", "rows", 9, tiebreak=["i"])
+    got = (window_agg(df, spec, [Agg("sum_cate", "v", "s", cate="c"),
+                                 Agg("avg_cate", "v", "a", cate="c")], impl="kernel")
+           .orderBy("i").toPandas())
+    want_s, want_a = [], []
+    for i in range(n):
+        frame = pdf.iloc[max(0, i - 9): i + 1]
+        sums = frame.groupby("c")["v"].agg(lambda x: math.fsum(x))
+        cnts = frame.groupby("c")["v"].count()
+        want_s.append(",".join(f"{c}:{sums[c]:f}" for c in sorted(sums.index)))
+        want_a.append(",".join(f"{c}:{sums[c] / cnts[c]:f}" for c in sorted(sums.index)))
+    assert got["s"].tolist() == want_s
+    assert got["a"].tolist() == want_a
+
+
+def test_dense_category_sums_gate_on_magnitude():
+    """Integer-valued sums stay dense (exact below 2^53); fractional
+    ones leave it once the buffer's absolute sum passes the bound."""
+    from openmldb_spark.operators.window import _DENSE_FLOAT_SUM_BOUND, _eval_cate_dense
+
+    n = 1000
+    lo = np.maximum(np.arange(n) - 9, 0)
+    seg_hi = np.arange(n) - 1
+    inc = np.ones(n, dtype=bool)
+    emit = np.arange(n)
+    agg = Agg("avg_cate", "v", "a", cate="c")
+
+    def dense(v):
+        pdf = pd.DataFrame({"v": v, "c": np.where(np.arange(n) % 2, "x", "y")})
+        return _eval_cate_dense(agg, pdf, lo, seg_hi, inc, emit)
+
+    assert dense(np.full(n, 10.0**12)) is not None  # integral, S = 1e15
+    assert dense(np.full(n, 0.5)) is not None
+    assert dense(np.full(n, 1.5 * _DENSE_FLOAT_SUM_BOUND / n)) is None
