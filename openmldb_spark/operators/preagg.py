@@ -36,13 +36,14 @@ appending *generations*:
   starts no schema-inference job; write statistics (pairs, watermark,
   row count) are observed on the write itself, so no read-back job.
 - state reads: while the state holds at most ``_RESIDENT_PAIRS`` (key,
-  bucket) pairs, the merged partials are kept on the driver as a local
-  relation, one copy per state version. Every write (``ingest``, ``append``, ``compact``) bumps
-  the version; the next read collects the generations' merge once, and
-  reads until the next write plan against that copy (no parquet scan,
-  no merge shuffle). Above the bound every read merges the generations
-  in Spark. The route is logged on the ``openmldb_spark`` logger at the
-  state's first read and whenever it changes.
+  bucket) pairs, the merged partials also live on the driver as numpy
+  arrays sorted by (key, bucket) (``_Resident``). Each write folds only
+  its own generation into them (one read-back of that generation); a
+  compaction keeps them. ``partials()`` then hands out a local relation
+  built from them through Arrow, and ``serve_long_window`` answers
+  requests from them directly. Above the bound every read merges the
+  generations in Spark. The route is logged on the ``openmldb_spark``
+  logger at the state's first read and whenever it changes.
 
 Scale shape: an append over D new rows touches O(D) raw data + the
 partials table (keys × buckets rows — KBs per TB of raw history). The
@@ -53,6 +54,7 @@ practice.
 
 from __future__ import annotations
 
+import decimal
 import json
 import logging
 import os
@@ -62,6 +64,8 @@ from dataclasses import asdict
 from functools import reduce
 from operator import and_
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,6 +73,7 @@ from pyspark.sql import types as T
 from openmldb_spark.operators.long_window import (
     _B,
     _DECOMPOSABLE,
+    _base,
     _order_ms,
     carry_exprs,
     combine_cols,
@@ -87,15 +92,15 @@ _log = logging.getLogger("openmldb_spark")
 # partials are keys × buckets — metadata-sized against raw history. Up
 # to this many (key, bucket) pairs reads broadcast them.
 _SMALL_PAIRS = 2_000_000
-# Up to this many pairs the merged partials also stay on the driver. A
-# copy costs O(pairs) at every state version (collect, local relation,
-# watermark index) and in each plan that reads it, so it pays only for
-# small states. tools/preagg_residency.py on a 4-vCPU VM, local[4], mean
-# of two runs' median s, distributed → resident: an INSERT of 50 rows and
-# two 500-row requests 2.00 → 1.83 at 10^4 pairs, 2.13 → 1.91 at 2·10^4,
-# 2.16 → 2.62 at 5·10^4; a 50-row PreAggTable.append 1.91 → 1.93 at
-# 10^4, 1.86 → 2.09 at 2·10^4.
-_RESIDENT_PAIRS = 10_000
+# Up to this many pairs the merged partials also stay on the driver
+# (``_Resident``): requests are answered there and writes fold their own
+# generation in. tools/preagg_residency.py on a 4-vCPU VM, local[4],
+# 1,000 keys, median s of 4 cycles, resident vs distributed: an INSERT
+# of 50 rows and two 500-row requests 1.20 vs 2.13 at 10^4 pairs, 0.92
+# vs 2.05 at 2·10^4, 0.88 vs 2.05 at 5·10^4, 1.18 vs 2.87 at 10^5. The
+# driver route won at every size measured, so the bound sits at the
+# largest one; ``append`` reads the generations' merge on both routes.
+_RESIDENT_PAIRS = 100_000
 _NAN = object()
 
 
@@ -122,6 +127,139 @@ def _check_spec(spec: WindowSpec, aggs: list[Agg]) -> None:
             raise ValueError(f"aggregate {a.name} uses kernel-only features")
 
 
+def _to_np(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(values, validity) of an Arrow column: numbers, booleans and
+    temporals as numpy numbers, anything else as Python objects."""
+    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    valid = ~arr.is_null().to_numpy(zero_copy_only=False)
+    if pa.types.is_timestamp(arr.type) or pa.types.is_date(arr.type):
+        arr = arr.cast(pa.int64() if arr.type.bit_width == 64 else pa.int32())
+    if not pa.types.is_primitive(arr.type):
+        return np.array(arr.to_pylist(), dtype=object), valid
+    fill = False if pa.types.is_boolean(arr.type) else 0
+    return arr.fill_null(fill).to_numpy(zero_copy_only=False), valid
+
+
+def _to_arrow(vals: np.ndarray, valid: np.ndarray, t: pa.DataType) -> pa.Array:
+    if vals.dtype == object:
+        return pa.array(np.where(valid, vals, None).tolist(), type=t)
+    return pa.array(vals, mask=~valid).cast(t)
+
+
+def _ck(code, bucket) -> np.ndarray:
+    """(key code, bucket) pairs as complex numbers, which numpy sorts and
+    searches by real part, then imaginary part (exact below 2**53)."""
+    k = np.asarray(code, np.complex128).copy()
+    k.imag = bucket
+    return k
+
+
+def _merge(kind: str, vals: np.ndarray, valid: np.ndarray, lo, hi):
+    """Merge rows ``[lo[i], hi[i])`` of one partial column with
+    ``merge_exprs``' semantics: NULLs are skipped and a range without a
+    valid row is NULL; sums add in the column's own type (int64,
+    float64, exact decimals); min/max order like Spark, NaN above every
+    number. Returns (values, validity)."""
+    if vals.dtype == object and kind != "sum":  # objects merge by rank
+        uniq, rank = np.unique(vals[valid], return_inverse=True)
+        codes = np.zeros(len(vals), np.int64)
+        codes[valid] = rank
+        out, ok = _merge(kind, codes, valid, lo, hi)
+        return np.append(uniq, None)[np.where(ok, out, len(uniq))], ok
+    idx = np.column_stack([lo, hi]).ravel()
+
+    def red(f, x):  # one slot past the end keeps every index in range
+        pad = x[:1] if len(x) else np.zeros(1, x.dtype)
+        return f.reduceat(np.append(x, pad), idx)[::2] if len(idx) else x[:0]
+
+    n = np.where(lo < hi, red(np.add, valid.astype(np.int64)), 0)
+    f = {"sum": np.add, "min": np.fmin, "max": np.fmax}[kind]
+    if kind == "sum":
+        with decimal.localcontext(prec=80):
+            return red(f, np.where(valid, vals, 0)), n > 0
+    if vals.dtype.kind != "f":
+        fill = np.iinfo(vals.dtype).max if vals.dtype != bool else np.True_
+        return red(f, np.where(valid, vals, fill if kind == "min" else ~fill)), n > 0
+    nan = red(np.add, (valid & np.isnan(vals)).astype(np.int64))
+    out = red(f, np.where(valid, vals, np.nan))  # fmin/fmax skip NaN
+    return np.where((nan > 0) if kind == "max" else (nan == n), np.nan, out), n > 0
+
+
+class _Resident:
+    """The merged (key, bucket) partials on the driver, one slot per pair
+    sorted by ``key`` = ``_ck(key code, bucket)``. Key codes number the
+    distinct partition-key tuples (``_hkey`` equality) in arrival order;
+    ``keys`` holds one Arrow row per code."""
+
+    def __init__(self, key_cols: list[str], kinds: dict[str, str]):
+        self.key_cols, self.kinds = key_cols, kinds  # column -> sum|min|max
+        self.codes, self.keys, self.key = {}, None, np.empty(0, np.complex128)
+        self.cols, self.types = {}, {}  # column -> (values, validity) / Arrow type
+
+    def _key_of(self, tbl: pa.Table, add: bool = False) -> np.ndarray:
+        b = _to_np(tbl[_B if add else "__b__"])[0]
+        rows = [_hkey(k) for k in zip(*(tbl[c].to_pylist() for c in self.key_cols))]
+        if add:
+            new = []
+            for i, h in enumerate(rows):
+                if h not in self.codes:
+                    self.codes[h] = len(self.codes)
+                    new.append(i)
+            fresh = tbl.select(self.key_cols).take(pa.array(new, pa.int64()))
+            self.keys = fresh if self.keys is None else pa.concat_tables([self.keys, fresh])
+        return _ck([self.codes.get(h, -1) for h in rows], b)
+
+    def fold(self, tbl: pa.Table) -> None:
+        """Merge partial rows ``tbl`` (a pair may repeat) into the state:
+        O(rows of ``tbl``) merging, then one insert of the new pairs."""
+        k = self._key_of(tbl, add=True)
+        order = np.argsort(k, kind="stable")
+        k = k[order]
+        lo = np.flatnonzero(np.r_[True, k[1:] != k[:-1]][:len(k)])
+        hi = np.append(lo[1:], len(k))[:len(lo)]
+        k = k[lo]
+        pos = np.searchsorted(self.key, k)
+        hit = np.r_[self.key, np.nan][pos] == k
+        at, p, two = pos[~hit], pos[hit], np.arange(0, 2 * hit.sum(), 2)
+        for name, kind in self.kinds.items():
+            v, ok = _merge(kind, *(x[order] for x in _to_np(tbl[name])), lo, hi)
+            self.types.setdefault(name, tbl.schema.field(name).type)
+            sv, sok = self.cols.get(name) or (v[:0], ok[:0])
+            if len(p):  # pairs already held merge with their slot
+                sv[p], sok[p] = _merge(kind, np.column_stack([sv[p], v[hit]]).ravel(),
+                                       np.column_stack([sok[p], ok[hit]]).ravel(), two, two + 2)
+            self.cols[name] = np.insert(sv, at, v[~hit]), np.insert(sok, at, ok[~hit])
+        self.key = np.insert(self.key, at, k[~hit])
+
+    def table(self, schema: T.StructType) -> pa.Table:
+        keys = self.keys.take(self.key.real.astype(np.int64))
+        cols = {**{c: keys[c] for c in self.key_cols}, _B: pa.array(self.key.imag.astype(np.int64)),
+                **{n: _to_arrow(*self.cols[n], self.types[n]) for n in self.kinds}}
+        return pa.table({f.name: cols[f.name] for f in schema})
+
+    def carry(self, req: pa.Table, bounded: bool):
+        """Per request row of ``req`` (key columns, ``__a__``, ``__b__``
+        and, when ``bounded``, ``__b0__``): the merged partials of every
+        bucket of its frame that is read whole — the buckets below its
+        own (above ``__b0__`` when bounded), and its own when no stored
+        row of it is newer than ``__a__`` — and whether its own bucket is
+        read raw. Returns ({column: (values, validity)}, raw)."""
+        q = self._key_of(req)
+        a, ok = _to_np(req["__a__"])
+        j = np.searchsorted(self.key, q)
+        own = ok & (np.r_[self.key, np.nan][j] == q)
+        whole = own & (np.r_[self.cols[_WM][0], 0][j] <= a)
+        if bounded:
+            b0 = _to_np(req["__b0__"])[0]
+            whole &= q.imag > b0
+            lo = np.searchsorted(self.key, _ck(q.real, b0), "right")
+        else:
+            lo = np.searchsorted(self.key, _ck(q.real, -2.0 ** 62))
+        hi = np.where(ok, np.maximum(j + whole, lo), lo)
+        return ({n: _merge(kind, *self.cols[n], lo, hi)
+                 for n, kind in self.kinds.items() if n != _WM}, own & ~whole)
+
+
 class PreAggTable:
     """Persistent (key, bucket) partials for UNBOUNDED window features.
 
@@ -144,10 +282,11 @@ class PreAggTable:
         self.bucket_ms = int(self.meta["bucket_ms"])
         sch = self.meta.get("schema")
         self._schema = T.StructType.fromJson(sch) if sch else None
-        # writes so far; the driver-resident merged partials are
-        # [version, local DataFrame, own-bucket watermark index or None]
-        self._version = 0
-        self._resident = None
+        # the driver-resident merged partials (``_Resident``) while the
+        # state is within _RESIDENT_PAIRS, and the local relation
+        # ``partials()`` built from them since the last write
+        self._res = None
+        self._local = None
         self._route = None
 
     # -- lifecycle ---------------------------------------------------------
@@ -185,12 +324,10 @@ class PreAggTable:
 
     # -- state reads ---------------------------------------------------------
 
-    def partials(self) -> DataFrame | None:
-        """Merged (key, bucket) partials across all generations —
-        the pre-agg table a long-window query plans against. Under
-        ``_RESIDENT_PAIRS`` this is the driver-resident copy, collected
-        once per state version."""
-        version = self._version  # before the listing: a racing write re-collects
+    def resident(self) -> _Resident | None:
+        """The driver-resident merged partials; None when nothing is
+        stored or above ``_RESIDENT_PAIRS`` pairs. Loaded from the
+        generations once, then kept current by every write."""
         dirs = self._gen_dirs()
         if not dirs:
             return None
@@ -201,16 +338,32 @@ class PreAggTable:
             _log.info("pre-agg %s: %s reads (%d pairs, bound %d)", self.dir,
                       route, pairs, _RESIDENT_PAIRS)
         if route == "distributed":
-            return self._merged(dirs)
-        res = self._resident
-        if res is None or res[0] != version:
-            # the JVM driver collects the merge and keeps it as a local
-            # relation: later plans read it without a scan or a job
-            merged = self._merged(dirs)._jdf
-            local = self.spark._jsparkSession.createDataFrame(
-                merged.collectAsList(), merged.schema())
-            res = self._resident = [version, DataFrame(local, self.spark), None]
-        return res[1]
+            self._res = None
+        elif self._res is None:
+            self._res = self._load(dirs)
+        return self._res
+
+    def _load(self, dirs: list[str]) -> _Resident:
+        mm = {f"__m{i}__": _base(a) for i, a in enumerate(self.aggs)}
+        res = _Resident(list(self.spec.partition_by),
+                        {**{c: mm.get(c, "sum") for c in partial_cols(self.aggs)}, _WM: "max"})
+        res.fold(self._read(dirs).toArrow())
+        return res
+
+    def partials(self) -> DataFrame | None:
+        """Merged (key, bucket) partials across all generations —
+        the pre-agg table a long-window query plans against. Within
+        ``_RESIDENT_PAIRS`` this is a local relation built from the
+        driver-resident partials through Arrow: it runs no job, and the
+        same relation is returned until the next write. Above the bound
+        it is the generations' merge in Spark."""
+        res = self.resident()
+        if res is None:
+            dirs = self._gen_dirs()
+            return self._merged(dirs) if dirs else None
+        if self._local is None:
+            self._local = self.spark.createDataFrame(res.table(self._schema), self._schema)
+        return self._local
 
     def _merged(self, dirs: list[str]) -> DataFrame:
         keys = list(self.spec.partition_by)
@@ -225,24 +378,14 @@ class PreAggTable:
         pairs of ``P``, a result of ``partials()``, keyed by
         ``_hkey((*key values, bucket))`` of collected values. ``wanted``
         holds the pairs asked for, as the partition-key columns and the
-        bucket column ``bucket``. The resident copy answers from an index
-        of itself, built once per copy, without evaluating ``wanted``;
-        any other ``P`` runs one semi-join restricted to those pairs."""
-        res = self._resident
-        if res is not None and res[1] is P:  # the index describes P itself
-            if res[2] is None:
-                res[2] = self._index(P)
-            return res[2]
+        bucket column ``bucket``; one semi-join restricts ``P`` to them."""
         keys = list(self.spec.partition_by)
         q = wanted.select(*keys, F.col(bucket).alias(_B)).alias("q")
         cond = reduce(and_, [F.col(f"p.{k}").eqNullSafe(F.col(f"q.{k}")) for k in keys],
                       F.col(f"p.{_B}") == F.col(f"q.{_B}"))
-        return self._index(P.alias("p").join(F.broadcast(q), cond, "left_semi"))
-
-    def _index(self, P: DataFrame) -> dict:
-        keys = list(self.spec.partition_by)
-        return {_hkey(row[:-1]): row[-1]
-                for row in P.select(*keys, _B, _WM).collect()}
+        return {_hkey(row[:-1]): row[-1] for row in
+                P.alias("p").join(F.broadcast(q), cond, "left_semi")
+                .select(*keys, _B, _WM).collect()}
 
     def _read(self, dirs: list[str]) -> DataFrame:
         reader = self.spark.read
@@ -298,8 +441,13 @@ class PreAggTable:
         """
         spec, aggs, keys = self.spec, self.aggs, list(self.spec.partition_by)
         work, ord_ms = self._bucketed(df)
-        wmk = self.key_watermarks()
-        if wmk is not None:
+        # history is the generations' merge in Spark on either route: a
+        # local relation of the whole state measured slower in this plan
+        # at every size (tools/preagg_residency.py append)
+        dirs = self._gen_dirs()
+        hist = self._merged(dirs) if dirs else None
+        if hist is not None:
+            wmk = hist.groupBy(*keys).agg(F.max(_WM).alias("__pa_wm__"))
             # PER-KEY ordered-append validation (the reference's
             # aggregator orders per key/index, not globally): one tiny
             # job over new-chunk keys × the metadata-sized partials
@@ -315,7 +463,6 @@ class PreAggTable:
                     f"pre-agg state requires per-key ordered appends "
                     f"(rebuild or compact from raw history for corrections)")
 
-        hist = self.partials()
         own = self._own_partials(work, ord_ms)
 
         # ---- features for the appended rows (before merging them in) ----
@@ -403,14 +550,23 @@ class PreAggTable:
         return entry, None if st["wm"] is None else int(st["wm"])
 
     def _write_generation(self, own: DataFrame) -> int:
-        """Write ``own`` as the next generation; return its pair count."""
-        entry, wm = self._write(own, f"gen={len(self.meta['generations'])}")
+        """Write ``own`` as the next generation and fold it into the
+        driver-resident partials; return its pair count."""
+        gen_dir = f"gen={len(self.meta['generations'])}"
+        entry, wm = self._write(own, gen_dir)
         self.meta["generations"].append(entry)
         old = self.meta["watermark_ms"]
         if wm is not None:
             self.meta["watermark_ms"] = wm if old is None else max(old, wm)
         self._save_meta()
-        self._version += 1
+        self._local = None
+        if self._pairs() > _RESIDENT_PAIRS:
+            self._res = None
+        elif self._res is None:
+            self._res = self._load(self._gen_dirs())
+        elif entry["pairs"]:
+            # one read-back of this generation, never of the merged state
+            self._res.fold(self._read([os.path.join(self.dir, gen_dir)]).toArrow())
         return entry["pairs"]
 
     def _pairs(self) -> int:
@@ -436,7 +592,7 @@ class PreAggTable:
         os.rename(tmp, os.path.join(self.dir, "gen=0"))
         self.meta["generations"] = [{**entry, "dir": "gen=0"}]
         self._save_meta()
-        self._version += 1
+        self._local = None  # the driver-resident partials stay: same content
         return entry["pairs"]
 
 
@@ -484,7 +640,7 @@ def long_window_serveable(spec: WindowSpec, aggs: list, history) -> bool:
 
 
 def serve_long_window(requests, history, state: PreAggTable,
-                      spec: WindowSpec, aggs: list,
+                      spec: WindowSpec, aggs: list, identity,
                       req_id: str = "__req_id__"):
     """Point-in-time long-window features for ``requests`` from the
     materialized bucket partials in ``state``, which must hold exactly
@@ -503,15 +659,17 @@ def serve_long_window(requests, history, state: PreAggTable,
       bucket, under a pushable global time bound;
     - when no request needs raw rows, the history join is not planned.
 
-    The driver decides which requests need raw rows: it collects the
-    batch's keys, order ms and buckets (a serving batch of thousands of
-    rows; one built from local data collects without a job) and looks
-    up each own bucket's ``__pa_max_ord__`` with
-    ``PreAggTable.bucket_watermarks`` — from the state's driver-resident
-    copy up to ``_RESIDENT_PAIRS``. The plan then joins the partials
-    (that same copy, broadcast) once per request for both the carry and
-    the raw-edge flag. The decision is logged on the ``openmldb_spark``
-    logger as ``raw edge: k of n requests``.
+    Within ``_RESIDENT_PAIRS`` (``PreAggTable.resident``) the driver
+    takes the request rows out through Arrow, gives each its carry and
+    raw-edge flag from the resident partials, and hands rows and carries
+    back as one local relation: without raw edges the result is one
+    projection over it. ``identity``, the expression that derived
+    ``req_id``, re-derives it there; Spark prunes it when unread.
+    Above the bound the driver collects the batch's keys, order ms and
+    buckets, looks up own-bucket watermarks (``bucket_watermarks``), and
+    the plan joins the merged partials once per request for the carry
+    and the flag. The decision is logged on the ``openmldb_spark``
+    logger as ``raw edge: k of n requests (driver|distributed)``.
 
     Frames: UNBOUNDED..CURRENT ROW, or bounded ROWS_RANGE [t-Δ, t].
     Returns ``requests`` with one column per aggregate appended."""
@@ -533,11 +691,28 @@ def serve_long_window(requests, history, state: PreAggTable,
         return reduce(and_, [F.col(f"{x}.{k}").eqNullSafe(F.col(f"{y}.{k}"))
                          for k in keys])
 
-    P = state.partials()
-    out, n_raw = requests, 0
-    if P is None:  # nothing stored: the request row alone
-        _log.info("raw edge: 0 requests (no stored rows)")
-    else:
+    res = state.resident()
+    P = None if res is not None else state.partials()
+    out, n_raw, gmin = requests, 0, None
+    if res is not None:
+        # ---- driver route: the carries ride on the request rows into
+        # one local relation, so nothing joins
+        rows = r.drop(req_id)
+        tbl = rows.toArrow()
+        car, raw = res.carry(tbl, bounded)
+        schema = T.StructType(list(rows.schema.fields))
+        for c in pcols:
+            tbl = tbl.append_column(f"__car_{c}", _to_arrow(*car[c], res.types[c]))
+            schema.add(f"__car_{c}", state._schema[c].dataType)
+        out = state.spark.createDataFrame(tbl.append_column("__raw_b__", pa.array(raw)),
+                                          schema.add("__raw_b__", T.BooleanType()))
+        if req_id in requests.columns:
+            out = out.withColumn(req_id, identity)
+        edge_b, valid = _to_np(tbl["__b0__" if bounded else "__b__"])
+        sel, n, route = valid if bounded else raw, tbl.num_rows, "driver"
+        n_raw = n if bounded else int(raw.sum())
+        gmin = int(edge_b[sel].min()) if sel.any() else None
+    elif P is not None:
         # partials are metadata-sized relative to history, but at
         # 10^12-turn scale keys × buckets can still exceed broadcast
         # limits — broadcast only under the recorded pair count
@@ -558,9 +733,7 @@ def serve_long_window(requests, history, state: PreAggTable,
                      if (w := wm.get(_hkey(q[:len(keys)] + (q["__b__"],)))) is not None
                      and w > q["__a__"]]
             n_raw, gmin = len(raw_b), min(raw_b, default=None)
-        if gmin is not None:
-            gmin *= W
-        _log.info("raw edge: %d of %d requests", n_raw, len(batch))
+        n, route = len(batch), "distributed"
 
         # ---- carry: partials of every bucket in frame that is read
         # whole, and the flag of an own bucket that is read raw. The
@@ -578,6 +751,12 @@ def serve_long_window(requests, history, state: PreAggTable,
                       for m, c in zip(merge_exprs(aggs, where=whole), pcols)],
                     F.max(F.coalesce((pb == rb) & ~whole, F.lit(False)))
                     .alias("__raw_b__")))
+    if res is None and P is None:  # nothing stored: the request row alone
+        _log.info("raw edge: 0 requests (no stored rows)")
+    else:
+        _log.info("raw edge: %d of %d requests (%s)", n_raw, n, route)
+    if gmin is not None:
+        gmin *= W
 
     # ---- raw rows of the edge buckets, globally time-pruned
     edge = None
@@ -615,8 +794,8 @@ def serve_long_window(requests, history, state: PreAggTable,
     for i, a in enumerate(aggs):
         base = a.func[:-6] if a.func.endswith("_where") else a.func
         own = F.col(a.col) if a.col else F.lit(1)
-        gate = F.col(a.cond) if a.cond else F.lit(True)
-        own = F.when(gate.eqNullSafe(F.lit(True)), own)
+        if a.cond:
+            own = F.when(F.col(a.cond), own)
         rt = _result_type(a, requests.schema[a.col].dataType if a.col
                           else T.LongType())
         cs, cc, cm = (part(f"__car___{x}{i}__") for x in "scm")

@@ -32,9 +32,10 @@ from __future__ import annotations
 
 import hashlib
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -74,6 +75,44 @@ _NOT_FUNCS = {
     "exists", "any", "some", "interval", "on", "where", "select", "from", "as",
 }
 _WINDOW_SPLIT_RE = re.compile(r"(?is)^\s*window_split(_by_key|_by_value)?\s*\((.*)\)\s*$")
+
+
+def request_identity(cols: list[str]) -> Column:
+    """``__req_id__`` of a request row over the main-table columns
+    ``cols``. Deployments that scan the main table in several subqueries
+    and join them back (fz_ddl test_myhug out0⋈out1⋈out2) must match each
+    request with ITS OWN pipeline outputs; the id rides through every
+    subquery and joins implicitly, and the long-window driver route
+    re-derives it with this same expression.
+
+    identity = (128-bit full-tuple hash, duplicate rank): the tuple hash
+    is deterministic per row content, and the rank (a window partitioned
+    by the full tuple, so hash-distributed — never a global sort on one
+    task, VERDICT r5 'what's wrong' #1) only separates exact duplicate
+    rows, each of which must still match its own outputs 1:1. Spark's
+    hashes skip NULL inputs, so (NULL,'a') and ('a',NULL) would hash
+    alike: per-column NULL flags make NULLs positional."""
+    from pyspark.sql import Window
+
+    c = [F.col(x) for x in cols]
+    hashed = c + [x.isNull() for x in c]
+    dup_rn = F.row_number().over(Window.partitionBy(*c).orderBy(F.lit(1)))
+    return F.concat_ws("#", F.xxhash64(*hashed).cast("string"),
+                       F.xxhash64(*(hashed + [F.lit(1)])).cast("string"),
+                       dup_rn.cast("string"))
+
+
+@contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Describe the Spark jobs run inside the block as ``text``, then
+    restore the caller's description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 @dataclass
@@ -1874,33 +1913,9 @@ class SqlEngine:
             raise ValueError(
                 f"request rows lack main-table columns {missing} "
                 f"(deployment {name!r} over table {dep['main']!r})")
-        from pyspark.sql import Window as _W
-
-        # every request row gets a durable identity: deployments that
-        # scan the main table in several subqueries and join them back
-        # (fz_ddl test_myhug out0⋈out1⋈out2) must match each request
-        # with ITS OWN pipeline outputs, never another request's —
-        # __req_id__ rides through every subquery and joins implicitly
-        # identity = (128-bit full-tuple hash, duplicate rank): scale-
-        # safe — the previous global row_number().over(orderBy(*cols))
-        # sorted the whole request batch on ONE task (every column the
-        # sort key; VERDICT r5 'what's wrong' #1). The tuple hash is
-        # deterministic per row content; the rank (a window partitioned
-        # by the full tuple, so hash-distributed) only separates exact
-        # duplicate request rows, each of which must still match ITS OWN
-        # pipeline outputs 1:1 in subquery join-backs.
-        # Spark's hashes skip NULL inputs, so (NULL,'a') and ('a',NULL)
-        # would hash alike: per-column NULL flags make NULLs positional
-        _cols = [F.col(c) for c in history.columns]
-        _hashed = _cols + [c.isNull() for c in _cols]
-        _dup_rn = F.row_number().over(_W.partitionBy(*_cols).orderBy(F.lit(1)))
+        # every request row gets a durable identity (``request_identity``)
         reqs = requests.select(*history.columns).withColumn(
-            "__req_id__",
-            F.concat_ws(
-                "#",
-                F.xxhash64(*_hashed).cast("string"),
-                F.xxhash64(*(_hashed + [F.lit(1)])).cast("string"),
-                _dup_rn.cast("string")))
+            "__req_id__", request_identity(history.columns))
         # EVERY scan of the main table anchors at the request rows —
         # real FZ deployments read the main table in several subqueries
         # and each must see the request batch (fz_ddl test_myhug id=1:
@@ -2063,11 +2078,12 @@ class SqlEngine:
         Every other change rebuilds it from ``hist``: DELETE, LOAD,
         ``register``, a TTL'd table, a re-DEPLOY, a table replaced
         outside the engine. Each choice is logged on the
-        ``openmldb_spark`` logger. Each write (ingest, compaction,
-        rebuild) retires the state's driver-resident copy of its merged
-        partials; while the state is within the residency bound the next
-        request collects it once, and requests until the next write read
-        that copy instead of the generations."""
+        ``openmldb_spark`` logger. While the state is within the
+        residency bound its merged partials live on the driver: an
+        ingest folds only its own generation into them and a compaction
+        keeps them, so no request re-reads the generations. The writes
+        run as Spark jobs described ``omldb:lw:ingest`` (catch-up and
+        compaction) or ``omldb:lw:rebuild``."""
         import logging
         import shutil
         import tempfile
@@ -2102,17 +2118,19 @@ class SqlEngine:
                                None, tiebreak=spec.tiebreak)
             t = PreAggTable.create(self.spark, d + "/state", plain, list(aggs),
                                    bucket_ms=bucket_ms)
-            n = t.ingest(hist)
+            with _job_description(self.spark, "omldb:lw:rebuild"):
+                n = t.ingest(hist)
             ent = states[key] = {"t": t, "dir": d, "sig": sig, "main": ctx["main"],
                                  "pending": [], "stale": None}
             log.info("%s: rebuild: %s (%d rows)", label, why, n)
         elif ent["pending"]:
             delta = reduce(DataFrame.unionByName, ent["pending"])
             ent["pending"] = []
-            n = ent["t"].ingest(shape(delta))
+            with _job_description(self.spark, "omldb:lw:ingest"):
+                n = ent["t"].ingest(shape(delta))
+                if len(ent["t"].meta["generations"]) > self._LW_MAX_GENERATIONS:
+                    ent["t"].compact()
             log.info("%s: ingest delta (%d rows)", label, n)
-            if len(ent["t"].meta["generations"]) > self._LW_MAX_GENERATIONS:
-                ent["t"].compact()
         ent.update(seen=ctx["history"], hist=hist)
         return ent["t"]
 
@@ -3203,7 +3221,11 @@ class SqlEngine:
                             req_ctx, wname, spec, aggs, hist_lw,
                             req_ctx["lw"][wname.lower()],
                             _shape if plain else None)
-                        df = serve_long_window(df, hist_lw, state, spec, aggs)
+                        # the window's FROM is the request batch itself,
+                        # so its main-table columns are the request's own
+                        df = serve_long_window(
+                            df, hist_lw, state, spec, aggs,
+                            identity=request_identity(req_ctx["history"].columns))
                         continue
                 if req_active:
                     # a window over the request primary draws its

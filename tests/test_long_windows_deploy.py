@@ -249,13 +249,13 @@ def test_long_windows_ingest_serve_shape(engines, spark, caplog):
     reqs = _reqs(spark, [("c1", 7 * HOUR, 1.0, "user"), ("c2", 21 * HOUR, 2.0, "user")])
     assert _collect(opt.request("d", reqs)) == _collect(base.request("d", reqs))
     assert _messages(caplog) == ["long_windows d/w: ingest delta (2 rows)",
-                                 "raw edge: 0 of 2 requests"]
+                                 "raw edge: 0 of 2 requests (driver)"]
 
     # a request inside its bucket's stored rows reads that bucket raw
     caplog.clear()
     mid = _reqs(spark, [("c1", 3 * HOUR + 1, 1.0, "user"), ("c2", 21 * HOUR, 2.0, "user")])
     assert _collect(opt.request("d", mid)) == _collect(base.request("d", mid))
-    assert _messages(caplog) == ["raw edge: 1 of 2 requests"]
+    assert _messages(caplog) == ["raw edge: 1 of 2 requests (driver)"]
 
 
 def test_long_windows_pending_and_generations_stay_bounded(engines, spark, caplog):
@@ -334,6 +334,10 @@ def _route_messages(caplog):
     return [m for m in _messages(caplog) if m.startswith("pre-agg ")]
 
 
+# the request route each state route serves from, as the raw-edge log names it
+_EDGE_ROUTE = {"resident": "driver", "distributed": "distributed"}
+
+
 @pytest.fixture(params=["resident", "distributed"])
 def route(request, monkeypatch):
     """Serve from the driver-resident partials, or — with the residency
@@ -361,7 +365,7 @@ def test_long_windows_null_key_newer_own_bucket(engines, spark, caplog, route):
     got = _collect_nullable(opt.request("d", reqs))
     assert got == _collect_nullable(base.request("d", reqs))
     assert {r[0]: r[2] for r in got}[None] == 6.0  # 5 + itself, not 7
-    assert "raw edge: 1 of 2 requests" in _messages(caplog)
+    assert f"raw edge: 1 of 2 requests ({_EDGE_ROUTE[route]})" in _messages(caplog)
     assert [m.split(": ", 1)[1].split(" (")[0] for m in _route_messages(caplog)] \
         == [f"{route} reads"]
 
@@ -397,11 +401,11 @@ def test_long_windows_request_at_bucket_watermark(engines, spark, caplog, route)
     reqs = _reqs(spark, [("c1", 19 * 17 * 60_000, 1.0, "user"),
                          ("c2", 10 * 40 * 60_000, 2.0, "user")])
     assert _collect(opt.request("d", reqs)) == _collect(base.request("d", reqs))
-    assert "raw edge: 0 of 2 requests" in _messages(caplog)
+    assert f"raw edge: 0 of 2 requests ({_EDGE_ROUTE[route]})" in _messages(caplog)
     caplog.clear()
     behind = _reqs(spark, [("c2", 10 * 40 * 60_000 - 1, 2.0, "user")])
     assert _collect(opt.request("d", behind)) == _collect(base.request("d", behind))
-    assert _messages(caplog) == ["raw edge: 1 of 1 requests"]
+    assert _messages(caplog) == [f"raw edge: 1 of 1 requests ({_EDGE_ROUTE[route]})"]
 
 
 def test_long_windows_bounded_frame_parity(engines, spark, caplog, route):
@@ -418,7 +422,7 @@ def test_long_windows_bounded_frame_parity(engines, spark, caplog, route):
                          ("c2", 7 * HOUR, 60.0, "user"),
                          ("c3", 7 * HOUR, 70.0, "user")])
     assert _collect_nullable(opt.request("d", reqs)) == _collect_nullable(base.request("d", reqs))
-    assert "raw edge: 4 of 4 requests" in _messages(caplog)
+    assert f"raw edge: 4 of 4 requests ({_EDGE_ROUTE[route]})" in _messages(caplog)
 
 
 def test_long_windows_route_logged_when_it_changes(engines, spark, caplog, monkeypatch):
@@ -448,3 +452,87 @@ def test_long_windows_route_logged_when_it_changes(engines, spark, caplog, monke
     _insert(engines, [("c1", 29 * HOUR, 4.0, "user")])
     assert _collect(opt.request("d", req)) == _collect(base.request("d", req))
     assert _route_messages(caplog) == []
+
+
+# ---- the driver route: request identity, plan shape, gates and job labels
+
+_SQL_JOINED = (
+    "SELECT a.conv_id, a.ts, a.sv, a.mx, b.v2 FROM "
+    "(SELECT conv_id, ts, sum(v) OVER w AS sv, max(v) OVER w AS mx FROM conv_hist "
+    "WINDOW w AS (PARTITION BY conv_id ORDER BY ts "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS a "
+    "LAST JOIN (SELECT conv_id AS c2, v * 2 AS v2 FROM conv_hist) AS b "
+    "ON a.conv_id = b.c2")
+
+
+def test_long_windows_request_id_joins_subqueries(engines, spark, route):
+    """A long-window SELECT joined with a second request-derived
+    subquery matches each request with its own row of that subquery,
+    duplicate request rows included: the served rows carry the same
+    ``__req_id__`` the other subquery does."""
+    opt, base = engines
+    opt.sql(f'DEPLOY d OPTIONS(long_windows="w:1h") {_SQL_JOINED}')
+    base.sql(f"DEPLOY d {_SQL_JOINED}")
+    _insert(engines, _hist_rows(0, 20))
+    reqs = _reqs(spark, [("c1", 9 * HOUR, 5.0, "user"), ("c1", 9 * HOUR, 5.0, "user"),
+                         ("c1", 9 * HOUR, 7.0, "user"), ("c2", 3 * HOUR, 1.0, "user")])
+    got = _collect(opt.request("d", reqs))
+    assert got == _collect(base.request("d", reqs))
+    assert len(got) == 4
+    assert sorted(r[-1] for r in got) == [2.0, 10.0, 10.0, 14.0]
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_long_windows_driver_route_plans_one_projection(engines, spark):
+    """A request with no raw edge on the driver route takes its rows out
+    through Arrow (one job) and is then one projection over a local
+    relation: no exchange, window, join or aggregation, and collecting
+    it runs no job. No aggregate builds a trivially true gate."""
+    opt, _ = engines
+    opt.sql(f'DEPLOY d OPTIONS(long_windows="w:1h") {_SQL}')
+    _insert(engines, _hist_rows(0, 20))
+    reqs = _reqs(spark, [("c1", 30 * HOUR, 1.0, "user"), ("c2", 30 * HOUR, 2.0, "user")])
+    opt.request("d", reqs).collect()  # builds the state
+    df, build_jobs = _jobs(spark, "lw-build", lambda: opt.request("d", reqs))
+    rows, collect_jobs = _jobs(spark, "lw-collect", df.collect)
+    assert (build_jobs, collect_jobs, len(rows)) == (1, 0, 2)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "Window", "Join", "Aggregate"):
+        assert node not in plan, plan
+    assert "(true <=> true)" not in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_long_windows_writes_are_labelled(engines, spark, monkeypatch):
+    """The state's rebuild and catch-up writes run under their own job
+    descriptions, and the caller's description comes back after them."""
+    from openmldb_spark.operators.preagg import PreAggTable
+
+    opt, _ = engines
+    sc, seen, ingest = spark.sparkContext, [], PreAggTable.ingest
+
+    def spy(self, df):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return ingest(self, df)
+
+    monkeypatch.setattr(PreAggTable, "ingest", spy)
+    opt.sql(f'DEPLOY d OPTIONS(long_windows="w:1h") {_SQL}')
+    _insert(engines, _hist_rows(0, 10))
+    req = _reqs(spark, [("c1", 30 * HOUR, 1.0, "user")])
+    sc.setJobDescription("caller")
+    try:
+        opt.request("d", req).collect()
+        _insert(engines, _hist_rows(10, 12))
+        opt.request("d", req).collect()
+        assert seen == ["omldb:lw:rebuild", "omldb:lw:ingest"]
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)

@@ -154,7 +154,9 @@ def _partials_rows(df):
 
 def test_partials_follow_every_write(spark, tmp_path):
     """The driver-resident partials equal a fresh merge of the written
-    generations after every write, and stay one copy between writes."""
+    generations after every write, stay one copy between writes, and
+    ``partials()`` starts no Spark job after a write: the write folded
+    its own generation in."""
     c1, c2, c3 = _dataset()
     t = PreAggTable.create(spark, str(tmp_path / "state"), SPEC, AGGS, bucket_ms=HOUR)
 
@@ -163,13 +165,16 @@ def test_partials_follow_every_write(spark, tmp_path):
         return (spark.read.parquet(*dirs).groupBy("k", "__lw_bucket__")
                 .agg(*merge_exprs(AGGS), F.max("__pa_max_ord__").alias("__pa_max_ord__")))
 
-    seen = []
+    sc, seen = spark.sparkContext, []
     for write in (lambda: t.ingest(_mkdf(spark, c1)),
                   lambda: t.append(_mkdf(spark, c2)),
                   lambda: t.ingest(_mkdf(spark, c3)),
                   t.compact):
         write()
+        sc.setJobGroup("partials", "partials() after a write")
         P = t.partials()
+        sc.setJobGroup("other", "")
+        assert sc.statusTracker().getJobIdsForGroup("partials") == []
         assert _partials_rows(P) == _partials_rows(fresh())
         assert t.partials() is P  # no write since: the same copy
         assert all(P is not q for q in seen)
@@ -179,8 +184,7 @@ def test_partials_follow_every_write(spark, tmp_path):
 
 def test_bucket_watermarks_answer_for_the_copy_given(spark, tmp_path):
     """A watermark lookup describes the partials it is handed, also when
-    a write has replaced the resident copy since they were read, and
-    leaves the new copy's own index to be built from that copy."""
+    a write has replaced the resident partials since they were read."""
     c1, c2, c3 = _dataset()
     t = PreAggTable.create(spark, str(tmp_path / "state"), SPEC, AGGS, bucket_ms=HOUR)
     t.ingest(_mkdf(spark, c1))
@@ -198,7 +202,6 @@ def test_bucket_watermarks_answer_for_the_copy_given(spark, tmp_path):
     assert w0 == index(P0)
     assert w1 == index(P1)
     assert w0 != w1
-    assert t.bucket_watermarks(P1, wanted, "__lw_bucket__") is w1
 
 
 def test_append_tail_replay_is_idempotent_for_null_keys(spark, tmp_path):

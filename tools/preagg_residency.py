@@ -2,7 +2,10 @@
 
 The state holds one stored row per (key, hour), so it has KEYS × HOURS
 (key, bucket) pairs. The route is forced by setting the residency bound
-(``operators/preagg.py:_RESIDENT_PAIRS``) above or below every state.
+(``operators/preagg.py:_RESIDENT_PAIRS``) above or below every state:
+``resident`` keeps the merged partials on the driver (requests are
+answered there, writes fold their own generation in), ``distributed``
+merges the generations in Spark on every read.
 
 - ``serve``: a long-window DEPLOY (sum/count/max, UNBOUNDED frame) over
   that table; each cycle INSERTs 50 rows, then runs two 500-row
